@@ -5,7 +5,7 @@ counters repeat exactly.
 usage: python3 perfbench/check_determinism.py [--workload NAME] [--seed N] [--seconds S]
 
 Makes three traced runs: seed N twice and seed N+1 once. Passes when the
-two seed-N runs drew identical query orders for every pass and every run
+two seed-N runs used one and the same query order in every pass, every run
 reports identical counts (jobs, stages, tasks, plan exchanges, scans and
 aggregates, cold and warm), while seed N+1 drew a different order.
 """
@@ -45,6 +45,8 @@ def main():
     o3, c3, r3 = traced_run(a.workload, a.seed + 1, a.seconds)
     n = min(len(o1), len(o2))
     checks = {
+        "one order in every pass of a run": all(len({tuple(x) for x in o}) == 1
+                                                for o in (o1, o2, o3)),
         "same seed, same order in every pass": o1[:n] == o2[:n],
         "other seed, other order": o1[0] != o3[0],
         "counts repeat within each run": all(all(r.values()) for r in (r1, r2, r3)),

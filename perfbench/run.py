@@ -16,6 +16,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -101,6 +102,26 @@ def build(all_queries):
         return out, json.load(fh)
 
 
+def cpu_seconds():
+    """(busy, steal) CPU seconds summed over all CPUs, from /proc/stat
+    (USER_HZ = 100 ticks a second), as Harness.cpuSeconds reads them."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:]]
+    return (f[0] + f[1] + f[2] + f[5] + f[6]) / 100, f[7] / 100
+
+
+def host_time(x):
+    """Wall time of an interval with the host's CPU steal taken out.
+
+    On a shared host the hypervisor withholds the guest's CPUs in bursts
+    (steal), and every runnable thread waits for it. The interval's wall
+    time is scaled by the share of the guest's demanded CPU time it was
+    given, busy / (busy + steal), both measured over the interval. With no
+    steal this is the wall time."""
+    b, s = x["busy_s"], x["steal_s"]
+    return x["wall_s"] * b / (b + s) if b + s > 0 else x["wall_s"]
+
+
 def tmp_graft():
     """The program writes some sinks under a hard-coded /tmp/graft*."""
     return set(glob.glob("/tmp/graft*"))
@@ -123,14 +144,19 @@ def run_jvm(classes, workload, queries, tables, seed, seconds, trace, run_dir, c
            f"workload={workload}", "queries=" + ",".join(queries),
            "tables=" + ",".join(tables), f"seed={seed}",
            f"seconds={seconds}", f"trace={trace}", f"cores={cores}"]
+    cmd.append("cpuAtStart=%r,%r" % cpu_seconds())
     log = os.path.join(run_dir, "jvm.log")
     with open(log, "w") as fh:
         p = subprocess.Popen(cmd, cwd=run_dir, stdout=fh, stderr=subprocess.STDOUT)
         try:
             p.wait(timeout=JVM_TIMEOUT_S)
         except subprocess.TimeoutExpired:
-            p.kill()
-            p.wait()
+            pass
+        finally:
+            # also on SIGTERM or Ctrl-C: no JVM outlives the run
+            if p.poll() is None:
+                p.kill()
+                p.wait()
     if p.returncode != 0 or not os.path.exists(out):
         with open(log) as fh:
             tail = fh.read()[-3000:]
@@ -154,16 +180,18 @@ def by_kind(res, kind):
         [e for e in res["execs"] if e["pass"] in idx]
 
 
-def end_to_end(res, failed, attempted):
+def end_to_end(res, failed, attempted, t=host_time):
+    """The end-to-end metrics; `t` gives an interval's time (steal taken
+    out by default; the raw wall time for the record in the details)."""
     cold_p, cold_e = by_kind(res, "cold")
     warm_p, warm_e = by_kind(res, "warm")
-    warm_t = [e["wall_s"] for e in warm_e]
+    warm_t = [t(e) for e in warm_e]
     return {
-        "setup_s": (med([s["seconds"] for s in res["setups"]]), "s"),
-        "cold_qps": (sum(e["ok"] for e in cold_e) / sum(p["wall_s"] for p in cold_p), "1/s"),
-        "cold_p50_s": (med([e["wall_s"] for e in cold_e]), "s"),
+        "setup_s": (med([t(s) for s in res["setups"]]), "s"),
+        "cold_qps": (sum(e["ok"] for e in cold_e) / sum(t(p) for p in cold_p), "1/s"),
+        "cold_p50_s": (med([t(e) for e in cold_e]), "s"),
         # median pass: one pass slowed by the host does not move it
-        "warm_qps": (med([sum(e["ok"] for e in warm_e if e["pass"] == p["index"]) / p["wall_s"]
+        "warm_qps": (med([sum(e["ok"] for e in warm_e if e["pass"] == p["index"]) / t(p)
                           for p in warm_p]), "1/s"),
         "warm_p50_s": (med(warm_t), "s"),
         "warm_p90_s": (pctl(warm_t, 90), "s"),
@@ -223,14 +251,15 @@ def per_layer(res, cores, modules):
             v[mod + ".s"] += e["wall_s"]
             v[mod + ".jobs"] += len(js)
         v["core_busy_ratio"] = v["task_run_s"] / (p["wall_s"] * cores)
-        for k in ("persisted_rdds", "storage_mb", "written_mb"):
+        for k in ("persisted_rdds", "storage_mb", "written_mb", "codegen_compiles", "jit_s"):
             v[k] = p[k]
         return v
 
     names = {"construct_s": "queries.construct_s", "construct_jobs": "queries.construct_jobs",
              "analysis_s": "catalyst.analysis_s", "optimization_s": "catalyst.optimization_s",
              "planning_s": "catalyst.planning_s", "persisted_rdds": "store.persisted_rdds",
-             "storage_mb": "store.storage_mb", "written_mb": "store.written_mb"}
+             "storage_mb": "store.storage_mb", "written_mb": "store.written_mb",
+             "codegen_compiles": "codegen.compiles", "jit_s": "jvm.jit_s"}
     for k in ("exchanges", "scans", "aggregates", "broadcast_joins"):
         names[k] = "plan." + k
     for k in ("execute_s", "jobs", "stages", "tasks", "task_run_s", "task_cpu_s", "gc_s",
@@ -239,7 +268,8 @@ def per_layer(res, cores, modules):
         names[k] = "exec." + k
     units = {"jobs": "count", "stages": "count", "tasks": "count", "construct_jobs": "count",
              "exchanges": "count", "scans": "count", "aggregates": "count",
-             "broadcast_joins": "count", "persisted_rdds": "count", "core_busy_ratio": "ratio"}
+             "broadcast_joins": "count", "persisted_rdds": "count", "core_busy_ratio": "ratio",
+             "codegen_compiles": "count"}
     repeat = {}
     for mode in ("cold", "warm"):
         ps, es = by_kind(res, mode)
@@ -257,8 +287,8 @@ def per_layer(res, cores, modules):
                                            "count")
     m["Tables.load_s"] = (med([s["load_s"] for s in res["setups"]]), "s")
     m["Tables.cached_mb"] = (med([s["cached_mb"] for s in res["setups"]]), "MB")
-    traced = med([p["wall_s"] for p in res["passes"] if p["kind"] == "warm"])
-    untraced = med([p["wall_s"] for p in res["passes"] if p["kind"] == "warm_untraced"])
+    traced = med([host_time(p) for p in res["passes"] if p["kind"] == "warm"])
+    untraced = med([host_time(p) for p in res["passes"] if p["kind"] == "warm_untraced"])
     m["trace.overhead_ratio"] = (traced / untraced - 1.0, "ratio")
     return m, repeat
 
@@ -266,17 +296,23 @@ def per_layer(res, cores, modules):
 def warm_evidence(res):
     """Whether passes had levelled off before they were timed: the second
     cold pass against the first, and the first timed warm pass against the
-    median of the later ones. In probe runs the first warm pass after a
-    cold pass ran 16-24% slower than the later ones, so one untimed warm-up
-    pass follows the second cold pass."""
-    cold = [p["wall_s"] for p in res["passes"] if p["kind"] == "cold"]
-    warm = [p["wall_s"] for p in res["passes"] if p["kind"] == "warm"]
-    return {"pass_walls": [(p["kind"], round(p["wall_s"], 4)) for p in res["passes"]],
-            "warmup_passes": 1, "cold2_vs_cold1": cold[1] / cold[0],
+    median of the later ones, in steal-corrected time. With one untimed
+    warm-up pass the first timed warm pass ran 10-25% slower than the later
+    ones. With two or four, pass times still fell by about 1-2% a pass for
+    ten passes and more, and four did not narrow the spread between runs,
+    so two untimed warm-up passes follow the second cold pass."""
+    cold = [host_time(p) for p in res["passes"] if p["kind"] == "cold"]
+    warm = [host_time(p) for p in res["passes"] if p["kind"] == "warm"]
+    return {"pass_times": [(p["kind"], round(host_time(p), 4), round(p["wall_s"], 4),
+                            p["codegen_compiles"]) for p in res["passes"]],
+            "warmup_passes": sum(p["kind"] == "warmup" for p in res["passes"]),
+            "cold2_vs_cold1": cold[1] / cold[0],
             "warm1_vs_later_median": warm[0] / med(warm[1:])}
 
 
 def main():
+    # SIGTERM unwinds like Ctrl-C, so the JVM is stopped and /tmp cleaned
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
@@ -327,6 +363,8 @@ def main():
                "tmp_graft_left_mb": left_mb, "tmp_graft_entries_removed": len(left),
                "first_pass_order": res["passes"][0]["order"],
                "samples": {k: len(by_kind(res, k)[1]) for k in ("cold", "warm")},
+               "steal_share": sum(p["steal_s"] for p in res["passes"]) /
+               sum(p["busy_s"] + p["steal_s"] for p in res["passes"]),
                **warm_evidence(res)}
     if a.trace:
         modules = sorted({m for w in workloads.values() for m in w["modules"]})
@@ -336,6 +374,8 @@ def main():
             json.dump(res["spans"], fh)
     else:
         metrics = end_to_end(res, failed, attempted)
+        details["wall_clock"] = {k: v for k, (v, u) in
+                                 end_to_end(res, failed, attempted, lambda x: x["wall_s"]).items()}
     with open(os.path.join(BUILD, "out", tag + ".json"), "w") as fh:
         json.dump({"details": details, "metrics": metrics, "raw": res}, fh)
     shutil.rmtree(run_dir, ignore_errors=True)

@@ -9,6 +9,7 @@ import scala.util.Random
 
 import graft.Tables
 import graft.queries.AllQueries
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
@@ -26,11 +27,13 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   *   2. sessions 2 and 3, each a fresh one (new SparkContext, so empty
   *      memos, CacheManager and block manager; tables loaded once by
   *      set-up), each with one timed cold pass;
-  *   3. in session 3, one untimed warm-up pass, then timed warm passes
+  *   3. in session 3, two untimed warm-up passes, then timed warm passes
   *      until `seconds` have elapsed (whole passes, at least two).
-  * Every pass runs the workload's queries in an order drawn from `seed`,
-  * and every timed execution records its row count, which the caller
-  * compares with the oracle-checked rows.
+  * Every pass runs the workload's queries in the one order drawn from
+  * `seed`, and every timed execution records its row count, which the
+  * caller compares with the oracle-checked rows. Every set-up, pass and
+  * query records the guest's busy and steal CPU seconds beside its wall
+  * time, so the caller can take host steal out.
   *
   * With `trace=1` a listener attributes Spark jobs to queries through
   * `setJobGroup`, spans are kept in memory and written with the result,
@@ -38,6 +41,16 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   * is measured in the same run. Untraced runs register no listener.
   */
 object Harness {
+  /** Untimed warm passes before the timed ones; see `warm_evidence` in
+    * run.py for the evidence that the timed passes have levelled off. */
+  val WarmupPasses = 2
+
+  /** Spark's compiled-class cache. At its default of 100 entries the
+    * workloads' generated classes (about 110 a pass on isolate_typing)
+    * overflow it, and which classes are evicted, and so the pass time,
+    * depends on the query order: warm passes compiled 29-73 classes and
+    * took 2.0-2.9 s by seed. See README "Codegen cache". */
+  val CodegenCacheEntries = 1000
   private val epochNs = System.nanoTime()
   private val epochMs = System.currentTimeMillis()
   private def now(): Double = (System.nanoTime() - epochNs) / 1e9
@@ -45,14 +58,16 @@ object Harness {
 
   final case class Conf(corpus: String, runDir: String, out: String,
       workload: String, queries: Seq[String], tables: Seq[String], seed: Long,
-      seconds: Double, trace: Boolean, cores: Int)
+      seconds: Double, trace: Boolean, cores: Int, cpuAtStart: (Double, Double))
 
   def main(args: Array[String]): Unit = {
     val kv = args.map { a => val i = a.indexOf('='); a.take(i) -> a.drop(i + 1) }.toMap
     val conf = Conf(kv("corpus"), kv("runDir"), kv("out"), kv("workload"),
       kv("queries").split(",").toSeq, kv("tables").split(",").toSeq, kv("seed").toLong,
       kv("seconds").toDouble,
-      kv("trace") == "1", kv("cores").toInt)
+      kv("trace") == "1", kv("cores").toInt, {
+        val Array(b, x) = kv("cpuAtStart").split(",").map(_.toDouble); (b, x)
+      })
     new Harness(conf).run()
   }
 
@@ -117,10 +132,16 @@ object Harness {
     line.map(_.split(":")(1).trim.toLong).getOrElse(0L)
   }
 
-  /** CPU time the hypervisor gave to other guests, in seconds, summed
-    * over all CPUs (the `steal` column of /proc/stat). */
-  def stealSeconds(): Double =
-    Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")(8).toDouble / 100
+  /** (busy, steal) CPU seconds summed over all CPUs from /proc/stat:
+    * busy = user + nice + system + irq + softirq; steal is time the
+    * hypervisor gave to other guests while this one had work to run. */
+  def cpuSeconds(): (Double, Double) = {
+    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")
+    (Seq(1, 2, 3, 6, 7).map(f(_).toDouble).sum / 100, f(8).toDouble / 100)
+  }
+
+  /** Time the JIT compilers have spent compiling, in seconds. */
+  def jitSeconds(): Double = ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
 
   /** Collection time of every JVM garbage collector, in seconds. */
   def gcSeconds(): Double = {
@@ -152,7 +173,10 @@ final class Harness(c: Harness.Conf) {
   private val moduleOf: Map[String, String] = AllQueries.modules.flatMap { m =>
     m.qs.map(_.name -> m.getClass.getSimpleName.stripSuffix("$"))
   }.toMap
-  private val rng = new Random(c.seed)
+  /** The seed's query order, the same in every pass: per-pass orders
+    * change which generated classes Spark's codegen cache evicts, and
+    * with that the pass time, from pass to pass. */
+  private val order: Seq[String] = new Random(c.seed).shuffle(c.queries)
   private val setups = mutable.ArrayBuffer.empty[Map[String, Any]]
   private val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
   private val execs = mutable.ArrayBuffer.empty[Map[String, Any]]
@@ -164,6 +188,7 @@ final class Harness(c: Harness.Conf) {
   private def newSession(fromProcessStart: Boolean): Unit = {
     val t0 = if (fromProcessStart)
       msToRun(ManagementFactory.getRuntimeMXBean.getStartTime) else now()
+    val (b0, x0) = if (fromProcessStart) c.cpuAtStart else cpuSeconds()
     if (spark != null) spark.stop()
     val b = SparkSession.builder()
       .master(s"local[${c.cores}]")
@@ -176,6 +201,7 @@ final class Harness(c: Harness.Conf) {
       .config("spark.local.dir", s"${c.runDir}/local")
       .config("spark.sql.warehouse.dir", s"${c.runDir}/warehouse")
       .config("spark.graft.checkpointDir", s"${c.runDir}/checkpoint")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.setCheckpointDir(s"${c.runDir}/checkpoint")
@@ -186,9 +212,10 @@ final class Harness(c: Harness.Conf) {
     val ready = now()
     c.tables.foreach(t => Tables.load(spark, c.corpus, t).count())
     val t1 = now()
+    val (b1, x1) = cpuSeconds()
     setups += Map("index" -> setups.size, "from_process_start" -> fromProcessStart,
-      "seconds" -> (t1 - t0), "session_s" -> (ready - t0), "load_s" -> (t1 - ready),
-      "cached_mb" -> storageMb())
+      "wall_s" -> (t1 - t0), "busy_s" -> (b1 - b0), "steal_s" -> (x1 - x0),
+      "session_s" -> (ready - t0), "load_s" -> (t1 - ready), "cached_mb" -> storageMb())
   }
 
   /** Corpus tables the session holds in its table cache. */
@@ -204,14 +231,15 @@ final class Harness(c: Harness.Conf) {
     * compare instead of counting them. */
   private def pass(kind: String, traced: Boolean, check: Option[String] = None): Unit = {
     val idx = passes.size
-    val order = rng.shuffle(c.queries)
     val sc = spark.sparkContext
     val w0 = writtenBytes()
-    val (st0, gc0) = (stealSeconds(), gcSeconds())
+    val ((bz0, st0), gc0, jit0) = (cpuSeconds(), gcSeconds(), jitSeconds())
+    val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = now()
     order.foreach { q =>
       val id = s"${c.workload}/$idx/$q"
       if (traced) sc.setJobGroup(id, id, interruptOnCancel = false)
+      val (b0, x0) = cpuSeconds()
       val s0 = now()
       var s1, s2 = Double.NaN
       var rec = Map[String, Any]("pass" -> idx, "query" -> q)
@@ -238,8 +266,10 @@ final class Harness(c: Harness.Conf) {
           rec += "error" -> e.getClass.getName
       }
       val s3 = now()
+      val (b1, x1) = cpuSeconds()
       if (traced) sc.clearJobGroup()
       execs += rec ++ Map("ok" -> !rec.contains("error"), "start" -> s0,
+        "busy_s" -> (b1 - b0), "steal_s" -> (x1 - x0),
         "construct_s" -> (s1 - s0), "plan_s" -> (s2 - s1), "execute_s" -> (s3 - s2),
         "wall_s" -> (s3 - s0))
       if (traced) {
@@ -251,10 +281,13 @@ final class Harness(c: Harness.Conf) {
         }
       }
     }
+    val (bz1, st1) = cpuSeconds()
     passes += Map("index" -> idx, "kind" -> kind, "session" -> (setups.size - 1),
       "traced" -> traced, "order" -> order, "start" -> t0, "wall_s" -> (now() - t0),
       "written_mb" -> (writtenBytes() - w0) / 1048576.0,
-      "steal_s" -> (stealSeconds() - st0), "jvm_gc_s" -> (gcSeconds() - gc0),
+      "busy_s" -> (bz1 - bz0), "steal_s" -> (st1 - st0),
+      "jvm_gc_s" -> (gcSeconds() - gc0), "jit_s" -> (jitSeconds() - jit0),
+      "codegen_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0),
       "persisted_rdds" -> sc.getPersistentRDDs.size, "storage_mb" -> storageMb())
   }
 
@@ -290,7 +323,7 @@ final class Harness(c: Harness.Conf) {
       newSession(fromProcessStart = false)
       pass("cold", c.trace)
     }
-    pass("warmup", traced = false)
+    (1 to WarmupPasses).foreach(_ => pass("warmup", traced = false))
     // whole passes keep the query mix of every run the same
     val t0 = now()
     var n = 0
