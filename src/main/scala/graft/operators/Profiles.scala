@@ -25,23 +25,16 @@ object Profiles {
     * the reference persists `mv_scheme_<id>` once and every query reads it
     * (sql/seqdef.sql:1155-1253); the Spark equivalent is a cached DataFrame
     * shared by every profile/cluster query of the session instead of each
-    * rebuilding the same two-shuffle aggregation.
+    * rebuilding the same two-shuffle aggregation. One build per
+    * (session, key).
     */
-  private val warehouseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Cached variant of `warehouse` — one build per (session, key). */
   def cachedWarehouse(
       key: String,
       fact: DataFrame,
       entity: String,
       locus: String,
       allele: Column,
-      nLoci: Int): DataFrame = {
-    // evict stopped sessions' entries (they pin the session + its cached
-    // blocks); sessionKey is reuse-proof across session churn
-    warehouseCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
+      nLoci: Int): DataFrame =
     // range-partitioned + sorted by the entity key before caching: the
     // columnar cache keeps min/max stats per batch, so keyed readers
     // (j7's id slice, batch lookups, pagination) decompress ONE batch
@@ -49,16 +42,11 @@ object Profiles {
     // key range over all partitions and defeats batch pruning. Same move
     // as clustering a materialized view on its primary key; one extra
     // exchange at build time, once per session.
-    warehouseCache.computeIfAbsent(
-      graft.Tables.sessionKey(fact.sparkSession) + "|" + key,
-      _ => warehouse(fact, entity, locus, allele, nLoci)
+    graft.SessionMemo(fact.sparkSession, "profiles.warehouse", key)(
+      warehouse(fact, entity, locus, allele, nLoci)
         .repartitionByRange(col(entity))
         .sortWithinPartitions(col(entity))
         .cache())
-  }
-
-  private val stDimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** The (profile_md5 → st) numbering dimension over a warehouse —
     * memoized BESIDE the warehouse it derives from: ST numbering is a
@@ -69,17 +57,12 @@ object Profiles {
     * output (profile_md5, first_iso, st).
     */
   def cachedStDim(key: String, warehouse: DataFrame,
-      entity: String): DataFrame = {
-    stDimCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    stDimCache.computeIfAbsent(
-      graft.Tables.sessionKey(warehouse.sparkSession) + "|" + key,
-      _ => {
-        val defs = warehouse.groupBy(col("profile_md5"))
-          .agg(min(col(entity)).as("first_iso"))
-        Numbering.numberBySort(defs, "first_iso", "st").cache()
-      })
-  }
+      entity: String): DataFrame =
+    graft.SessionMemo(warehouse.sparkSession, "profiles.st_dim", key) {
+      val defs = warehouse.groupBy(col("profile_md5"))
+        .agg(min(col(entity)).as("first_iso"))
+      Numbering.numberBySort(defs, "first_iso", "st").cache()
+    }
 
   /** Build the profile warehouse from a long designation fact.
     *
@@ -179,9 +162,6 @@ object Profiles {
     */
   val HotKeyCap = 65536
 
-  private val hotProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   def similarityJoin(wh: DataFrame, entity: String, minShared: Int): DataFrame =
     similarityJoin(wh, entity, minShared, HotKeyCap)
 
@@ -218,9 +198,8 @@ object Profiles {
     // session's cached warehouse itself, so the latch lives exactly as
     // long as the data it measured. Both branches return identical rows,
     // so even a stale entry can only affect plan shape, never results.
-    val probeKey = graft.Tables.sessionKey(wh.sparkSession) + "|" +
-      wh.queryExecution.analyzed.semanticHash() + "|" + hotKeyCap
-    val hasHot = hotProbeCache.computeIfAbsent(probeKey, _ => !hotKeys.isEmpty)
+    val hasHot = graft.SessionMemo(wh.sparkSession, "profiles.hot_probe",
+      s"${wh.queryExecution.analyzed.semanticHash()}|$hotKeyCap")(!hotKeys.isEmpty)
     if (!hasHot) {
       val l = exploded.select(col(entity).as("e1"), col("locus"), col("allele"))
       val r = exploded.select(col(entity).as("e2"), col("locus"), col("allele"))

@@ -295,16 +295,6 @@ object SeqScan {
     * bounded library dimension — the same materialization the reference
     * performs when it builds a BLAST database from the allele library.
     */
-  /** Candidate-list memo: (session, contigs plan, library plan, k) →
-    * persisted candidate pairs + their count. The count is the size gate
-    * for the broadcast hint below; persisting means the sweep that
-    * produced it is never recomputed by the final plan. Stopped sessions'
-    * entries are evicted on each access (same discipline as
-    * Profiles.warehouseCache).
-    */
-  private val candCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, java.lang.Long)]()
-
   def seededTagScan(
       contigs: DataFrame, contigId: String, contigSeq: String,
       library: DataFrame, locus: String, alleleId: String, alleleSeq: String,
@@ -360,15 +350,15 @@ object SeqScan {
     // only under the cap; above it the hint is dropped and Catalyst/AQE
     // pick the join — SMJ at genuine scale, broadcast if runtime stats
     // still allow.
-    candCache.entrySet.removeIf(
-      _.getValue._1.sparkSession.sparkContext.isStopped)
-    val candKey = graft.Tables.sessionKey(spark) + "|" +
-      contigs.queryExecution.analyzed.semanticHash() + "|" +
-      library.queryExecution.analyzed.semanticHash() + "|" + k
-    val (candsP, nCands) = candCache.computeIfAbsent(candKey, _ => {
+    // The candidate list and its count are memoized per (session,
+    // contigs plan, library plan, k): persisting means the sweep that
+    // produced the count is never recomputed by the final plan.
+    val (candsP, nCands) = graft.SessionMemo(spark, "seqscan.candidates",
+      s"${contigs.queryExecution.analyzed.semanticHash()}|" +
+        s"${library.queryExecution.analyzed.semanticHash()}|$k") {
       val c = cands.persist()
-      (c, java.lang.Long.valueOf(c.count()))
-    })
+      (c, c.count())
+    }
     val candsSide =
       if (nCands <= maxBroadcastCandidates) broadcast(candsP) else candsP
     val enriched = up.join(candsSide, Seq(contigId))

@@ -19,19 +19,9 @@ object ApiQueries extends QueryModule {
   // (temp_isolate_scheme_fields_<id>, seqbin_stats — sql/isolatedb.sql
   // cache tables), rebuilt on data change, not recomputed per query. The
   // narrow projections (facts, tags, eav, checks) stay lazy views of the
-  // cached lineitem. Same keying/sweep discipline as Tables.load.
-  private val catalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Catalog]()
-
-  private def catalog(s: org.apache.spark.sql.SparkSession, dir: String): Catalog = {
-    val key = s"${System.identityHashCode(s)}|$dir"
-    catalogCache.entrySet.removeIf(
-      _.getValue.entities.sparkSession.sparkContext.isStopped)
-    catalogCache.compute(key, (_, cached) =>
-      if (cached != null &&
-          !cached.entities.sparkSession.sparkContext.isStopped) cached
-      else buildCatalog(s, dir))
-  }
+  // cached lineitem.
+  private def catalog(s: org.apache.spark.sql.SparkSession, dir: String): Catalog =
+    graft.SessionMemo(s, "api.catalog", dir)(buildCatalog(s, dir))
 
   private def buildCatalog(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val li = Tables.load(s, dir, "lineitem")

@@ -195,20 +195,13 @@ object ClusterQueries extends QueryModule {
   // j5_lincode_prefix, lin_prefix_tree, s10_replicate_lincodes), so the
   // sweep pays ONE driver-side assignment loop per session instead of
   // one per execution. Ownership documented: session-lifetime, pinned
-  // via Pinning.pin, entries evicted when their session stops.
-  private val linCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
+  // via Pinning.pin, dropped when their session's context stops.
   private def cachedLinCodes(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    linCodesCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    linCodesCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|300|30,60,90",
-      _ => graft.operators.Pinning.pin(
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.SessionMemo(s, "cluster.lin_codes", dir + "|300|30,60,90")(
+      graft.operators.Pinning.pin(
         Clustering.assignLinCodes(wh(s, dir, 300), "l_orderkey",
           Seq(30.0, 60.0, 90.0))))
-  }
 
   // G4: LIN codes — order-dependent sequential assignment made deterministic
   // by fixing the order (ascending id); oracled by a full recursive-CTE

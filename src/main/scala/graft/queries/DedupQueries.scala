@@ -204,19 +204,13 @@ object DedupQueries extends QueryModule {
   // Near-dup pairs materialized once per (session, corpus) — the real
   // pipeline computes signatures/pairs once and every consumer (pair
   // report, cluster+canonicalize) reads the materialization, the same
-  // posture as the reference's scheme caches. Evicted with its session.
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+  // posture as the reference's scheme caches. Dropped with its session.
   private def minhashPairs(
-      s: org.apache.spark.sql.SparkSession, dir: String) = {
-    pairCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    pairCache.computeIfAbsent(
-      graft.Tables.sessionKey(s) + "|" + dir,
-      _ => Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id",
+      s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.SessionMemo(s, "dedup.pairs", dir)(
+      Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id",
         "text", shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
         hasher = Dedup.portableShingleHashes).cache())
-  }
 
   // MinHash + LSH near-dup candidates over portable (md5-derived) shingle
   // hashes and md5-derived universal-hash coefficients: the oracle replays
@@ -243,25 +237,14 @@ object DedupQueries extends QueryModule {
   // Verdicts materialize once per (session, corpus), like the pair cache:
   // dedup_cluster, dedup_soft, and the sizes rollup all consume the same
   // materialization instead of re-running the iterative component search.
-  private val verdictCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
   private def clusterVerdicts(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    verdictCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    val key = graft.Tables.sessionKey(s) + "|" + dir
-    val hit = verdictCache.get(key)
-    if (hit != null) hit
-    else {
-      // built OUTSIDE the map lock: connectedComponents runs Spark jobs
-      // eagerly, and computeIfAbsent would hold the bin lock (blocking an
-      // unrelated same-bin key) for the whole component search. A racing
-      // duplicate build is harmless — putIfAbsent keeps the first.
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.SessionMemo(s, "dedup.verdicts", dir) {
       val docs = Tables.load(s, dir, "documents")
       val pairs = minhashPairs(s, dir)
       val cc = graft.operators.Clustering.connectedComponents(
         pairs.select(col("id1").as("src"), col("id2").as("dst")))
-      val built = docs.select(col("doc_id"))
+      docs.select(col("doc_id"))
         .join(cc.select(col("node").as("doc_id"), col("component")),
           Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -269,10 +252,7 @@ object DedupQueries extends QueryModule {
           (coalesce(col("component"), col("doc_id")) === col("doc_id"))
             .as("keep"))
         .cache()
-      val prev = verdictCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   private val dedupCluster = Q(
     "dedup_cluster",
@@ -655,23 +635,17 @@ object DedupQueries extends QueryModule {
   // the delta probes them with ZERO base-corpus access. BIGINT
   // signatures round-trip parquet exactly, so the verdicts are
   // bit-identical and the oracle is dedup_incremental's own replay.
-  private val minhashStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedMinhashStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    minhashStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-mhidx")
-          .toString + "/mh"
-        val docs = Tables.load(s, dir, "documents")
-        graft.pipeline.IndexStore.saveMinhash(
-          docs.filter(col("doc_id") % 11 =!= 0), "doc_id", "text",
-          shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-          livePath = p, hasher = Dedup.portableShingleHashes)
-        p
-      })
+    graft.SessionMemo(s, "dedup.minhash_store", dir) {
+      val p = graft.SessionMemo.tempPath(s, "mhidx")
+      val docs = Tables.load(s, dir, "documents")
+      graft.pipeline.IndexStore.saveMinhash(
+        docs.filter(col("doc_id") % 11 =!= 0), "doc_id", "text",
+        shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
+        livePath = p, hasher = Dedup.portableShingleHashes)
+      p
+    }
 
   private val dedupIndexPersisted = Q(
     "dedup_index_persisted",
@@ -697,27 +671,21 @@ object DedupQueries extends QueryModule {
   // whole chain as one fresh build over base ∪ appended (append ≡
   // rebuild is the operator's invariant, pinned bit-exact in
   // IndexStoreSpec).
-  private val minhashAppendStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedAppendedMinhashStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    minhashAppendStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-mhapp")
-          .toString + "/mh"
-        val docs = Tables.load(s, dir, "documents")
-        graft.pipeline.IndexStore.saveMinhash(
-          docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-          livePath = p, hasher = Dedup.portableShingleHashes)
-        graft.pipeline.IndexStore.appendMinhash(
-          docs.filter(col("doc_id") % 3 === 1), "doc_id", "text",
-          shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-          livePath = p, hasher = Dedup.portableShingleHashes)
-        p
-      })
+    graft.SessionMemo(s, "dedup.minhash_append_store", dir) {
+      val p = graft.SessionMemo.tempPath(s, "mhapp")
+      val docs = Tables.load(s, dir, "documents")
+      graft.pipeline.IndexStore.saveMinhash(
+        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+        shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
+        livePath = p, hasher = Dedup.portableShingleHashes)
+      graft.pipeline.IndexStore.appendMinhash(
+        docs.filter(col("doc_id") % 3 === 1), "doc_id", "text",
+        shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
+        livePath = p, hasher = Dedup.portableShingleHashes)
+      p
+    }
 
   private val indexAppendOracleSql = s"""WITH $minhashCtesSql,
              cand AS (
@@ -773,25 +741,19 @@ object DedupQueries extends QueryModule {
   // is bit-identical to the one-shot over the union, so this row shares
   // dedup_substring_remove's oracle verbatim. IndexStoreSpec pins
   // append ≡ rebuild and the affected-doc recompute.
-  private val substrStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedSubstrStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    substrStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-substr")
-          .toString + "/sx"
-        val docs = Tables.load(s, dir, "documents")
-        val base = docs.filter(col("doc_id") % 11 =!= 0)
-        graft.pipeline.IndexStore.saveSubstr(base, "doc_id", "text",
-          minLen = 40, livePath = p, hasher = Dedup.portableHash)
-        graft.pipeline.IndexStore.appendSubstr(base,
-          docs.filter(col("doc_id") % 11 === 0), "doc_id", "text",
-          minLen = 40, livePath = p, hasher = Dedup.portableHash)
-        p
-      })
+    graft.SessionMemo(s, "dedup.substr_store", dir) {
+      val p = graft.SessionMemo.tempPath(s, "substr")
+      val docs = Tables.load(s, dir, "documents")
+      val base = docs.filter(col("doc_id") % 11 =!= 0)
+      graft.pipeline.IndexStore.saveSubstr(base, "doc_id", "text",
+        minLen = 40, livePath = p, hasher = Dedup.portableHash)
+      graft.pipeline.IndexStore.appendSubstr(base,
+        docs.filter(col("doc_id") % 11 === 0), "doc_id", "text",
+        minLen = 40, livePath = p, hasher = Dedup.portableHash)
+      p
+    }
 
   private val dedupSubstringIncremental = Q(
     "dedup_substring_incremental",
@@ -807,32 +769,26 @@ object DedupQueries extends QueryModule {
   // membership, so arrival order is irrelevant and the fold shares
   // dedup_index_append's oracle; IndexStreamSpec pins MemoryStream ≡
   // batch fold ≡ one-shot append.
-  private val minhashStreamStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedStreamedMinhashStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    minhashStreamStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-mhstream")
-          .toString + "/mh"
-        val docs = Tables.load(s, dir, "documents")
-        graft.pipeline.IndexStore.saveMinhash(
-          docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-          livePath = p, hasher = Dedup.portableShingleHashes)
-        // %3==1 ids are ≡ 1 or 4 (mod 6) — two exact batches (integer
-        // arithmetic; col/3 would be DOUBLE division and silently drop rows)
-        Seq(1, 4).zipWithIndex.foreach { case (m, b) =>
-          graft.pipeline.IndexStore.appendMinhash(
-            docs.filter(col("doc_id") % 6 === m),
-            "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-            maxBucketSize = 1000, livePath = p,
-            hasher = Dedup.portableShingleHashes, marker = Some(b.toLong))
-        }
-        p
-      })
+    graft.SessionMemo(s, "dedup.minhash_stream_store", dir) {
+      val p = graft.SessionMemo.tempPath(s, "mhstream")
+      val docs = Tables.load(s, dir, "documents")
+      graft.pipeline.IndexStore.saveMinhash(
+        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+        shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
+        livePath = p, hasher = Dedup.portableShingleHashes)
+      // %3==1 ids are ≡ 1 or 4 (mod 6) — two exact batches (integer
+      // arithmetic; col/3 would be DOUBLE division and silently drop rows)
+      Seq(1, 4).zipWithIndex.foreach { case (m, b) =>
+        graft.pipeline.IndexStore.appendMinhash(
+          docs.filter(col("doc_id") % 6 === m),
+          "doc_id", "text", shingleN = 2, k = 64, bands = 16,
+          maxBucketSize = 1000, livePath = p,
+          hasher = Dedup.portableShingleHashes, marker = Some(b.toLong))
+      }
+      p
+    }
 
   private val streamMinhashMaintain = Q(
     "stream_minhash_maintain",

@@ -209,9 +209,6 @@ object JoinQueries extends QueryModule {
   // the bucketed layout is a PRE-EXISTING storage decision (like the
   // reference's indexes): materialize once per (session, corpus); the
   // measured work is the shuffle-free join over it
-  private val bucketed =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private val j1Bucketed = Q(
     "j1_bucketed_join",
     (s, dir) => {
@@ -220,20 +217,19 @@ object JoinQueries extends QueryModule {
       // hashCode artifacts in unquoted SQL identifiers
       val suffix = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val (liT, ordT) = bucketed.computeIfAbsent(
-        graft.Tables.sessionKey(s) + "|" + dir, _ => {
-          val liT = s"graft_bkt_li_$suffix"
-          val ordT = s"graft_bkt_ord_$suffix"
-          Bucketing.materialize(
-            Tables.load(s, dir, "lineitem")
-              .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey")),
-            liT, "l_orderkey", 8)
-          Bucketing.materialize(
-            Tables.load(s, dir, "orders")
-              .select(col("o_orderkey"), col("o_orderpriority")),
-            ordT, "o_orderkey", 8)
-          (liT, ordT)
-        })
+      val (liT, ordT) = graft.SessionMemo(s, "join.bucketed", dir) {
+        val liT = s"graft_bkt_li_$suffix"
+        val ordT = s"graft_bkt_ord_$suffix"
+        Bucketing.materialize(
+          Tables.load(s, dir, "lineitem")
+            .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey")),
+          liT, "l_orderkey", 8)
+        Bucketing.materialize(
+          Tables.load(s, dir, "orders")
+            .select(col("o_orderkey"), col("o_orderpriority")),
+          ordT, "o_orderkey", 8)
+        (liT, ordT)
+      }
       val li = Bucketing.read(s, liT)
       val ords = Bucketing.read(s, ordT)
         .withColumnRenamed("o_orderkey", "l_orderkey")

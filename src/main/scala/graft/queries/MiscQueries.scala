@@ -197,9 +197,6 @@ object MiscQueries extends QueryModule {
   // so it is built once per (session, corpus) and reused — the measured
   // work is the incremental path itself: change detection, recompute of
   // changed entities, MERGE.
-  private val staleCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
   private val cacheIncremental = Q(
     "cache_incremental",
     (s, dir) => {
@@ -209,14 +206,9 @@ object MiscQueries extends QueryModule {
         d.groupBy(col("l_orderkey"))
           .agg(count(lit(1)).as("n_parts"),
             sum(col("l_quantity")).cast("long").as("total_qty"))
-      // stale cache: computed before the post-cutoff rows arrived.
-      // Evict entries of stopped sessions first — they pin the dead
-      // session and its cached blocks for the JVM lifetime otherwise.
-      staleCaches.entrySet.removeIf(
-        _.getValue.sparkSession.sparkContext.isStopped)
-      val stale = staleCaches.computeIfAbsent(
-        graft.Tables.sessionKey(s) + "|" + dir,
-        _ => agg(li.filter(col("l_shipdate") < cutoff)).cache())
+      // stale cache: computed before the post-cutoff rows arrived
+      val stale = graft.SessionMemo(s, "misc.stale_cache", dir)(
+        agg(li.filter(col("l_shipdate") < cutoff)).cache())
       // changed entities: any row at/after the cutoff → recompute fully.
       // No .distinct(): the left-semi join dedups by construction, and
       // dropping it saves a full shuffle+aggregate over the change set.

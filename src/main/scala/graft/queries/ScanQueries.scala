@@ -297,7 +297,9 @@ object ScanQueries extends QueryModule {
       val docs = dnaDocs(s, dir).filter(length(col("dna")) > 0)
         .select(col("doc_id").cast("string").as("id"),
           col("lang").as("desc"), col("dna"))
-      val path = s"/tmp/graft_fasta_${dir.replaceAll("[^0-9.]", "")}"
+      // per-call dir, like every roundtrip sink: two runs over one corpus
+      // must not overwrite each other between the write and the read-back
+      val path = graft.SessionMemo.tempPath(s, "fasta")
       Fasta.write(docs, "id", "dna", path, desc = Some("desc"))
       Fasta.read(s, path)
         .select(col("id").cast("long").as("doc_id"),

@@ -11,31 +11,11 @@ import org.apache.spark.sql.functions._
   * straight from the parquet tables.
   */
 object SourceQueries extends QueryModule {
-  // process-unique suffix for the roundtrip sink dirs (see webdataset /
-  // xlsx roundtrips): JVM-wide monotonic, so repeated bench passes never
-  // share a directory
-  private val invocation = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private def dnaDocs(s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.load(s, dir, "documents")
       .withColumn("dna", regexp_replace(upper(col("text")), "[^ACGT]", ""))
 
   private val dnaSql = "regexp_replace(upper(text), '[^ACGT]', '', 'g')"
-
-  // one nonce per JVM: two concurrent runs over the SAME corpus get
-  // disjoint scratch trees, so neither can overwrite the other between a
-  // sink's eager write and its read-back
-  private lazy val runNonce =
-    java.util.UUID.randomUUID().toString.take(8)
-
-  private def tmp(dir: String, tag: String) = {
-    // key the scratch path on a digest of the FULL corpus path (digits-only
-    // keys collide across distinct dirs sharing a digit sequence) plus the
-    // per-run nonce (same-corpus concurrent runs)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"/tmp/graft_${runNonce}_${tag}_${digest}"
-  }
 
   // S2: the XML entity-schema declaration drives a query end-to-end —
   // the optlist constrains the filter values and the regex validates them
@@ -91,7 +71,7 @@ object SourceQueries extends QueryModule {
         .select(col("doc_id").cast("string").as("id"),
           concat(lit("L"), col("doc_id") % 5).as("locus"),
           col("dna"))
-      val path = tmp(dir, "loci")
+      val path = graft.SessionMemo.tempPath(s, "loci")
       Fasta.writePartitioned(alleles, "id", "dna", "locus", path)
       Fasta.readPartitioned(s, path, "locus")
         .select(col("locus").cast("string").as("locus"),
@@ -133,7 +113,7 @@ object SourceQueries extends QueryModule {
                 " '0123456789', 'ACGTACGTAC'), CAST(doc_id % 3 + 1 AS INT))")))
             .when(col("doc_id") % 3 === 1, lit("0" * 32))
             .otherwise(lit(null).cast("string")).as("checksum"))
-      val live = tmp(dir, "contigs")
+      val live = graft.SessionMemo.tempPath(s, "contigs")
       RemoteContigs.materialize(refs, "uri", "checksum", live, UriFetcher)
       RemoteContigs.read(s, live)
         .select(col("doc_id"),
@@ -170,7 +150,7 @@ object SourceQueries extends QueryModule {
         .unionByName(contigs.select(col("doc_id"),
           lit("g2").as("locus"), lit(4L).as("start"), lit(11L).as("end"),
           (col("doc_id") % 2 === 1).as("reverse")))
-      val path = tmp(dir, "embl")
+      val path = graft.SessionMemo.tempPath(s, "embl")
       Embl.write(contigs, "doc_id", "dna", "lang", tags,
         "locus", "start", "end", "reverse", path)
       // the text sink terminates every record row with \n, so records
@@ -214,7 +194,7 @@ object SourceQueries extends QueryModule {
           (length(col("dna")) - 2).cast("long").as("stop"),
           (col("doc_id") % 2 === 0).as("reverse"),
           concat(lit("L"), col("doc_id") % 7).as("locus"))
-      val path = tmp(dir, "gff3")
+      val path = graft.SessionMemo.tempPath(s, "gff3")
       Gff3.write(tags, "seqid", "CDS", "start", "stop", "reverse",
         Map("ID" -> "locus", "locus_tag" -> "locus"), path)
       val f = split(col("value"), "\t")
@@ -243,7 +223,7 @@ object SourceQueries extends QueryModule {
     "jsonl_roundtrip",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val path = tmp(dir, "jsonl")
+      val path = graft.SessionMemo.tempPath(s, "jsonl")
       docs.select(col("doc_id"), col("text"), col("lang"), col("source"))
         .repartition(4)
         .write.mode("overwrite").json(path)
@@ -408,10 +388,10 @@ object SourceQueries extends QueryModule {
           .as("es"))
         .groupBy(col("shard"))
         .agg(sort_array(flatten(collect_list(col("es")))).as("entries"))
-      // per-invocation dir: a shared path let one bench pass's glob race
+      // per-call dir: a shared path let one bench pass's glob race
       // another pass's re-writer (r7 tail AnalysisException); each
-      // write/read pair now sees only its own files
-      val path = s"/tmp/graft_wds_${dir.replaceAll("[^0-9.]", "")}_${invocation.incrementAndGet()}"
+      // write/read pair sees only its own files
+      val path = graft.SessionMemo.tempPath(s, "wds")
       graft.sources.WebDataset.write(entries, "shard", "entries", path)
       graft.sources.WebDataset.read(s, path)
         .select(split(col("name"), "\\.").getItem(0).cast("long").as("doc_id"),
@@ -440,7 +420,7 @@ object SourceQueries extends QueryModule {
       val docs = Tables.load(s, dir, "documents")
       val staged = docs.select((col("doc_id") % 4).as("shard"),
         col("doc_id"), col("lang"), col("n_chars"))
-      val path = s"/tmp/graft_xlsx_${dir.replaceAll("[^0-9.]", "")}_${invocation.incrementAndGet()}"
+      val path = graft.SessionMemo.tempPath(s, "xlsx")
       graft.sources.Xlsx.write(staged, "shard", Seq("doc_id"), path)
       graft.sources.Xlsx.read(s, path)
         .filter(col("rn") >= 2) // skip each sheet's header row
@@ -463,28 +443,23 @@ object SourceQueries extends QueryModule {
   // table — equality IS the proof that pruning lost nothing.
   // ZoneMapsSpec additionally pins that files were actually skipped and
   // the null-zone prune rule.
-  private val zonemapLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedZonemapLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    zonemapLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"zonemap_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(16, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        // registry-routed (r13 VERDICT #1): both artifacts — zone maps
-        // on the range column, the per-file doc_id Bloom (the point-
-        // predicate half; id zones span every file under the n_chars
-        // order), word_idx-clustered — ride WITH the table under
-        // <data>/_skipping via one registration; serving catalogs
-        // resolve the Layout from the table itself, nothing hand-built
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        p
-      })
+    graft.SessionMemo(s, "source.zonemap", dir) {
+      val p = graft.SessionMemo.tempPath(s, "zonemap")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(16, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      // registry-routed (r13 VERDICT #1): both artifacts — zone maps
+      // on the range column, the per-file doc_id Bloom (the point-
+      // predicate half; id zones span every file under the n_chars
+      // order), word_idx-clustered — ride WITH the table under
+      // <data>/_skipping via one registration; serving catalogs
+      // resolve the Layout from the table itself, nothing hand-built
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      p
+    }
 
   private val scanZonemapPrune = Q(
     "scan_zonemap_prune",
@@ -615,27 +590,22 @@ object SourceQueries extends QueryModule {
   // appended rows are served (a stale survivor list would drop them).
   // ZoneMapsSpec pins that files are actually skipped post-ingest and
   // that registry-routed ≡ hand-routed.
-  private val ingestLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedIngestLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    ingestLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"ingeststats_${invocation.incrementAndGet()}")
-        val docs = Tables.load(s, dir, "documents")
-        docs.filter(col("doc_id") % 2 === 0)
-          .repartitionByRange(8, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        graft.sources.SkippingRegistry.appendFiles(
-          docs.filter(col("doc_id") % 2 === 1)
-            .repartitionByRange(8, col("n_chars"), col("doc_id")),
-          s"$p/data")
-        p
-      })
+    graft.SessionMemo(s, "source.ingeststats", dir) {
+      val p = graft.SessionMemo.tempPath(s, "ingeststats")
+      val docs = Tables.load(s, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .repartitionByRange(8, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      graft.sources.SkippingRegistry.appendFiles(
+        docs.filter(col("doc_id") % 2 === 1)
+          .repartitionByRange(8, col("n_chars"), col("doc_id")),
+        s"$p/data")
+      p
+    }
 
   private val ingestStatsPublish = Q(
     "ingest_stats_publish",
@@ -670,22 +640,17 @@ object SourceQueries extends QueryModule {
   // third clause (prefix on an UNINDEXED text column) exercises the
   // sound drop-under-AND path. Oracle = the plain ci filter over the
   // full table; ZoneMapsSpec pins the case-fold rule and file skips.
-  private val textLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTextLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    textLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"textzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(8, col("lang"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("lang"))
-        p
-      })
+    graft.SessionMemo(s, "source.textzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "textzones")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(8, col("lang"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("lang"))
+      p
+    }
 
   private val scanPrunedText = Q(
     "scan_pruned_text",
@@ -719,23 +684,18 @@ object SourceQueries extends QueryModule {
   // and yyyy-MM-dd clause values prune as day intervals. The layout is
   // date-clustered (the natural order of an append-by-day corpus), so
   // a quarter's range clause skips the other quarters' files.
-  private val dateLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedDateLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    dateLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"datezones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "orders")
-          .withColumn("o_orderdate", col("o_orderdate").cast("date"))
-          .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("o_orderdate"))
-        p
-      })
+    graft.SessionMemo(s, "source.datezones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "datezones")
+      Tables.load(s, dir, "orders")
+        .withColumn("o_orderdate", col("o_orderdate").cast("date"))
+        .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("o_orderdate"))
+      p
+    }
 
   private val scanPrunedDate = Q(
     "scan_pruned_date",
@@ -775,32 +735,27 @@ object SourceQueries extends QueryModule {
   // the stream-maintained stats serve every committed row and the
   // replay added nothing. SkippingRegistrySpec drives the same
   // machinery through a real MemoryStream.
-  private val streamStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedStreamStatsLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    streamStatsCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"streamstats_${invocation.incrementAndGet()}")
-        val docs = Tables.load(s, dir, "documents")
-        docs.filter(col("doc_id") % 2 === 0)
-          .repartitionByRange(8, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        val odd = docs.filter(col("doc_id") % 2 === 1)
-        (0 to 2).foreach { c =>
-          graft.streaming.StatsStream.maintainStep(
-            odd.filter(col("doc_id") % 3 === c), c.toLong, s"$p/data")
-        }
-        // at-least-once redelivery of the last batch: the marker in the
-        // published stats version skips it
+    graft.SessionMemo(s, "source.streamstats", dir) {
+      val p = graft.SessionMemo.tempPath(s, "streamstats")
+      val docs = Tables.load(s, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .repartitionByRange(8, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      (0 to 2).foreach { c =>
         graft.streaming.StatsStream.maintainStep(
-          odd.filter(col("doc_id") % 3 === 2), 2L, s"$p/data")
-        p
-      })
+          odd.filter(col("doc_id") % 3 === c), c.toLong, s"$p/data")
+      }
+      // at-least-once redelivery of the last batch: the marker in the
+      // published stats version skips it
+      graft.streaming.StatsStream.maintainStep(
+        odd.filter(col("doc_id") % 3 === 2), 2L, s"$p/data")
+      p
+    }
 
   private val streamStatsPublish = Q(
     "stream_stats_publish",
@@ -832,26 +787,21 @@ object SourceQueries extends QueryModule {
   // per-file null counts give IS NULL real files to skip. Oracles are
   // the plain ci / IS NULL filters over documents with the derivations
   // replayed inline.
-  private val pointLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedPointLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    pointLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"pointzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .withColumn("doc_key", concat(lit("DOC-"), col("doc_id")))
-          .withColumn("opt_tag",
-            when(col("n_chars") % 7 === 0,
-              concat(lit("T"), upper(col("lang")))))
-          .repartitionByRange(8, col("opt_tag"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("opt_tag"), bloomCol = Some("doc_key"))
-        p
-      })
+    graft.SessionMemo(s, "source.pointzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "pointzones")
+      Tables.load(s, dir, "documents")
+        .withColumn("doc_key", concat(lit("DOC-"), col("doc_id")))
+        .withColumn("opt_tag",
+          when(col("n_chars") % 7 === 0,
+            concat(lit("T"), upper(col("lang")))))
+        .repartitionByRange(8, col("opt_tag"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("opt_tag"), bloomCol = Some("doc_key"))
+      p
+    }
 
   private val scanPrunedTextPoint = Q(
     "scan_pruned_text_point",
@@ -902,27 +852,22 @@ object SourceQueries extends QueryModule {
   // (same predicates: locus 1 quantity >= 30, locus 2 discount >=
   // 0.05, AND'd), so equality proves the pruned fact lost no
   // designations; ZoneMapsSpec pins that fact files were skipped.
-  private val factLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedFactLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    factLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"factzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          // the designation "allele" is the locus's own measure, so the
-          // clause grammar (one allele column) expresses both predicates
-          .withColumn("allele",
-            when(col("l_linenumber") === 1, col("l_quantity"))
-              .when(col("l_linenumber") === 2, col("l_discount")))
-          .repartitionByRange(8, col("l_linenumber"), col("l_orderkey"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("l_linenumber"))
-        p
-      })
+    graft.SessionMemo(s, "source.factzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "factzones")
+      Tables.load(s, dir, "lineitem")
+        // the designation "allele" is the locus's own measure, so the
+        // clause grammar (one allele column) expresses both predicates
+        .withColumn("allele",
+          when(col("l_linenumber") === 1, col("l_quantity"))
+            .when(col("l_linenumber") === 2, col("l_discount")))
+        .repartitionByRange(8, col("l_linenumber"), col("l_orderkey"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("l_linenumber"))
+      p
+    }
 
   private val j1Pruned = Q(
     "j1_pruned",
@@ -967,25 +912,20 @@ object SourceQueries extends QueryModule {
   // the same false. Oracle = the EXISTS / NOT EXISTS pair over the raw
   // rows; ZoneMapsSpec pins that fact files were skipped and
   // routed ≡ unrouted.
-  private val eavLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedEavLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    eavLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"eavzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey").as("entity_id"),
-            concat(lit("f"), col("l_linenumber")).as("field"),
-            col("l_returnflag").as("value"))
-          .repartitionByRange(8, col("field"), col("entity_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("field"))
-        p
-      })
+    graft.SessionMemo(s, "source.eavzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "eavzones")
+      Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey").as("entity_id"),
+          concat(lit("f"), col("l_linenumber")).as("field"),
+          col("l_returnflag").as("value"))
+        .repartitionByRange(8, col("field"), col("entity_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("field"))
+      p
+    }
 
   private val f7Pruned = Q(
     "f7_pruned",
@@ -1022,27 +962,22 @@ object SourceQueries extends QueryModule {
   // including the count clause, whose per-locus scope means rows
   // outside every queried locus contribute 0 either way (an unscoped
   // count clause declines pruning, like designations' counts).
-  private val tagLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTagLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    tagLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"tagzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey").as("entity_id"),
-            col("l_linenumber").as("locus"),
-            (upper(col("l_returnflag")) === "N").as("complete"),
-            when(upper(col("l_returnflag")) === "R", lit("flagged"))
-              .as("flag"))
-          .repartitionByRange(8, col("locus"), col("entity_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("locus"))
-        p
-      })
+    graft.SessionMemo(s, "source.tagzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "tagzones")
+      Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey").as("entity_id"),
+          col("l_linenumber").as("locus"),
+          (upper(col("l_returnflag")) === "N").as("complete"),
+          when(upper(col("l_returnflag")) === "R", lit("flagged"))
+            .as("flag"))
+        .repartitionByRange(8, col("locus"), col("entity_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("locus"))
+      p
+    }
 
   private val tagPruned = Q(
     "tag_pruned",
@@ -1084,22 +1019,17 @@ object SourceQueries extends QueryModule {
   // rows matching ONLY the grouped clause survive because their files
   // do. The oracle is the plain OR filter; ZoneMapsSpec pins both the
   // pruning (indexed members) and the decline (unindexed member).
-  private val orGroupLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedOrGroupLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    orGroupLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"orgroupzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(8, col("lang"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("lang", "source"))
-        p
-      })
+    graft.SessionMemo(s, "source.orgroupzones", dir) {
+      val p = graft.SessionMemo.tempPath(s, "orgroupzones")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(8, col("lang"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("lang", "source"))
+      p
+    }
 
   private val scanPrunedOrGrouped = Q(
     "scan_pruned_or_grouped",

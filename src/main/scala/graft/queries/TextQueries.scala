@@ -372,20 +372,14 @@ object TextQueries extends QueryModule {
 
   // The (doc, word, n) count dimension is a pure function of the corpus —
   // memoize it pinned per (session, dir) (the cachedWarehouse posture,
-  // ownership: session-lifetime, evicted with the session) so repeated
+  // ownership: session-lifetime, dropped with the session) so repeated
   // surprisal scoring pays the tokenize+count shuffle once, not once per
   // execution (the r9 bench paid the per-call pin inside every timed pass).
-  private val docWordCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
   private[queries] def cachedDocWords(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    docWordCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    docWordCache.computeIfAbsent(graft.Tables.sessionKey(s) + "|" + dir,
-      _ => graft.operators.Pinning.pin(TextAnalysis.docWordCountsPlan(
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.SessionMemo(s, "text.doc_words", dir)(
+      graft.operators.Pinning.pin(TextAnalysis.docWordCountsPlan(
         Tables.load(s, dir, "documents"), "doc_id", "text")))
-  }
 
   // Corpus-derived unigram surprisal: integer log2 via binary-digit count
   // (bits(N) - bits(count_w) per token) — the rare-vocabulary filter
@@ -1233,14 +1227,10 @@ object TextQueries extends QueryModule {
   // train + auc + calibration share one fit per (session, corpus, spec):
   // iters×(d+1) aggregation passes run once, every query reads the
   // (d+1)-double result
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Double)]]()
-
   private def trainedProbeFor(p: ProbeSpec)(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Double)] =
-    probeCache.computeIfAbsent(
-      graft.Tables.sessionKey(s) + "|" + dir + "|" + p.key,
-      _ => TextAnalysis.linearProbeTrain(
+    graft.SessionMemo(s, "text.probe", dir + "|" + p.key)(
+      TextAnalysis.linearProbeTrain(
         Tables.load(s, dir, "documents"), p.features, probeLabel,
         eta = p.eta, iters = p.iters))
 

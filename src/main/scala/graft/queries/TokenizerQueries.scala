@@ -19,14 +19,10 @@ object TokenizerQueries extends QueryModule {
   // per session like Profiles.cachedWarehouse, so the train and encode
   // entry points (and repeated invocations in a long-lived session) share
   // one training sweep instead of re-running the 10-round recursion.
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Tokenizer.Merge]]()
-
   private def trainedMerges(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[Tokenizer.Merge] =
-    mergeCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|" + Rounds,
-      _ => Tokenizer.bpeTrain(Tables.load(s, dir, "documents"), "text", Rounds))
+    graft.SessionMemo(s, "tokenizer.merges", dir + "|" + Rounds)(
+      Tokenizer.bpeTrain(Tables.load(s, dir, "documents"), "text", Rounds))
 
   /** Shared oracle prelude: the word-frequency vocab (w0), char-level
     * reprs (r0), then per round r: pair counts (p_r), the winning pair
@@ -141,14 +137,10 @@ object TokenizerQueries extends QueryModule {
   private val VocabN = 40
   private val PieceLen = 6
 
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   private def trainedVocab(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Long)] =
-    vocabCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + s"|$VocabN|$PieceLen",
-      _ => Tokenizer.maxMatchVocab(
+    graft.SessionMemo(s, "tokenizer.vocab", dir + s"|$VocabN|$PieceLen")(
+      Tokenizer.maxMatchVocab(
         Tables.load(s, dir, "documents"), "text", VocabN, PieceLen))
 
   /** Shared oracle prelude: word frequencies (w0) and the ranked piece
@@ -247,14 +239,10 @@ object TokenizerQueries extends QueryModule {
 
   private val VitUnroll = 16 // covers the corpus' max word length (8) 2x over
 
-  private val charCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   private def trainedChars(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Long)] =
-    charCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => Tokenizer.charCounts(Tables.load(s, dir, "documents"), "text"))
+    graft.SessionMemo(s, "tokenizer.chars", dir)(
+      Tokenizer.charCounts(Tables.load(s, dir, "documents"), "text"))
 
   /** The DP replay: char weights (c1), the combined cost table (vcost),
     * the lattice edge table (vedge), then states vb2..vb{n+1} where
@@ -485,19 +473,13 @@ object TokenizerQueries extends QueryModule {
   // in-session path and SHARES its oracle (the dedup_index_persisted
   // discipline). Production cadence: re-train + atomic pointer flip when
   // the corpus drifts; readers mid-encode keep the N-1 version.
-  private val tokenizerStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTokenizerStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    tokenizerStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|" + Rounds,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-tokidx")
-          .toString + "/bpe"
-        graft.pipeline.IndexStore.saveTokenizer(s, trainedMerges(s, dir), p)
-        p
-      })
+    graft.SessionMemo(s, "tokenizer.store", dir + "|" + Rounds) {
+      val p = graft.SessionMemo.tempPath(s, "tokidx")
+      graft.pipeline.IndexStore.saveTokenizer(s, trainedMerges(s, dir), p)
+      p
+    }
 
   private val tokenizerPersisted = Q(
     "tokenizer_persisted",

@@ -76,7 +76,7 @@ object SkippingRegistry {
     writeManifest(spark, dataDir, Registration(zoneCols, bloomCol))
     // same-JVM sessions that probed before registration hold a memoized
     // None — drop every entry for this dataDir so they re-consult
-    layoutCache.keySet.removeIf(_.endsWith(s"|$dataDir"))
+    graft.SessionMemo.dropPrefix(LayoutMemo, dataDir)
     layoutFor(spark, dataDir).getOrElse(
       throw new IllegalStateException(s"registration not readable: $dataDir"))
   }
@@ -92,22 +92,16 @@ object SkippingRegistry {
     * on first touch, which is when the table itself is first read).
     */
   def layoutFor(spark: SparkSession, dataDir: String):
-      Option[ZoneMaps.Layout] = {
-    val key = s"${graft.Tables.sessionKey(spark)}|$dataDir"
-    layoutCache.entrySet.removeIf(e =>
-      e.getValue._1.sparkContext.isStopped)
-    layoutCache.computeIfAbsent(key, _ => {
-      val reg = readManifest(spark, dataDir)
-      (spark, reg.map(r => ZoneMaps.Layout(dataDir,
+      Option[ZoneMaps.Layout] =
+    graft.SessionMemo(spark, LayoutMemo, dataDir) {
+      readManifest(spark, dataDir).map(r => ZoneMaps.Layout(dataDir,
         statsLive = if (r.zoneCols.nonEmpty)
           Some(statsLivePath(dataDir)) else None,
         bloomLive = r.bloomCol.map(_ => bloomLivePath(dataDir)),
-        bloomCol = r.bloomCol)))
-    })._2
-  }
+        bloomCol = r.bloomCol))
+    }
 
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, Option[ZoneMaps.Layout])]()
+  private val LayoutMemo = "skipping.layout"
 
   /** Refresh the registered artifacts after new files landed in
     * `dataDir`: delta-only (fresh files are discovered by anti-join

@@ -527,44 +527,28 @@ object ZoneMaps {
     // memo keyed on the RESOLVED version dir: a compile-time consult
     // must not pay footer reads on every query, and a republish flips
     // the pointer to a new dir so the stale entry is simply never hit
-    // again (swept with its session, the Tables.load discipline)
-    val key = s"${graft.Tables.sessionKey(spark)}|$live"
-    // the owning session rides IN the value so the sweep also evicts
-    // None entries (not-yet-published probes) — keyed on the frame
-    // alone they would accumulate forever across stopped sessions
-    statsCache.entrySet.removeIf(e =>
-      e.getValue._1.sparkContext.isStopped)
-    // superseded-version eviction: a STREAM-maintained artifact
-    // republishes once per micro-batch, and with the memo keyed on the
-    // resolved `livePath.vN` a long-running session would hold one dead
-    // entry per version — drop this session's older versions of the
-    // SAME artifact when a newer resolution lands
-    if (live != livePath) {
-      val prefix = s"${graft.Tables.sessionKey(spark)}|$livePath.v"
-      statsCache.keySet.removeIf(k => k != key && k.startsWith(prefix))
-    }
-    statsCache.computeIfAbsent(key, _ => {
+    // again. Superseded-version eviction: a STREAM-maintained artifact
+    // republishes once per micro-batch, so a long-running session would
+    // hold one dead entry per version — drop the older versions of the
+    // SAME artifact when a newer resolution lands.
+    if (live != livePath)
+      graft.SessionMemo.dropPrefix(StatsMemo, s"$livePath.v", keep = Some(live))
+    graft.SessionMemo(spark, StatsMemo, live) {
       val p = new org.apache.hadoop.fs.Path(live)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (spark, if (fs.exists(p)) Some(spark.read.parquet(live)) else None)
-    })._2
+      if (fs.exists(p)) Some(spark.read.parquet(live)) else None
+    }
   }
 
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, Option[DataFrame])]()
+  private val StatsMemo = "zonemaps.stats"
 
   /** How many memoized versions of `livePath` this session holds —
     * the superseded-version eviction's observable (ZoneMapsSpec pins
-    * it at ≤ 1; the artifact-specific prefix keeps the count immune to
-    * parallel suites sharing the JVM-wide cache).
+    * it at ≤ 1).
     */
   private[graft] def cachedVersionsOf(spark: SparkSession,
-      livePath: String): Int = {
-    val prefix = s"${graft.Tables.sessionKey(spark)}|$livePath.v"
-    var n = 0
-    statsCache.keySet.forEach(k => if (k.startsWith(prefix)) n += 1)
-    n
-  }
+      livePath: String): Int =
+    graft.SessionMemo.countPrefix(spark, StatsMemo, s"$livePath.v")
 
   /** File-list pruning for a compiled conjunction of range and point
     * predicates — the [[graft.api.QueryCompiler]] entry point. Returns

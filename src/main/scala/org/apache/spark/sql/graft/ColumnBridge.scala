@@ -72,14 +72,13 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }
 
-  /** `SparkSession.sessionUUID` is `private[sql]`; memo keys need a
-    * session identity that can't be reused after GC the way
-    * identityHashCode can.
+  /** `SparkSession.sessionUUID` is `private[sql]`; graft.SessionMemo keys
+    * its entries on it — unlike an object hash, a new session never
+    * reuses it.
     */
-  def sessionUUID(s: org.apache.spark.sql.SparkSession): Option[String] =
+  def sessionUUID(s: org.apache.spark.sql.SparkSession): String =
     s match {
-      case c: org.apache.spark.sql.classic.SparkSession => Some(c.sessionUUID)
-      case _ => None
+      case c: org.apache.spark.sql.classic.SparkSession => c.sessionUUID
     }
 
   /** Whether the session's CacheManager holds ANY cached plan —

@@ -13,9 +13,9 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   *      (corpus, params) plan and become the eviction pressure that made
   *      r8's bench numbers nondeterministic. Library operators therefore
   *      use per-call [[Pinning]] pins; the only CacheManager entries
-  *      allowed are the EXPLICITLY memoized session caches (Tables.load,
-  *      the profile warehouse/ST dimension, query-layer memos), each
-  *      owned by a keyed map with documented lifetime.
+  *      allowed are [[SessionMemo]] entries (Tables.load, the profile
+  *      warehouse/ST dimension, query-layer memos), which live until
+  *      their session's SparkContext stops.
   *   2. An iterative loop that pins every round but frees none holds
   *      rounds × state blocks at peak instead of ~2 × state.
   *
