@@ -59,12 +59,12 @@ object ScaleProbeOps {
     // seed: both timed runs pay the full seed + descent build.
     def nnDescentScaled() = {
       val emb = Tables.load(spark, sfDir, "embeddings")
-      // localWorkThreshold = 0: the probe measures the DISTRIBUTED loop's
+      // forced distributed: the probe measures the DISTRIBUTED loop's
       // scaling — the driver-local crossover would otherwise absorb the
       // 1x slice and skew the exponent's denominator
-      graft.pipeline.Similarity.nnDescent(emb, "vec_id", "embedding",
-        k = 5, nprobe = 3, maxRounds = 12, delta = 0.0,
-        localWorkThreshold = 0L)
+      graft.operators.Crossover.distributed(
+        graft.pipeline.Similarity.nnDescent(emb, "vec_id", "embedding",
+          k = 5, nprobe = 3, maxRounds = 12, delta = 0.0))
     }
     // sim_components via the operator DEFAULT (auto-sized coarse index),
     // direct call — no session graph memo, full build in every timed run.

@@ -25,10 +25,11 @@ object Clustering {
     * MINIMUM member id of a component — the same labeling rule as the
     * distributed min-label propagation, which is what lets the adaptive
     * local paths below substitute for it. Shared by the local fast paths
-    * of connectedComponents / minimumSpanningForest / singleLinkageNewick.
+    * of connectedComponents / minimumSpanningForest / singleLinkageNewick
+    * and Similarity.dbscan. An id never added is its own root.
     */
-  private final class UnionFind {
-    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+  private[graft] final class UnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
@@ -57,54 +58,34 @@ object Clustering {
     * groupBy — both shuffle on the node key, so co-partitioning is reused
     * across rounds; the label frontier shrinks monotonically.
     *
-    * Crossover: below `localEdgeThreshold` symmetrized edges a driver
+    * Crossover: within [[Crossover.GraphEdges]] raw edges a driver
     * union-find wins (5M edges collect to ~80 MB and union in ~1 s —
     * several distributed label+jump rounds cost far more; measured 76.3 s
     * for the 84k-node 100x mutual-kNN graph on the distributed path, the
     * BENCH_SCALE sim_components_scaled row that validated that path).
-    * The distributed loop stays the beyond-threshold route and produces
-    * identical labels (ClusteringSpec forces it with threshold = 0).
+    * The distributed loop stays the beyond-budget route and produces
+    * identical labels (ClusteringSpec forces it with Crossover.distributed).
     */
   def connectedComponents(
       edges: DataFrame,
       nodes: Option[DataFrame] = None,
-      maxIter: Int = 50,
-      localEdgeThreshold: Long = 5000000L): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
-    // Small-graph fast path: below the threshold, a driver-side union-find
-    // beats several distributed rounds — the same adaptive posture as
-    // broadcast-vs-shuffle join selection. Integral node ids only: the
-    // local path works on longs, and numeric min on a string id type would
-    // disagree with the distributed path's lexicographic min. The iterative
-    // path below remains the scale route and produces identical labels
-    // (component id = min member id either way).
-    //
-    // r15 opt: the probe and the collect run on the RAW edge list —
+    // Small-graph fast path: a driver-side union-find beats several
+    // distributed rounds and labels identically (component id = min
+    // member id). The edges are cast to the node type, so string ids
+    // take the distributed path. r15 opt: it collects the RAW edge list —
     // union-find is direction- and duplicate-insensitive, so the local
-    // path never needs the symmetrize+distinct exchange, the pin job, or
-    // the endpoint-distinct pass the old code paid before branching
-    // (~0.7 s per call locally; the probe threshold now counts raw rather
-    // than distinct-symmetrized edges, a heuristic either way). The
-    // distributed path below builds sym exactly as before.
+    // path skips the symmetrize+distinct exchange, the pin job and the
+    // endpoint-distinct pass (~0.7 s per call).
     val nodeType = nodes.map(_.schema("node").dataType)
       .getOrElse(edges.schema("src").dataType)
-    val integralNodes = nodeType match {
-      case _: org.apache.spark.sql.types.LongType |
-           _: org.apache.spark.sql.types.IntegerType |
-           _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    // bounded probe = the collect itself: take(threshold+1) both answers
-    // "is the graph small?" AND delivers the edges when it is, so the
-    // local path executes the (possibly expensive) edge upstream exactly
-    // once — no pin, no second pass. A huge graph pays one capped take
-    // before falling through to the distributed path.
-    if (integralNodes) {
-      val cap = math.min(localEdgeThreshold + 1, Int.MaxValue.toLong).toInt
-      val taken = edges
-        .select(col("src").cast("long"), col("dst").cast("long")).take(cap)
-      if (taken.length <= localEdgeThreshold) {
+    Crossover.take(
+        edges.select(col("src").cast(nodeType).as("src"),
+          col("dst").cast(nodeType).as("dst")),
+        Crossover.GraphEdges, "src", "dst") match {
+      case None =>
+      case Some(taken) =>
         import spark.implicits._
         val ns = nodes
           .map(_.select(col("node").cast("long")).as[Long].collect())
@@ -120,7 +101,6 @@ object Clustering {
         return spark.createDataset(out).toDF("node", "component")
           .select(col("node").cast(nodeType).as("node"),
             col("component").cast(nodeType).as("component"))
-      }
     }
     // pinned eagerly (Pinning strategy): every path below consumes the
     // symmetrized list at least twice, so it materializes exactly once
@@ -242,7 +222,7 @@ object Clustering {
     * Assignment order is ascending id, so profile i's nearest-ASSIGNED
     * neighbour is its nearest among all LOWER ids — a quantity that
     * depends only on the profiles, not on the codes. Within the local
-    * work gate ([[fitsLocal]]) that nearest map computes on the driver
+    * work gate ([[linFits]]) that nearest map computes on the driver
     * from the dictionary-coded O(n·L) matrix (bit-identical doubles and
     * tie rule, zero serialization); beyond it the O(n²·L) distance
     * work runs IN SPARK (a broadcast join of one id-batch
@@ -262,8 +242,7 @@ object Clustering {
       wh: DataFrame,
       entity: String,
       thresholds: Seq[Double],
-      batchSize: Int = 4096,
-      localWorkThreshold: Long = 20000000000L): DataFrame = {
+      batchSize: Int = 4096): DataFrame = {
     val spark = wh.sparkSession
     import spark.implicits._
     val levels = thresholds.length
@@ -280,7 +259,7 @@ object Clustering {
       if (ids.length <= 1) None
       else {
         val l0 = prof.select(size(col("__prof")).as("l")).head().getInt(0)
-        if (!fitsLocal(ids.length, l0, localWorkThreshold)) None
+        if (!linFits(ids.length, l0)) None
         else {
           val posOf = ids.zipWithIndex.toMap
           val lp = new LocalProfiles(
@@ -520,8 +499,7 @@ object Clustering {
       entity: String,
       maxMissing: Int = Int.MaxValue,
       batchSize: Int = 4096,
-      mmapThreshold: Int = 16384,
-      localWorkThreshold: Long = 20000000000L): Seq[Long] = {
+      mmapThreshold: Int = 16384): Seq[Long] = {
     val spark = wh.sparkSession
     import spark.implicits._
     val base = bulkProjection(wh, entity, maxMissing)
@@ -538,7 +516,7 @@ object Clustering {
     // on total compare work (n²·L) and matrix size so the distributed
     // fill remains the beyond-gate route.
     val L = base.select(size(col("__prof")).as("l")).head().getInt(0)
-    if (fitsLocal(n, L, localWorkThreshold))
+    if (linFits(n, L))
       return primOrderLocal(base, ids)
     val pairs = n.toLong * (n - 1) / 2
     // FALLBACK beyond the local-work gate: distances in Spark (batched
@@ -633,15 +611,15 @@ object Clustering {
     } finally pool.shutdown()
   }
 
-  /** The n²·L work gate + O(n·L) matrix-size gate shared by the local
-    * crossovers: within it the whole distance workload fits one driver
-    * comfortably (~20 s of int compares at the default), so recomputing
+  /** The LIN / PRIM cost formula: n²·L distance compares and the O(n·L)
+    * matrix, each within its [[Crossover]] budget. Within both the whole
+    * distance workload fits one driver comfortably, so recomputing
     * distances locally beats ANY distributed plan's serialization floor;
-    * beyond it the batched-broadcast Spark paths remain the scale route
-    * (forced in specs via localWorkThreshold = 0).
+    * beyond them the batched-broadcast Spark paths remain the scale route.
     */
-  private def fitsLocal(n: Long, l: Long, localWorkThreshold: Long): Boolean =
-    n * n * l <= localWorkThreshold && n * l <= 64000000L
+  private def linFits(n: Long, l: Long): Boolean =
+    Crossover.fits(n * n * l, Crossover.LinWork) &&
+      Crossover.fits(n * l, Crossover.LinMatrix)
 
   /** Driver-local PRIM: [[LocalProfiles]] + [[primSelect]] recomputing
     * each distance on demand — identical float arithmetic to
@@ -791,13 +769,11 @@ object Clustering {
       entity: String,
       thresholds: Seq[Double],
       maxMissing: Int = Int.MaxValue,
-      batchSize: Int = 4096,
-      localWorkThreshold: Long = 20000000000L): DataFrame = {
+      batchSize: Int = 4096): DataFrame = {
     val spark = wh.sparkSession
     import spark.implicits._
     val levels = thresholds.length
-    val order = primOrder(wh, entity, maxMissing, batchSize,
-      localWorkThreshold = localWorkThreshold)
+    val order = primOrder(wh, entity, maxMissing, batchSize)
     val n = order.length
     val posDf = order.zipWithIndex.toSeq.toDF("__id", "__pos")
     val prof = bulkProjection(wh, entity, maxMissing)
@@ -811,7 +787,7 @@ object Clustering {
       if (n <= 1) None
       else {
         val l0 = prof.select(size(col("__prof")).as("l")).head().getInt(0)
-        if (!fitsLocal(n, l0, localWorkThreshold)) None
+        if (!linFits(n, l0)) None
         else {
           val posOfId = order.zipWithIndex.toMap
           val lp = new LocalProfiles(
@@ -909,8 +885,7 @@ object Clustering {
     * Input: edges(src, dst, weight) — integral node ids, numeric weight.
     * Output: (src, dst, weight) rows of the forest, src < dst.
     */
-  def minimumSpanningForest(edges: DataFrame, maxIter: Int = 30,
-      localEdgeThreshold: Long = 5000000L): DataFrame = {
+  def minimumSpanningForest(edges: DataFrame, maxIter: Int = 30): DataFrame = {
     // normalize to src < dst and collapse parallel edges to their min weight
     val e0 = Pinning.pin(edges
       .filter(col("src") =!= col("dst"))
@@ -919,25 +894,26 @@ object Clustering {
       .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight")))
     // Small-graph fast path (same adaptive posture as connectedComponents):
     // the profile-similarity graph is DIMENSION-sized (#ST pairs within
-    // threshold), so below the edge cap a driver Kruskal beats ~log n
+    // threshold), so within the edge budget a driver Kruskal beats ~log n
     // distributed rounds of fixed job costs. Identical output: the
     // (weight, src, dst) total order makes the MSF unique, so Kruskal here
-    // and Borůvka below return the same edges. The distributed path stays
-    // the scale route (forced in ClusteringSpec via localEdgeThreshold=0).
-    if (e0.limit(math.min(localEdgeThreshold + 1, Int.MaxValue.toLong).toInt)
-        .count() <= localEdgeThreshold) {
-      val spark = e0.sparkSession
-      import spark.implicits._
-      val es = e0.select(col("src").cast("long"), col("dst").cast("long"),
-          col("weight").cast("double")).as[(Long, Long, Double)].collect()
-      val uf = new UnionFind
-      val chosen = Seq.newBuilder[(Long, Long)]
-      for ((s, d, _) <- es.sortBy { case (s, d, w) => (w, s, d) })
-        if (uf.union(s, d)) chosen += ((s, d))
-      // semi join back against e0: output keeps the caller's weight type
-      return e0.join(
-        broadcast(chosen.result().toDF("src", "dst")), Seq("src", "dst"),
-        "left_semi")
+    // and Borůvka below return the same edges.
+    Crossover.take(e0.select(col("src"), col("dst"),
+        col("weight").cast("double").as("weight")),
+        Crossover.GraphEdges, "src", "dst") match {
+      case None =>
+      case Some(taken) =>
+        val spark = e0.sparkSession
+        import spark.implicits._
+        val es = taken.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        val uf = new UnionFind
+        val chosen = Seq.newBuilder[(Long, Long)]
+        for ((s, d, _) <- es.sortBy { case (s, d, w) => (w, s, d) })
+          if (uf.union(s, d)) chosen += ((s, d))
+        // semi join back against e0: output keeps the caller's weight type
+        return e0.join(
+          broadcast(chosen.result().toDF("src", "dst")), Seq("src", "dst"),
+          "left_semi")
     }
     var comp = Pinning.pin(e0.select(col("src").as("node"))
       .unionByName(e0.select(col("dst").as("node")))
@@ -1036,28 +1012,30 @@ object Clustering {
     final case class Cl(repr: Long, formed: Int, str: String)
     var clusters: Seq[Cl] = ids.map(id => Cl(id, 0, id.toString)).toSeq
     // Adaptive per-level memberships, same posture as connectedComponents /
-    // minimumSpanningForest: below the edge cap, one collect + incremental
-    // union-find across ascending levels (edges sorted by weight, each
-    // added exactly once) replaces |levels| distributed component rounds.
-    val localCap = 200000
+    // minimumSpanningForest: within the edge budget, one collect +
+    // incremental union-find across ascending levels (edges sorted by
+    // weight, each added exactly once) replaces |levels| distributed
+    // component rounds.
     val compAtLevel: Int => Map[Long, Long] =
-      if (e0.limit(localCap + 1).count() <= localCap) {
-        val es = e0.as[(Long, Long, Int)].collect().sortBy(_._3)
-        val uf = new UnionFind
-        var i = 0
-        (t: Int) => {
-          while (i < es.length && es(i)._3 <= t) {
-            uf.union(es(i)._1, es(i)._2)
-            i += 1
+      Crossover.take(e0, Crossover.NewickEdges, "src", "dst") match {
+        case Some(taken) =>
+          val es = taken.map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+            .sortBy(_._3)
+          val uf = new UnionFind
+          var i = 0
+          (t: Int) => {
+            while (i < es.length && es(i)._3 <= t) {
+              uf.union(es(i)._1, es(i)._2)
+              i += 1
+            }
+            // min-id labeling: UnionFind roots are component minima
+            ids.map(id => id -> uf.find(id)).toMap
           }
-          // min-id labeling: UnionFind roots are component minima
-          ids.map(id => id -> uf.find(id)).toMap
-        }
-      } else { (t: Int) =>
-        connectedComponents(
-          e0.filter(col("weight") <= t).select(col("src"), col("dst")),
-          Some(nodes.select(col("node"))))
-          .as[(Long, Long)].collect().toMap
+        case None => (t: Int) =>
+          connectedComponents(
+            e0.filter(col("weight") <= t).select(col("src"), col("dst")),
+            Some(nodes.select(col("node"))))
+            .as[(Long, Long)].collect().toMap
       }
     for (t <- levels) {
       val comp = compAtLevel(t)

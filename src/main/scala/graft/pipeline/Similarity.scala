@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import graft.operators.Crossover
 
 /** Approximate-nearest-neighbor over an embedding column (ARRAY<FLOAT>).
   *
@@ -308,21 +309,20 @@ object Similarity {
     * vectors for the diversity penalty.
     */
   def mmrFromShortlist(shortRel: DataFrame, corpus: DataFrame, id: String,
-      vec: String, k: Int, localWorkThreshold: Long = 4096L): DataFrame = {
+      vec: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     import org.apache.spark.sql.expressions.Window
     val short = graft.operators.Pinning.pin(
       shortRel.select(col("query_id"), col("cand"), col("rel")))
     // Driver-local crossover (the Clustering G4 discipline): MMR is a
     // greedy loop over a SHORTLIST — already bounded by construction —
-    // so under the gate the k rounds run on collected arrays with the
+    // so within the budget the k rounds run on collected arrays with the
     // kernel-identical cosine and the same (score DESC, cand ASC) pick
     // rule, instead of k-1 checkpoint+shuffle rounds over a few dozen
-    // rows. Bit-identity pinned by SimilaritySpec (local == forced-Spark
-    // via localWorkThreshold = 0); the loop below remains the corpus-
-    // scale route for shortlists that genuinely don't fit one driver.
-    if (short.count() <= localWorkThreshold) try {
-      val rows = short.collect()
+    // rows.
+    val local = Crossover.take(short, Crossover.MmrRows, "query_id", "cand")
+    if (local.nonEmpty) try {
+      val rows = local.get
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       val cands = rows.map(_._2).distinct
       val cv0 = corpus.select(col(id).as("cand"), toDouble(col(vec)).as("__cv"))
@@ -434,33 +434,21 @@ object Similarity {
     * shuffle. Output: (id, degree, role, cluster).
     */
   def dbscan(nodes: DataFrame, pairs: DataFrame, id: String,
-      minPts: Int, localWorkThreshold: Long = 2000000L): DataFrame = {
+      minPts: Int): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
     // Driver-local crossover (the G4/MMR work-gate discipline): every
     // labeled row is a function of the PAIR list alone — degrees, the
     // core set, core-subgraph components, border attachment — and the
-    // node table only left-joins the result. Under the gate the take()
-    // is both the probe and the collect (one pair-upstream execution),
-    // the graph work runs on arrays, and only the label table (bounded
-    // by pair endpoints) goes back as a broadcast-sized join side; the
-    // distributed path below stays the scale route. Bit-identity local ≡
-    // distributed is pinned by SimilaritySpec (localWorkThreshold = 0).
+    // node table only left-joins the result, so the graph work runs on
+    // arrays and only the label table goes back, as a broadcast join
+    // side. Pairs are cast to the node id type; null endpoints take the
+    // distributed path, where they add degree to their non-null partner.
     val idType = nodes.schema(id).dataType
-    val integralIds = idType match {
-      case _: org.apache.spark.sql.types.LongType |
-           _: org.apache.spark.sql.types.IntegerType |
-           _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (integralIds) {
-      val cap = math.min(localWorkThreshold + 1, Int.MaxValue.toLong).toInt
-      val pl = pairs
-        .select(col("id1").cast("long"), col("id2").cast("long")).take(cap)
-      // null endpoints take the distributed path: they contribute degree
-      // to their non-null partner there, and a LongMap can't key null
-      if (pl.length <= localWorkThreshold &&
-          !pl.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+    Crossover.take(pairs.select(col("id1").cast(idType).as("id1"),
+        col("id2").cast(idType).as("id2")),
+        Crossover.GraphPairs, "id1", "id2") match {
+      case None =>
+      case Some(pl) =>
         val degM = scala.collection.mutable.LongMap.empty[Long]
         pl.foreach { r =>
           val a = r.getLong(0); val b = r.getLong(1)
@@ -471,31 +459,15 @@ object Similarity {
         }
         def isCore(n: Long) = degM.getOrElse(n, 0L) >= minPts
         // min-root union-find over the core-core subgraph
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def ufAdd(n: Long): Unit =
-          if (!parent.contains(n)) parent(n) = n
-        def ufFind(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        def ufUnion(a: Long, b: Long): Unit = {
-          val ra = ufFind(a); val rb = ufFind(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
+        val uf = new graft.operators.Clustering.UnionFind
         pl.foreach { r =>
           val a = r.getLong(0); val b = r.getLong(1)
-          if (isCore(a) && isCore(b)) { ufAdd(a); ufAdd(b); ufUnion(a, b) }
+          if (isCore(a) && isCore(b)) uf.union(a, b)
         }
         // core label: component min (self when no core neighbor);
         // border label: min core-neighbor cluster over all incident pairs
         val clusterOf = scala.collection.mutable.LongMap.empty[Long]
-        degM.keysIterator.foreach { n =>
-          if (isCore(n))
-            clusterOf(n) = if (parent.contains(n)) ufFind(n) else n
-        }
+        degM.keysIterator.foreach { n => if (isCore(n)) clusterOf(n) = uf.find(n) }
         val borderM = scala.collection.mutable.LongMap.empty[Long]
         def borderVisit(n: Long, m: Long): Unit =
           if (!isCore(n) && isCore(m)) {
@@ -527,7 +499,6 @@ object Similarity {
             coalesce(col("degree"), lit(0L)).as("degree"),
             coalesce(col("role"), lit("noise")).as("role"),
             coalesce(col("cluster"), lit(-1L)).as("cluster"))
-      }
     }
     val edges = pairs.select(col("id1").as("n"), col("id2").as("m"))
       .unionByName(pairs.select(col("id2").as("n"), col("id1").as("m")))
@@ -753,9 +724,8 @@ object Similarity {
     * math. The per-row pick is the fused [[graft.functions.Vectors
     * .topCells]] kernel — identical selection and (cos desc, list_id)
     * tie order to the HOF slice(array_sort(transform(...))) form
-    * ([[probeCellsHof]], kept as the executable spec BestCellSpec
-    * diffs against), minus the per-centroid lambda interpreter that
-    * measured 38.4 s of the 100× components build's 81 s wall.
+    * (SimilarityReference.probeCellsHof, the spec BestCellSpec diffs
+    * against), minus the per-centroid lambda interpreter that measured 38.4 s of the 100× components build's 81 s wall.
     * Output: (query_id, qv, list_id) — one row per probed cell.
     */
   private[graft] def probeCells(queries: DataFrame, id: String, vec: String,
@@ -765,23 +735,6 @@ object Similarity {
       .select(col("query_id"), col("qv"),
         explode(graft.functions.Vectors.topCells(
           col("qv"), col("__cents"), nprobe)).as("list_id"))
-
-  /** The HOF probe pick [[probeCells]] replaced — score all centroids
-    * per row with a per-element lambda, array_sort the (negCd, list_id)
-    * structs, slice. Kept as the executable ORDERING SPEC: BestCellSpec
-    * pins kernel ≡ HOF on random vectors, ties included.
-    */
-  private[graft] def probeCellsHof(queries: DataFrame, id: String,
-      vec: String, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val cells = slice(array_sort(transform(col("__cents"), c =>
-      struct((-cosine(col("qv"), c.getField("cvec"))).as("negCd"),
-        c.getField("list_id").as("list_id")))), 1, nprobe)
-    queries.select(col(id).as("query_id"), toDouble(col(vec)).as("qv"))
-      .crossJoin(centroidArray(centroids))
-      .select(col("query_id"), col("qv"),
-        explode(cells).as("__cell"))
-      .select(col("query_id"), col("qv"), col("__cell.list_id").as("list_id"))
-  }
 
   /** The two frames that ARE an IVF index — (centroids: list_id, cvec)
     * and (assigned: neighbor_id, cv, list_id) — split out so they can be
@@ -841,8 +794,8 @@ object Similarity {
     // k-smallest of a union is the k-smallest of per-part k-smallests
     // under the total (neg, neighbor_id) order, and the kernel's
     // cosine is the CosineSimilarity loop bit-for-bit, so results are
-    // IDENTICAL to the row form ([[ivfScoreTopKRows]], kept as the
-    // executable spec SimilaritySpec diffs against). Block rows are
+    // IDENTICAL to the row form (SimilarityReference.ivfScoreTopKRows,
+    // the test-scope spec SimilaritySpec diffs against). Block rows are
     // cell-sized: safe under AutoNlist's ~64-vector cells, with cell
     // drift bounded by the ivfImbalance/compact machinery.
     val blocks = assigned.groupBy(col("list_id"))
@@ -854,29 +807,6 @@ object Similarity {
           col("qv"), col("__block"), col("query_id"), k)).as("__e"))
     explodeRanked(cellTops.groupBy(col("query_id"))
         .agg(bottomK(col("__e"), k).as("__tk")))
-      .select(col("query_id"), col("__t.neighbor_id").as("neighbor_id"),
-        (-col("__t.neg")).as("cos"), col("rank"))
-  }
-
-  /** The row-form scoring chain [[ivfScoreTopK]] replaced — one
-    * materialized candidate row per (query, cell vector), cosine as a
-    * per-row column, bounded bottom-k over all candidates. Kept as the
-    * executable EQUIVALENCE SPEC: SimilaritySpec pins block ≡ rows on
-    * a corpus with ties and self-pairs.
-    */
-  private[graft] def ivfScoreTopKRows(centroids: DataFrame,
-      assigned: DataFrame, queries: DataFrame, id: String, vec: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val probes = probeCells(queries, id, vec, centroids, nprobe)
-    val scored = assigned.join(probes, Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    // bounded two-phase rank (see bottomK): with corpus-scale query sets
-    // (mutualKnnGraph) a per-query window would shuffle every scored
-    // candidate; the bounded aggregation shuffles k per (query, task)
-    explodeRanked(scored.groupBy(col("query_id"))
-        .agg(bottomK(
-          struct((-col("cos")).as("neg"), col("neighbor_id")), k).as("__tk")))
       .select(col("query_id"), col("__t.neighbor_id").as("neighbor_id"),
         (-col("__t.neg")).as("cos"), col("rank"))
   }
@@ -1147,8 +1077,7 @@ object Similarity {
     */
   def nnDescent(corpus: DataFrame, id: String, vec: String, k: Int,
       nlist: Int = AutoNlist, nprobe: Int = 4, maxRounds: Int = 8,
-      delta: Double = 0.0, seed: Option[DataFrame] = None,
-      localWorkThreshold: Long = 50000L): DataFrame = {
+      delta: Double = 0.0, seed: Option[DataFrame] = None): DataFrame = {
     val v = graft.operators.Pinning.pin(
       corpus.select(col(id).as("__id"), toDouble(col(vec)).as("__v")))
     // count BEFORE the seed build: it resolves the AutoNlist default
@@ -1162,11 +1091,9 @@ object Similarity {
     // arrays with BIT-IDENTICAL doubles and tie rules (SimilaritySpec
     // pins local == forced-Spark lists per fixture). The per-round
     // Spark fixed cost (checkpoint + count + ~4 shuffles) dominates at
-    // fixture scale; the distributed loop below stays the forced-in-spec
-    // scale route (force with localWorkThreshold = 0). The gate is n·k —
-    // edge-list rows — because local memory and per-round work are both
-    // O(n·k²): at the 50k default and k=5 that is ≤10k vectors resident.
-    if (n * k <= localWorkThreshold) {
+    // fixture scale. The work unit is n·k — edge-list rows — because
+    // local memory and per-round work are both O(n·k²).
+    if (Crossover.fits(n * k, Crossover.NnDescentWork)) {
       // try/finally: an exception mid-collect must not leak the pinned
       // vector blocks for the session (ADVICE r12 — the batch operators'
       // unpin discipline applies to the local crossovers too)
@@ -1935,31 +1862,13 @@ object Similarity {
       .select(col("id"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
-  /** Bounded-collect gate shared by the small-graph crossovers of the
-    * iterative graph loops ([[labelPropagate]], [[corenessHIndex]],
-    * [[pagerankInt]]): one take() is both the probe and the collect (the
-    * edge upstream executes once), integral ids only, null endpoints
-    * decline. Returns the RAW (id1, id2) pair list as longs — each
-    * operator symmetrizes it locally, mirroring its own distributed
-    * union — or None when the graph must take the distributed route.
-    */
-  private def localPairs(edges: DataFrame, id1: String, id2: String,
-      localWorkThreshold: Long): Option[Array[(Long, Long)]] = {
-    val integral = Seq(id1, id2).forall(c => edges.schema(c).dataType match {
-      case _: org.apache.spark.sql.types.LongType |
-           _: org.apache.spark.sql.types.IntegerType |
-           _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    })
-    if (!integral || localWorkThreshold <= 0) return None
-    val cap = math.min(localWorkThreshold + 1, Int.MaxValue.toLong).toInt
-    val taken = edges
-      .select(col(id1).cast("long"), col(id2).cast("long")).take(cap)
-    if (taken.length > localWorkThreshold ||
-        taken.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(taken.map(r => (r.getLong(0), r.getLong(1))))
-  }
+  /** The graph loops' crossover: the RAW (id1, id2) pairs within the
+    * [[Crossover]] budget — each loop symmetrizes them like its own
+    * distributed union — or None for the distributed route. */
+  private def smallGraph(edges: DataFrame, id1: String, id2: String)
+      : Option[Array[(Long, Long)]] =
+    Crossover.take(edges.select(col(id1), col(id2)), Crossover.GraphPairs,
+      id1, id2).map(_.map(r => (r.getLong(0), r.getLong(1))))
 
   /** Symmetrized local adjacency: dst → srcs (both directions of every
     * pair, multiplicity preserved) — the in-memory mirror of the loops'
@@ -1976,9 +1885,9 @@ object Similarity {
   }
 
   def labelPropagate(edges: DataFrame, id1: String, id2: String,
-      rounds: Int, localWorkThreshold: Long = 2000000L): DataFrame = {
+      rounds: Int): DataFrame = {
     val idType = edges.schema(id1).dataType
-    val localOut = localPairs(edges, id1, id2, localWorkThreshold).map { pl =>
+    val localOut = smallGraph(edges, id1, id2).map { pl =>
       val adj = localAdjacency(pl)
       // labels start as self; each round every node takes the MODE of its
       // neighbors' labels over the ascending-sorted multiset, strict >
@@ -2073,12 +1982,12 @@ object Similarity {
     * Returns one row per vertex: (id, degree, coreness).
     */
   def corenessHIndex(edges: DataFrame, id1: String, id2: String,
-      rounds: Int, localWorkThreshold: Long = 2000000L): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"corenessHIndex needs rounds >= 1, got $rounds")
-    // small-graph crossover (see localPairs): degree + h-index rounds are
+    // small-graph crossover (see smallGraph): degree + h-index rounds are
     // integer arithmetic over the bounded adjacency — bit-identical to
     // the distributed fold by construction (SimilaritySpec pins it)
-    val localOut0 = localPairs(edges, id1, id2, localWorkThreshold).map { pl =>
+    val localOut0 = smallGraph(edges, id1, id2).map { pl =>
       val adj = localAdjacency(pl)
       var vals = scala.collection.mutable.LongMap.empty[Long]
       adj.foreach { case (n, srcs) => vals(n) = srcs.length.toLong }
@@ -2178,12 +2087,11 @@ object Similarity {
     * in an undirected graph has in-degree ≥ 1, so no dangling-mass term.
     */
   def pagerankInt(edges: DataFrame, id1: String, id2: String,
-      rounds: Int, scale: Long = 1000000L,
-      localWorkThreshold: Long = 2000000L): DataFrame = {
-    // small-graph crossover (see localPairs): the scaled-integer rounds
+      rounds: Int, scale: Long = 1000000L): DataFrame = {
+    // small-graph crossover (see smallGraph): the scaled-integer rounds
     // are exact commutative sums — order-free, so the local loop is
     // bit-identical to the distributed one (SimilaritySpec pins it)
-    val localOut = localPairs(edges, id1, id2, localWorkThreshold).map { pl =>
+    val localOut = smallGraph(edges, id1, id2).map { pl =>
       val adj = localAdjacency(pl)
       val base = scale * 15L / 100L
       var pr = scala.collection.mutable.LongMap.empty[Long]

@@ -53,7 +53,7 @@ class BestCellSpec extends SparkSpec {
           cents, nprobe)
         .select("query_id", "list_id")
         .as[(Long, Long)].collect().toSeq.sorted
-      val hof = Similarity.probeCellsHof(vecs, "vec_id", "embedding",
+      val hof = graft.pipeline.SimilarityReference.probeCellsHof(vecs, "vec_id", "embedding",
           cents, nprobe)
         .select("query_id", "list_id")
         .as[(Long, Long)].collect().toSeq.sorted

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import graft.operators.{Clustering, Pinning}
+import graft.operators.{Clustering, Crossover, Pinning}
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 
 /** Block-manager hygiene (VERDICT r8 #3): library operators must not
@@ -66,66 +66,70 @@ class CacheLifecycleSpec extends SparkSpec {
       bits = 4, tables = 2).count()
     Similarity.mutualKnnGraph(vecs, "vec_id", "embedding", k = 3,
       nlist = 4, nprobe = 2).count()
-    Similarity.nnDescent(vecs, "vec_id", "embedding", k = 3, nlist = 4,
-      nprobe = 2, maxRounds = 2).count()
-    Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 2).count()
-    Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 2).count()
     TextAnalysis.unigramSurprisal(docs, "doc_id", "text").count()
-    Clustering.connectedComponents(edgesFixture, localEdgeThreshold = 0).count()
-    Clustering.minimumSpanningForest(
-      edgesFixture.withColumn("weight", (col("src") + col("dst")) % 5),
-      localEdgeThreshold = 0).count()
+    // the fixtures fit every crossover budget: force the pinned loops
+    Crossover.distributed {
+      Similarity.nnDescent(vecs, "vec_id", "embedding", k = 3, nlist = 4,
+        nprobe = 2, maxRounds = 2).count()
+      Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 2).count()
+      Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 2).count()
+      Clustering.connectedComponents(edgesFixture).count()
+      Clustering.minimumSpanningForest(
+        edgesFixture.withColumn("weight", (col("src") + col("dst")) % 5)).count()
+    }
 
     assert(ColumnBridge.cacheManagerIsEmpty(spark),
       "an operator registered a session-lifetime CacheManager entry")
   }
 
   test("iterative loops free superseded rounds (block count stays ~flat)") {
-    val base = pinnedCount
+    // the fixtures fit every crossover budget: force the pinned loops
+    Crossover.distributed {
+      val base = pinnedCount
 
-    val cc = Clustering.connectedComponents(edgesFixture, localEdgeThreshold = 0)
-    cc.count()
-    assert(pinnedCount - base <= 1,
-      s"connectedComponents left ${pinnedCount - base} pinned RDDs (want <=1: final labels)")
-    Pinning.unpin(cc)
+      val cc = Clustering.connectedComponents(edgesFixture)
+      cc.count()
+      assert(pinnedCount - base <= 1,
+        s"connectedComponents left ${pinnedCount - base} pinned RDDs (want <=1: final labels)")
+      Pinning.unpin(cc)
 
-    val pr = Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 6)
-    pr.count()
-    assert(pinnedCount - base <= 1,
-      s"pagerankInt left ${pinnedCount - base} pinned RDDs (want <=1: final ranks)")
-    Pinning.unpin(pr)
+      val pr = Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 6)
+      pr.count()
+      assert(pinnedCount - base <= 1,
+        s"pagerankInt left ${pinnedCount - base} pinned RDDs (want <=1: final ranks)")
+      Pinning.unpin(pr)
 
-    val lp = Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 5)
-    lp.count()
-    assert(pinnedCount - base <= 1,
-      s"labelPropagate left ${pinnedCount - base} pinned RDDs (want <=1: final labels)")
-    Pinning.unpin(lp)
+      val lp = Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 5)
+      lp.count()
+      assert(pinnedCount - base <= 1,
+        s"labelPropagate left ${pinnedCount - base} pinned RDDs (want <=1: final labels)")
+      Pinning.unpin(lp)
 
-    val nnd = Similarity.nnDescent(vecsFixture, "vec_id", "embedding", k = 3,
-      nlist = 4, nprobe = 2, maxRounds = 4)
-    nnd.count()
-    assert(pinnedCount - base <= 1,
-      s"nnDescent left ${pinnedCount - base} pinned RDDs (want <=1: final lists)")
-    Pinning.unpin(nnd)
+      val nnd = Similarity.nnDescent(vecsFixture, "vec_id", "embedding", k = 3,
+        nlist = 4, nprobe = 2, maxRounds = 4)
+      nnd.count()
+      assert(pinnedCount - base <= 1,
+        s"nnDescent left ${pinnedCount - base} pinned RDDs (want <=1: final lists)")
+      Pinning.unpin(nnd)
 
-    val msf = Clustering.minimumSpanningForest(
-      edgesFixture.withColumn("weight", (col("src") * 7 + col("dst")) % 5),
-      localEdgeThreshold = 0)
-    msf.count()
-    assert(pinnedCount - base <= 1,
-      s"minimumSpanningForest left ${pinnedCount - base} pinned RDDs (want <=1: the forest)")
-    Pinning.unpin(msf)
+      val msf = Clustering.minimumSpanningForest(
+        edgesFixture.withColumn("weight", (col("src") * 7 + col("dst")) % 5))
+      msf.count()
+      assert(pinnedCount - base <= 1,
+        s"minimumSpanningForest left ${pinnedCount - base} pinned RDDs (want <=1: the forest)")
+      Pinning.unpin(msf)
 
-    val core = Similarity.corenessHIndex(edgesFixture, "src", "dst", rounds = 3)
-    core.count()
-    assert(pinnedCount - base <= 1,
-      s"corenessHIndex left ${pinnedCount - base} pinned RDDs (want <=1: the result)")
-    Pinning.unpin(core)
+      val core = Similarity.corenessHIndex(edgesFixture, "src", "dst", rounds = 3)
+      core.count()
+      assert(pinnedCount - base <= 1,
+        s"corenessHIndex left ${pinnedCount - base} pinned RDDs (want <=1: the result)")
+      Pinning.unpin(core)
 
-    // <= not ==: the ContextCleaner may concurrently GC stray blocks
-    // other suites' dropped results were holding at baseline time
-    assert(pinnedCount <= base,
-      "unpinning every returned frame must restore the baseline")
+      // <= not ==: the ContextCleaner may concurrently GC stray blocks
+      // other suites' dropped results were holding at baseline time
+      assert(pinnedCount <= base,
+        "unpinning every returned frame must restore the baseline")
+    }
   }
 
   test("round-9 edge branches: empty eager prefix join; zero-round loops " +
@@ -140,9 +144,11 @@ class CacheLifecycleSpec extends SparkSpec {
     // rounds = 0: the returned frame is LAZY over the pinned graph —
     // the unpin-inputs guard must NOT fire (a freed localCheckpoint is
     // unrecomputable, so a premature unpin would throw on this count)
-    val lp0 = Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 0)
+    // (forced distributed: on the driver-local path there is no pin)
+    val (lp0, pr0) = Crossover.distributed((
+      Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 0),
+      Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 0)))
     assert(lp0.count() > 0)
-    val pr0 = Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 0)
     assert(pr0.count() > 0)
   }
 

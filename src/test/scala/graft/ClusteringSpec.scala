@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Clustering, Profiles}
+import graft.operators.{Clustering, Crossover, Profiles}
 import org.apache.spark.sql.functions._
 
 class ClusteringSpec extends SparkSpec {
@@ -22,9 +22,10 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("connectedComponents: 256-chain converges in O(log n) rounds (pointer jumping)") {
-    // localEdgeThreshold = 0 forces the distributed path under test
+    // Crossover.distributed forces the distributed path under test
     val chain = (1L until 256L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = Clustering.connectedComponents(chain, maxIter = 15, localEdgeThreshold = 0)
+    val got = Crossover.distributed(
+        Clustering.connectedComponents(chain, maxIter = 15))
       .as[(Long, Long)].collect().toMap
     assert(got.size == 256 && got.values.toSet == Set(1L))
   }
@@ -37,7 +38,8 @@ class ClusteringSpec extends SparkSpec {
     val expected = Map(1L -> 1L, 5L -> 1L, 9L -> 9L)
     val local = Clustering.connectedComponents(edges, Some(nodes))
       .as[(Long, Long)].collect().toMap
-    val dist = Clustering.connectedComponents(edges, Some(nodes), localEdgeThreshold = 0)
+    val dist = Crossover.distributed(
+        Clustering.connectedComponents(edges, Some(nodes)))
       .as[(Long, Long)].collect().toMap
     assert(local == expected && dist == expected)
   }
@@ -47,17 +49,27 @@ class ClusteringSpec extends SparkSpec {
     val nodes = Seq(1L, 2L, 5L, 7L, 8L, 9L, 42L).toDF("node")
     val local = Clustering.connectedComponents(edges, Some(nodes))
       .as[(Long, Long)].collect().toMap
-    val dist = Clustering.connectedComponents(edges, Some(nodes), localEdgeThreshold = 0)
+    val dist = Crossover.distributed(
+        Clustering.connectedComponents(edges, Some(nodes)))
       .as[(Long, Long)].collect().toMap
     assert(local == dist)
     assert(local == Map(1L -> 1L, 2L -> 2L, 5L -> 2L, 9L -> 2L,
       7L -> 7L, 8L -> 7L, 42L -> 42L))
+    // empty edge list plus nodes: every node is its own component
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val emptyLocal = Clustering.connectedComponents(none, Some(nodes))
+      .as[(Long, Long)].collect().toMap
+    val emptyDist = Crossover.distributed(
+        Clustering.connectedComponents(none, Some(nodes)))
+      .as[(Long, Long)].collect().toMap
+    assert(emptyLocal == emptyDist)
+    assert(emptyLocal == Seq(1L, 2L, 5L, 7L, 8L, 9L, 42L).map(n => n -> n).toMap)
   }
 
   test("connectedComponents: throws instead of returning non-converged labels") {
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
-      Clustering.connectedComponents(chain, maxIter = 2, localEdgeThreshold = 0)
+      Crossover.distributed(Clustering.connectedComponents(chain, maxIter = 2))
     }
   }
 
@@ -247,7 +259,7 @@ class ClusteringSpec extends SparkSpec {
   test("primOrder: local, heap-triangle and mmap-spilled paths are " +
       "bit-identical") {
     // 60 distinct profiles. Default takes the LOCAL path (dictionary-
-    // coded matrix, no triangle); localWorkThreshold=0 forces the Spark
+    // coded matrix, no triangle); Crossover.distributed forces the Spark
     // fill; mmapThreshold=2 on top forces the spill store. All three must
     // produce the same order bit-for-bit (shared primSelect loop; the
     // distance kernels are pinned to the same float arithmetic).
@@ -256,9 +268,9 @@ class ClusteringSpec extends SparkSpec {
         (i % 3).toString, (i / 10).toString)))
       .toDF("iso", "profile")
     val local = Clustering.primOrder(f, "iso")
-    val heap = Clustering.primOrder(f, "iso", localWorkThreshold = 0)
-    val spilled = Clustering.primOrder(f, "iso", localWorkThreshold = 0,
-      mmapThreshold = 2)
+    val heap = Crossover.distributed(Clustering.primOrder(f, "iso"))
+    val spilled = Crossover.distributed(
+      Clustering.primOrder(f, "iso", mmapThreshold = 2))
     assert(local == heap && heap == spilled && local.length == 60)
   }
 
@@ -273,7 +285,7 @@ class ClusteringSpec extends SparkSpec {
       (5, Seq("1", "2", "4")))
       .toDF("iso", "profile")
     val local = Clustering.primOrder(f, "iso")
-    val spark = Clustering.primOrder(f, "iso", localWorkThreshold = 0)
+    val spark = Crossover.distributed(Clustering.primOrder(f, "iso"))
     assert(local == spark && local.length == 5)
   }
 
@@ -315,7 +327,7 @@ class ClusteringSpec extends SparkSpec {
       "Spark path, codes bit-identical") {
     // 40 profiles mixing exact dups, near-dups, missing ("0") and
     // wildcard ("N") loci — both distance kernels and both tie rules get
-    // exercised; localWorkThreshold=0 forces the distributed path
+    // exercised; Crossover.distributed forces the distributed path
     val f = (1 to 40).map { i =>
       val base = Seq((i % 6).toString, (i % 4).toString,
         (i % 3).toString, (i / 8).toString, (i % 2).toString)
@@ -326,14 +338,14 @@ class ClusteringSpec extends SparkSpec {
     val th = Seq(40.0, 70.0, 90.0)
     val incLocal = Clustering.assignLinCodes(f, "iso", th)
       .as[(Long, Seq[Int])].collect().toMap
-    val incSpark = Clustering.assignLinCodes(f, "iso", th,
-        localWorkThreshold = 0)
+    val incSpark = Crossover.distributed(
+        Clustering.assignLinCodes(f, "iso", th))
       .as[(Long, Seq[Int])].collect().toMap
     assert(incLocal == incSpark && incLocal.size == 40)
     val bulkLocal = Clustering.assignLinCodesBulk(f, "iso", th)
       .as[(Long, Seq[Int])].collect().toMap
-    val bulkSpark = Clustering.assignLinCodesBulk(f, "iso", th,
-        localWorkThreshold = 0)
+    val bulkSpark = Crossover.distributed(
+        Clustering.assignLinCodesBulk(f, "iso", th))
       .as[(Long, Seq[Int])].collect().toMap
     assert(bulkLocal == bulkSpark && bulkLocal.size == 40)
   }
@@ -365,17 +377,18 @@ class ClusteringSpec extends SparkSpec {
 
   test("minimumSpanningForest matches brute-force Kruskal on random graphs") {
     val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
+    // trial 0: the empty edge list
+    for (trial <- 0 to 3) {
       val n = 30
-      val es = (for {
+      val es = if (trial == 0) Seq.empty[(Long, Long, Long)] else (for {
         a <- 1 to n; b <- (a + 1) to n if rnd.nextDouble() < 0.15
       } yield (a.toLong, b.toLong, rnd.nextInt(10).toLong)).toSeq
       val got = Clustering.minimumSpanningForest(es.toDF("src", "dst", "weight"))
         .as[(Long, Long, Long)].collect().toSet
-      // distributed Borůvka path (localEdgeThreshold=0) must agree —
+      // distributed Borůvka path (Crossover.distributed) must agree —
       // the unique-MSF argument, exercised end-to-end
-      val gotDist = Clustering.minimumSpanningForest(
-          es.toDF("src", "dst", "weight"), localEdgeThreshold = 0L)
+      val gotDist = Crossover.distributed(
+          Clustering.minimumSpanningForest(es.toDF("src", "dst", "weight")))
         .as[(Long, Long, Long)].collect().toSet
       assert(got == gotDist, s"trial $trial: fast path != distributed")
       // local Kruskal under the same (weight, src, dst) total order
@@ -403,6 +416,19 @@ class ClusteringSpec extends SparkSpec {
       1L -> "((1:1,2:1):1,3:2);", // {1,2} formed at 1, merges 3 at level 2
       4L -> "(4:2,5:2);",
       9L -> "9;"))
+    // the per-level distributed components build the same strings, bit
+    // for bit — here and on a random graph with shared levels
+    val rnd = new scala.util.Random(3)
+    val randEdges = Seq.fill(40)((rnd.nextInt(30).toLong,
+      rnd.nextInt(30).toLong, 1 + rnd.nextInt(4))).toDF("src", "dst", "weight")
+    val randNodes = (0L until 32L).toDF("node")
+    for ((e, n) <- Seq((edges, nodes), (randEdges, randNodes))) {
+      val local = Clustering.singleLinkageNewick(e, n)
+        .as[(Long, String)].collect().toSeq.sorted
+      val dist = Crossover.distributed(Clustering.singleLinkageNewick(e, n))
+        .as[(Long, String)].collect().toSeq.sorted
+      assert(local == dist)
+    }
   }
 
   test("minimumSpanningForest: empty and single-edge inputs") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Clustering, Pinning}
+import graft.operators.{Clustering, Crossover, Pinning}
 import graft.pipeline.Similarity
 
 /** The round-pin strategy only decides WHERE iterative state lives
@@ -33,15 +33,20 @@ class PinningSpec extends SparkSpec {
     try body finally spark.conf.unset(Pinning.ConfKey)
   }
 
+  /** The loop operators under a strategy, forced onto their distributed
+    * (pinned-per-round) paths: the fixtures fit every crossover budget,
+    * and the driver-local paths pin nothing. */
+  private def withStrategyDistributed[A](s: String)(body: => A): A =
+    withStrategy(s)(Crossover.distributed(body))
+
   private val strategies = Seq("local", "reliable", "disk2")
 
   test("connectedComponents: identical labels under every pin strategy") {
     spark.conf.set(Pinning.DirKey,
       "target/pinning-spec-ckpt") // reliable mode's checkpoint dir
     val got = strategies.map { s =>
-      withStrategy(s) {
-        // force the distributed (iterative, pinned-per-round) path
-        Clustering.connectedComponents(edgesFixture, localEdgeThreshold = 0)
+      withStrategyDistributed(s) {
+        Clustering.connectedComponents(edgesFixture)
           .as[(Long, Long)].collect().toSet
       }
     }
@@ -52,7 +57,7 @@ class PinningSpec extends SparkSpec {
 
   test("pagerankInt + labelPropagate: identical under every pin strategy") {
     val got = strategies.map { s =>
-      withStrategy(s) {
+      withStrategyDistributed(s) {
         val pr = Similarity.pagerankInt(edgesFixture, "src", "dst", rounds = 4)
           .as[(Long, Long)].collect().toSet
         val lp = Similarity.labelPropagate(edgesFixture, "src", "dst", rounds = 3)
@@ -66,7 +71,7 @@ class PinningSpec extends SparkSpec {
 
   test("nnDescent to convergence: identical graph under every pin strategy") {
     val got = strategies.map { s =>
-      withStrategy(s) {
+      withStrategyDistributed(s) {
         Similarity.nnDescent(vecsFixture, "vec_id", "embedding", k = 3,
             nlist = 4, nprobe = 2, maxRounds = 4)
           .select(col("query_id"), col("neighbor_id"), col("rank"))

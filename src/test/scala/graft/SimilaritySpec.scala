@@ -1,6 +1,7 @@
 package graft
 
-import graft.pipeline.Similarity
+import graft.operators.Crossover
+import graft.pipeline.{Similarity, SimilarityReference}
 import org.apache.spark.sql.functions._
 
 /** ANN: cosine arithmetic, brute-force top-k exactness, LSH recall. */
@@ -173,9 +174,9 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Double, Long)].collect().toSeq.sorted
     val local = full(Similarity.nnDescent(emb, "vec_id", "embedding",
       k = 5, nlist = 32, nprobe = 2, maxRounds = 12, delta = 0.0))
-    val dist = full(Similarity.nnDescent(emb, "vec_id", "embedding",
-      k = 5, nlist = 32, nprobe = 2, maxRounds = 12, delta = 0.0,
-      localWorkThreshold = 0L))
+    val dist = full(Crossover.distributed(Similarity.nnDescent(emb,
+      "vec_id", "embedding", k = 5, nlist = 32, nprobe = 2, maxRounds = 12,
+      delta = 0.0)))
     assert(local == dist,
       "local descent must replay the distributed loop bit-identically")
     assert(local.nonEmpty)
@@ -204,9 +205,9 @@ class SimilaritySpec extends SparkSpec {
     val local = full(Similarity.nnDescent(emb, "vec_id", "embedding",
       k = 5, nlist = 32, nprobe = 2, maxRounds = 6, delta = 0.0,
       seed = Some(partial)))
-    val dist = full(Similarity.nnDescent(emb, "vec_id", "embedding",
-      k = 5, nlist = 32, nprobe = 2, maxRounds = 6, delta = 0.0,
-      seed = Some(partial), localWorkThreshold = 0L))
+    val dist = full(Crossover.distributed(Similarity.nnDescent(emb,
+      "vec_id", "embedding", k = 5, nlist = 32, nprobe = 2, maxRounds = 6,
+      delta = 0.0, seed = Some(partial))))
     assert(local == dist,
       "partial-seed local descent must replay the distributed loop")
     // the dropped ids re-enter as fresh-only query groups in both paths
@@ -230,8 +231,8 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val local = full(Similarity.mmrFromShortlist(short, emb, "vec_id",
       "embedding", k = 5))
-    val dist = full(Similarity.mmrFromShortlist(short, emb, "vec_id",
-      "embedding", k = 5, localWorkThreshold = 0L))
+    val dist = full(Crossover.distributed(Similarity.mmrFromShortlist(
+      short, emb, "vec_id", "embedding", k = 5)))
     assert(local == dist,
       "local greedy must replay the distributed rounds bit-identically")
     assert(local.size == 4 * 5)
@@ -397,11 +398,20 @@ class SimilaritySpec extends SparkSpec {
     for (mp <- Seq(1, 2, 3)) {
       val local = Similarity.dbscan(nodes, pairs, "id", minPts = mp)
         .as[(Long, Long, String, Long)].collect().sortBy(_._1).toSeq
-      val dist = Similarity.dbscan(nodes, pairs, "id", minPts = mp,
-          localWorkThreshold = 0L)
+      val dist = Crossover.distributed(
+          Similarity.dbscan(nodes, pairs, "id", minPts = mp))
         .as[(Long, Long, String, Long)].collect().sortBy(_._1).toSeq
       assert(local == dist, s"minPts=$mp: local $local vs dist $dist")
     }
+    // empty pair list plus nodes: every node is noise on both paths
+    val none = Seq.empty[(Long, Long)].toDF("id1", "id2")
+    val emptyLocal = Similarity.dbscan(nodes, none, "id", minPts = 1)
+      .as[(Long, Long, String, Long)].collect().sortBy(_._1).toSeq
+    val emptyDist = Crossover.distributed(
+        Similarity.dbscan(nodes, none, "id", minPts = 1))
+      .as[(Long, Long, String, Long)].collect().sortBy(_._1).toSeq
+    assert(emptyLocal == emptyDist)
+    assert(emptyLocal == (0L to 40L).map(n => (n, 0L, "noise", -1L)))
   }
 
   test("graph loops: driver-local crossover ≡ forced-distributed path " +
@@ -414,20 +424,20 @@ class SimilaritySpec extends SparkSpec {
       .toDF("id1", "id2")
     val lpL = Similarity.labelPropagate(edges, "id1", "id2", rounds = 3)
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    val lpD = Similarity.labelPropagate(edges, "id1", "id2", rounds = 3,
-        localWorkThreshold = 0L)
+    val lpD = Crossover.distributed(
+        Similarity.labelPropagate(edges, "id1", "id2", rounds = 3))
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(lpL == lpD)
     val chL = Similarity.corenessHIndex(edges, "id1", "id2", rounds = 4)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val chD = Similarity.corenessHIndex(edges, "id1", "id2", rounds = 4,
-        localWorkThreshold = 0L)
+    val chD = Crossover.distributed(
+        Similarity.corenessHIndex(edges, "id1", "id2", rounds = 4))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(chL == chD)
     val prL = Similarity.pagerankInt(edges, "id1", "id2", rounds = 3)
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    val prD = Similarity.pagerankInt(edges, "id1", "id2", rounds = 3,
-        localWorkThreshold = 0L)
+    val prD = Crossover.distributed(
+        Similarity.pagerankInt(edges, "id1", "id2", rounds = 3))
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(prL == prD)
   }
@@ -861,7 +871,7 @@ class SimilaritySpec extends SparkSpec {
           .as[(Long, Long, Double, Long)].collect().toSeq.sorted
       val block = rows4(Similarity.ivfScoreTopK(
         cents, assigned, vecs, "vec_id", "embedding", k, nprobe))
-      val rowsF = rows4(Similarity.ivfScoreTopKRows(
+      val rowsF = rows4(SimilarityReference.ivfScoreTopKRows(
         cents, assigned, vecs, "vec_id", "embedding", k, nprobe))
       assert(block == rowsF,
         s"block scoring must equal the row form (nlist=$nlist, " +
