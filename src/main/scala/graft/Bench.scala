@@ -26,10 +26,18 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { t =>
-      try Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    // Warm-up failures are reported, not dropped: a query that fails its
+    // warm-up and then passes a timed pass ran cold in that pass, so the
+    // artifact must say so. (name, exception class), tables as "table:<t>".
+    val warmupFailed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def warmup(name: String)(run: => Unit): Unit =
+      try run
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name failed: ${e.getClass.getName}")
+        warmupFailed += name -> e.getClass.getName
+      }
+    Tables.names.foreach(t =>
+      warmup(s"table:$t")(Tables.load(spark, sfDir, t).count()))
     // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (local profiling)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -49,9 +57,7 @@ object Bench {
     // verify dump spun on it for minutes).
     def exec(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
-    selected.foreach { case (_, fn) =>
-      try { exec(fn(spark, sfDir)) } catch { case _: Throwable => () }
-    }
+    selected.foreach { case (name, fn) => warmup(name)(exec(fn(spark, sfDir))) }
     // drain warm-up garbage so a mid-pass full GC doesn't land on one
     // unlucky query's wall time
     System.gc()
@@ -195,6 +201,9 @@ object Bench {
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val total = results.map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val warmupFailedJson = warmupFailed.map { case (n, e) =>
+      "{\"name\":\"" + n + "\",\"error\":\"" + e + "\"}"
+    }.mkString("[", ",", "]")
     // The driver keeps only a short TAIL of stdout and parses the JSON
     // line from it. 120+ queries no longer fit that tail (rounds 3-5 all
     // recorded "parsed": null), so the FULL per-query map goes to a file
@@ -247,7 +256,7 @@ object Bench {
       } catch { case _: Exception => "{}" }
     }
     val fullLine =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","mode":"steady-state-min2","n":${results.size},"failed":$failedJson,"drift":$driftJson,"regressed":$regressedJson,"rerun":$rerunJson,"notes":$notesJson,"queries":$fullJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","mode":"steady-state-min2","n":${results.size},"failed":$failedJson,"warmup_failed":$warmupFailedJson,"drift":$driftJson,"regressed":$regressedJson,"rerun":$rerunJson,"notes":$notesJson,"queries":$fullJson,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(fullPath), fullLine.getBytes("UTF-8"))
@@ -284,7 +293,7 @@ object Bench {
     val rm = results.toMap
     val qs = headline.flatMap(n => rm.get(n).map(v => "\"" + n + "\":" + f(v)))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","mode":"steady-state-min2","n":${results.size},"failed":$failedJson,"full":"$fullPath","queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","mode":"steady-state-min2","n":${results.size},"failed":$failedJson,"warmup_failed":$warmupFailedJson,"full":"$fullPath","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -28,9 +28,23 @@ object ProfileQueries extends QueryModule {
                    FROM lineitem GROUP BY 1, 2) d
              GROUP BY l_orderkey) g"""
 
-  private def wh(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Profiles.cachedWarehouse(s"$dir/full", Tables.load(s, dir, "lineitem"),
+  /** The session's profile warehouse over `dir`'s lineitem — of every
+    * isolate, or with `below = Some(n)` of the isolates with id < n only.
+    * A slice is its own memo entry, built from the filtered fact: the id
+    * filter commutes with the per-(isolate, locus) min-allele aggregation,
+    * so its rows equal the full warehouse's, and a bounded-taxa query
+    * (clustering, LIN codes, distance matrices: a few hundred isolates)
+    * never pays for the range-sorted cache of every isolate. Only the
+    * queries that read every isolate build the full warehouse.
+    */
+  private[graft] def wh(s: org.apache.spark.sql.SparkSession, dir: String,
+      below: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+    val li = Tables.load(s, dir, "lineitem")
+    val (key, fact) = below.fold((s"$dir/full", li))(n =>
+      (s"$dir/lt$n", li.filter(col("l_orderkey") < n)))
+    Profiles.cachedWarehouse(key, fact,
       "l_orderkey", "l_linenumber", col("l_suppkey"), NLoci)
+  }
 
   // The warehouse build itself (mv_scheme_<id>, sql/seqdef.sql:1155-1253):
   // one row per isolate with md5(profile) — the exact-lookup key.
@@ -100,7 +114,7 @@ object ProfileQueries extends QueryModule {
   private val j7ProfileDiff = Q(
     "j7_profile_diff",
     (s, dir) => {
-      val w = wh(s, dir).filter(col("l_orderkey") < 40)
+      val w = wh(s, dir, Some(40))
       val a = w.select(col("l_orderkey").as("iso1"), col("profile").as("p1"))
       val b = w.select(col("l_orderkey").as("iso2"), col("profile").as("p2"))
       // output is the bounded pair slice (<40 isolates → 780 rows): a
@@ -170,7 +184,7 @@ object ProfileQueries extends QueryModule {
   private val g1DistanceMatrix = Q(
     "g1_distance_matrix",
     (s, dir) => {
-      val w = wh(s, dir).filter(col("l_orderkey") < 150)
+      val w = wh(s, dir, Some(150))
       val sim = Profiles.similarityJoin(w, "l_orderkey", 1)
       sim.select(col("e1").as("iso1"), col("e2").as("iso2"),
           (lit(NLoci) - col("shared")).cast("long").as("dist"))

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-/** Child JVM of [[MemoLifecycleSpec]]: runs four memo-backed queries in
+/** Child JVM of [[MemoLifecycleSpec]]: runs five memo-backed queries in
   * session A, stops A's context, runs them again in a fresh session B,
   * and prints one JSON line with what it saw:
   *
@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   */
 object MemoLifecycleChild {
   val Queries = Seq("dedup_index_persisted", "scan_zonemap_prune",
-    "tokenizer_persisted", "g4_lincode")
+    "tokenizer_persisted", "g4_lincode", "s10_replicate_lincodes")
 
   private def session(): SparkSession = {
     val s = SparkSession.builder()

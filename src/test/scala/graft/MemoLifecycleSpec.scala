@@ -42,8 +42,9 @@ class MemoLifecycleSpec extends AnyFunSuite {
       assert(num("a_entries") > 0, json)
       assert(num("a_entries_after_stop") == 0, json)
       // one store per persisted memo: minhash index, zone-map layout,
-      // tokenizer artifact (g4_lincode's memo is a pin, no directory)
-      assert(num("a_dirs") == 3 && num("b_dirs") == 3, json)
+      // tokenizer artifact, s10's LIN-code replica (g4_lincode's memo is a
+      // pin, no directory)
+      assert(num("a_dirs") == 4 && num("b_dirs") == 4, json)
       assert(num("a_dirs_left") == 0 && num("b_dirs_left") == 0, json)
     } finally {
       FileUtils.deleteQuietly(tmp.toFile)

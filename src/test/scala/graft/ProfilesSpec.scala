@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.operators.Profiles
+import graft.queries.ProfileQueries
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** Scheme/profile engine semantics (SURVEY §2.3 J6-J8, §4.2 sentinel traps:
@@ -82,5 +86,44 @@ class ProfilesSpec extends SparkSpec {
     val none = Profiles.lookupByDesignations(wh, Map(3 -> Seq("4")))
       .select("iso").as[Int].collect().toSeq
     assert(none.isEmpty)
+  }
+
+  private val corpus = "/root/testdata/sf0.001"
+
+  test("an isolate-slice warehouse equals the full warehouse filtered, " +
+      "bit for bit") {
+    val full = ProfileQueries.wh(spark, corpus)
+    val minId = full.agg(min(col("l_orderkey"))).head().getAs[Number](0).intValue
+    for (n <- Seq(40, 150, 300, minId)) {
+      def sorted(df: org.apache.spark.sql.DataFrame) = rows(
+        df.select(col("l_orderkey"), col("profile"), col("profile_md5"))
+          .orderBy(col("l_orderkey")))
+      val slice = sorted(ProfileQueries.wh(spark, corpus, Some(n)))
+      assert(slice == sorted(full.filter(col("l_orderkey") < n)), s"bound $n")
+      assert(slice.isEmpty == (n == minId), s"bound $n")
+    }
+  }
+
+  test("bounded-taxa queries build their isolate slices, never the full " +
+      "warehouse") {
+    // a private copy of the corpus: no other suite of the shared session
+    // holds memo entries under its path
+    val tmp = Files.createTempDirectory("profiles-slices")
+    try {
+      Files.copy(Paths.get(s"$corpus/lineitem.parquet"),
+        tmp.resolve("lineitem.parquet"))
+      val dir = tmp.toString
+      val byName = queries.AllQueries.modules.flatMap(_.qs)
+        .map(q => q.name -> q).toMap
+      Seq("g3_single_linkage", "g2_burst", "g4_lincode_prim",
+        "s10_replicate_lincodes", "g4_lincode", "j5_lincode_prefix",
+        "lin_prefix_tree", "g5_nexus_roundtrip", "g1_distance_matrix",
+        "j7_profile_diff").foreach(q => byName(q).fn(spark, dir).collect())
+      def entries(prefix: String) =
+        SessionMemo.countPrefix(spark, "profiles.warehouse", prefix)
+      assert(entries(s"$dir/full") == 0)
+      assert(Seq(40, 150, 300).map(n => entries(s"$dir/lt$n")) == Seq(1, 1, 1))
+      assert(entries(s"$dir/") == 3)
+    } finally FileUtils.deleteQuietly(tmp.toFile)
   }
 }

@@ -36,9 +36,9 @@ object ScaleProbeG4 {
       val r = Runtime.getRuntime
       (r.totalMemory - r.freeMemory) >> 20
     }
-    def wh(cap: Int) = graft.operators.Profiles.cachedWarehouse(
-        s"$sfDir/full", Tables.load(spark, sfDir, "lineitem"),
-        "l_orderkey", "l_linenumber", col("l_suppkey"), 7)
+    // one full build filtered per cap: the probe times the assignment,
+    // not a warehouse build per cap
+    def wh(cap: Int) = queries.ProfileQueries.wh(spark, sfDir)
       .filter(col("l_orderkey") < cap)
     caps.foreach { cap =>
       val w = wh(cap)
