@@ -10,6 +10,11 @@ import scala.jdk.CollectionConverters._
   * reads, scan-path JIT) so per-query numbers measure the query, not
   * whichever query happens to run first; queries then run in sorted-name
   * order for run-to-run comparability.
+  *
+  * Usage: `./run.sh graft.Bench [outDir]`. The full per-query map goes to
+  * `outDir` (default: the working directory) as BENCH_FULL.json, or
+  * BENCH_ONLY.json for SPARK_GRAFT_ONLY runs; SPARK_GRAFT_BENCH_OUT names
+  * the file outright. Per-round archives are written and read next to it.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -124,6 +129,17 @@ object Bench {
     }
     val minOf2 = byName.collect { case (n, ts) if ts.nonEmpty => n -> ts.min }
     val failed = byName.collect { case (n, ts) if ts.isEmpty => n }
+    // Filtered SPARK_GRAFT_ONLY profiling runs get their own default
+    // output file: writing the 2-query map over BENCH_FULL.json loses the
+    // round's full sweep (it happened — an 11-query scale-probe run
+    // clobbered the 247-query artifact mid-round). The default directory
+    // is the first argument, else the working directory; the archive the
+    // regression check reads sits next to the output file.
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      java.nio.file.Paths.get(args.headOption.getOrElse("."))
+        .resolve(if (only.isEmpty) "BENCH_FULL.json" else "BENCH_ONLY.json")
+        .toAbsolutePath.normalize.toString)
+    val outDir = java.nio.file.Paths.get(fullPath).toAbsolutePath.getParent
     // Sweep-context outlier guard: in a 290-query session the min-of-2 can
     // still be 8-10x a query's isolated latency when BOTH timed passes hit
     // the same ambient debt (GC pressure from accumulated session state,
@@ -135,9 +151,8 @@ object Bench {
     // queries — if more than 8 regress 3x at once, that is ambient drift
     // the re-run would launder, not per-query artifacts.
     def priorArchive(): Map[String, Double] = try {
-      val dir = java.nio.file.Paths.get("/root/repo")
       val rx = "BENCH_FULL_r(\\d+)\\.json".r
-      val newest = java.nio.file.Files.list(dir).iterator().asScala
+      val newest = java.nio.file.Files.list(outDir).iterator().asScala
         .flatMap(p => rx.findFirstMatchIn(p.getFileName.toString)
           .map(m => m.group(1).toInt -> p))
         .toSeq.sortBy(-_._1).headOption.map(_._2)
@@ -211,13 +226,6 @@ object Bench {
     // (one flagship per operator family) + a pointer to the full map.
     val fullJson = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    // Filtered SPARK_GRAFT_ONLY profiling runs get their own default
-    // output file: writing the 2-query map over BENCH_FULL.json loses the
-    // round's full sweep (it happened — an 11-query scale-probe run
-    // clobbered the 247-query artifact mid-round).
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isEmpty) "/root/repo/BENCH_FULL.json"
-      else "/root/repo/BENCH_ONLY.json")
     val rerunJson = resultsWithProv.collect {
       case (n, _, Some((min2, third))) =>
         "\"" + n + "\":{\"min2\":" + f(min2) + ",\"postgc\":" + f(third) + "}"
@@ -247,8 +255,7 @@ object Bench {
     // stale into every later round's artifact. Absent/unreadable file →
     // empty notes.
     val notesJson = {
-      val p = java.nio.file.Paths.get(fullPath).toAbsolutePath.getParent
-        .resolve("tools").resolve("bench_notes.json")
+      val p = outDir.resolve("tools").resolve("bench_notes.json")
       try {
         val s = new String(java.nio.file.Files.readAllBytes(p),
           "UTF-8").trim
@@ -267,13 +274,12 @@ object Bench {
       // SPARK_GRAFT_ONLY profiling runs must NOT archive — a 2-query map
       // would clobber the round's full archive.
       if (only.isEmpty) {
-        val dir = java.nio.file.Paths.get(fullPath).toAbsolutePath.getParent
         val rx = "BENCH_r(\\d+)\\.json".r
-        val round = java.nio.file.Files.list(dir).iterator().asScala
+        val round = java.nio.file.Files.list(outDir).iterator().asScala
           .flatMap(p => rx.findFirstMatchIn(p.getFileName.toString))
           .map(_.group(1).toInt).foldLeft(0)(math.max) + 1
         java.nio.file.Files.write(
-          dir.resolve(f"BENCH_FULL_r$round%02d.json"), fullLine.getBytes("UTF-8"))
+          outDir.resolve(f"BENCH_FULL_r$round%02d.json"), fullLine.getBytes("UTF-8"))
       }
     } catch { case _: Throwable => () } // stdout line below still carries the headline
     val headline = Seq(

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Loaders for the driver corpus (TESTDATA.md): TPC-H-ish star schema +
   * `events` + `documents` + `embeddings`, one parquet per table under
@@ -9,6 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All engine queries read through here so that filter/projection pushdown
   * reaches the parquet scan (verify with `.explain("formatted")` →
   * `PushedFilters` / `ReadSchema`).
+  *
+  * Key convention: every table's FIRST column is its key (`r_regionkey`,
+  * `c_custkey`, `o_orderkey`, `event_id`, `doc_id`, …; for lineitem
+  * `l_orderkey`, the order/isolate key its rows join and group on), and
+  * the session cache hash-partitions each table on it. The cached relation
+  * then reports `HashPartitioning(key, defaultParallelism)` (under AQE, once
+  * the cache has run), so an aggregation on the key, or a join with another
+  * table cached on the same key, plans no exchange over the cached scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,14 +33,23 @@ object Tables {
   // SPARK_GRAFT_NO_CACHE=1 (e.g. when inputs exceed cluster memory).
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (sys.env.contains("SPARK_GRAFT_NO_CACHE")) loadUncached(spark, dir, name)
-    else SessionMemo(spark, "tables", s"$dir|$name")(
-      // repartition before caching: the cache preserves partitioning, and
-      // a one-row-group file is one partition — without this, every
-      // cached scan would still be serial. One shuffle at materialization
-      // buys full-width parallelism for every later query.
-      loadUncached(spark, dir, name)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache())
+    else {
+      val keyed = SessionMemo(spark, "tables", s"$dir|$name") {
+        // repartition before caching: the cache preserves partitioning,
+        // and a one-row-group file is one partition — without this, every
+        // cached scan would still be serial. One shuffle at
+        // materialization buys full-width parallelism for every later
+        // query; hashing it on the key lets key joins and aggregations
+        // reuse it, and needs no per-partition sort to make retries
+        // deterministic (spark.sql.execution.sortBeforeRepartition).
+        val df = loadUncached(spark, dir, name)
+        df.repartition(spark.sparkContext.defaultParallelism, col(df.columns.head))
+      }
+      // (re-)register on every load: spark.catalog.clearCache() drops the
+      // CacheManager entry but not the memo, and an unregistered table
+      // would re-read and re-shuffle its file in every later query
+      if (keyed.storageLevel == StorageLevel.NONE) keyed.cache() else keyed
+    }
 
   /** Direct parquet read, no session cache — the path a cluster job over
     * data that exceeds memory uses; filter/projection pushdown reaches the

@@ -479,10 +479,14 @@ object ZoneMaps {
     */
   def prunedRead(spark: SparkSession, dataDir: String, stats: DataFrame,
       ranges: Seq[ZoneRange]): (DataFrame, PruneReport) = {
-    val total = stats.count()
-    val files = surviving(stats, ranges)
+    // one job for both counts: every (file, overlap) row; a null overlap
+    // prunes, as it does in `surviving`'s filter
+    val overlaps = stats.select(col("file"), ranges.map(zoneOverlap).reduce(_ && _))
+      .collect()
+    val files = overlaps.collect { case r if !r.isNullAt(1) && r.getBoolean(1) =>
+      r.getString(0) }.sorted.toIndexedSeq
     (filesRead(spark, dataDir, files).filter(rangePredicate(ranges)),
-      PruneReport(total, files.length.toLong))
+      PruneReport(overlaps.length.toLong, files.length.toLong))
   }
 
   private def filesRead(spark: SparkSession, dataDir: String,

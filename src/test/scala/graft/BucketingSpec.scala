@@ -48,7 +48,7 @@ class BucketingSpec extends SparkSpec {
     // other partitions' files at all (PartitionFilters, not PushedFilters)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"))
-    val path = sys.props("java.io.tmpdir") + "/graft_test_part_docs"
+    val path = tempDir("part-docs").toString + "/docs"
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     val langs = docs.select(col("lang")).distinct().as[String].collect()
     assert(langs.length > 1, "fixture must have several languages")

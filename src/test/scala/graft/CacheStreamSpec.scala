@@ -26,7 +26,7 @@ class CacheStreamSpec extends SparkSpec {
     val b1 = Seq((1L, 10L), (1L, 20L), (2L, 5L))
     val b2 = Seq((2L, 7L), (3L, 1L))
     val b3 = Seq((1L, 2L), (3L, 4L), (3L, 8L))
-    val live = java.nio.file.Files.createTempDirectory("graft-cstream")
+    val live = tempDir("graft-cstream")
       .toString + "/cache"
 
     val stream = MemoryStream[(Long, Long)]
@@ -58,7 +58,7 @@ class CacheStreamSpec extends SparkSpec {
   test("restart from the checkpoint continues exactly-once (no double " +
       "count, no skip)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val live = java.nio.file.Files.createTempDirectory("graft-cstream3")
+    val live = tempDir("graft-cstream3")
       .toString + "/cache"
     val b1 = Seq((1L, 10L), (2L, 5L))
     val b2 = Seq((1L, 2L), (3L, 4L))
@@ -87,7 +87,7 @@ class CacheStreamSpec extends SparkSpec {
   test("a FRESH checkpoint lineage against a maintained livePath is " +
       "conservatively skipped (batchId restarts below the marker)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-cstream4")
+    val base = tempDir("graft-cstream4")
       .toString
     val live = base + "/cache"
     val s1 = MemoryStream[(Long, Long)]
@@ -141,7 +141,7 @@ class CacheStreamSpec extends SparkSpec {
       Seq((1L, 3L), (2L, 4L)),
       Seq((1L, 5L)),
       Seq((2L, 6L), (3L, 7L)))
-    val live = java.nio.file.Files.createTempDirectory("graft-cstream2")
+    val live = tempDir("graft-cstream2")
       .toString + "/cache"
     val stream = MemoryStream[(Long, Long)]
     val q = CacheStream.maintain(

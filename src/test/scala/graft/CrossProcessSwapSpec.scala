@@ -16,7 +16,7 @@ class CrossProcessSwapSpec extends SparkSpec {
 
   test("a second JVM hammering resolveLive sees zero torn reads across " +
       "150 cross-process pointer flips") {
-    val base = java.nio.file.Files.createTempDirectory("graft-xproc")
+    val base = tempDir("graft-xproc")
     val livePath = base.toString + "/cache"
     val flips = 150
 
@@ -50,7 +50,7 @@ class CrossProcessSwapSpec extends SparkSpec {
       "graft.PointerRaceReader", livePath)).toArray
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(false)
-    pb.redirectError(java.io.File.createTempFile("xproc-reader", ".err"))
+    pb.redirectError(tempFile("xproc-reader", ".err").toFile)
     val proc = pb.start()
     val out = new java.io.BufferedReader(
       new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))

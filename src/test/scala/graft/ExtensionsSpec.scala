@@ -51,7 +51,7 @@ class ExtensionsSpec extends SparkSpec {
     import spark.implicits._
     // a real scan source: a LocalRelation fixture would be constant-folded
     // (filter evaluated at optimize time) before the rewrite is observable
-    val dir = java.nio.file.Files.createTempDirectory("graft_lev").toString
+    val dir = tempDir("graft_lev").toString
     Seq(("kitten", "sitting"), ("abc", "abc"), ("abc", "xyzpq"),
       ("", "ab"), ("aaaa", "aa")).toDF("a", "b")
       .write.mode("overwrite").parquet(dir)

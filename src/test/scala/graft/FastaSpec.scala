@@ -7,7 +7,7 @@ class FastaSpec extends SparkSpec {
   import spark.implicits._
 
   test("write → read round trip preserves id, description, sequence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fasta").toString
+    val dir = tempDir("graft-fasta").toString
     val in = Seq(
       ("a1", "first allele", "ACGT" * 40),  // 160 chars: wraps at 60
       ("a2", "", "TTTT"),
@@ -32,7 +32,7 @@ class FastaSpec extends SparkSpec {
   }
 
   test("read parses headers without descriptions and multi-line sequences") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fasta2")
+    val dir = tempDir("graft-fasta2")
     java.nio.file.Files.writeString(dir.resolve("f.fa"),
       ">seq1\nACGT\nACGT\n>seq2 with desc\nTTTT\n")
     val got = Fasta.read(spark, dir.toString)
@@ -42,7 +42,7 @@ class FastaSpec extends SparkSpec {
   }
 
   test("writePartitioned: per-locus directory layout, one file per locus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fasta-part").toString
+    val dir = tempDir("graft-fasta-part").toString
     val alleles = Seq(
       ("abcZ_1", "abcZ", "ACGTACGT"), ("abcZ_2", "abcZ", "TTTTCCCC"),
       ("adk_1", "adk", "GGGGAAAA")).toDF("allele_id", "locus", "sequence")
@@ -60,7 +60,7 @@ class FastaSpec extends SparkSpec {
   }
 
   test("readPartitioned recovers the partition column with each record") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fasta-rp").toString
+    val dir = tempDir("graft-fasta-rp").toString
     val alleles = Seq(
       ("abcZ_1", "abcZ", "ACGTACGT"), ("abcZ_2", "abcZ", "TTTTCCCC"),
       ("adk_1", "adk", "GGGGAAAA")).toDF("allele_id", "locus", "sequence")

@@ -7,7 +7,7 @@ class FederationSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpLive(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-fed").toString
+    val d = tempDir("graft-fed").toString
     s"$d/$name"
   }
 

@@ -22,7 +22,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   private def live(name: String) =
-    java.nio.file.Files.createTempDirectory("graft-idx").toString + s"/$name"
+    tempDir("graft-idx").toString + s"/$name"
 
   test("served index answers bit-identically to the in-session build") {
     val corpus = vecs(200, seed = 7)

@@ -33,8 +33,7 @@ class IndexStreamSpec extends SparkSpec {
     val chunks = deltaIds.grouped(10).toSeq
 
     // streaming path
-    val liveS = java.nio.file.Files.createTempDirectory("graft-ivfs")
-      .toString + "/ivf"
+    val liveS = tempDir("graft-ivfs").toString + "/ivf"
     IndexStore.saveIvf(base, "vec_id", "embedding", nlist = 6, liveS)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[Double])]
@@ -50,8 +49,7 @@ class IndexStreamSpec extends SparkSpec {
     } finally q.stop()
 
     // batch-fold path (the stream_ivf_maintain query shape)
-    val liveF = java.nio.file.Files.createTempDirectory("graft-ivff")
-      .toString + "/ivf"
+    val liveF = tempDir("graft-ivff").toString + "/ivf"
     IndexStore.saveIvf(base, "vec_id", "embedding", nlist = 6, liveF)
     chunks.foreach(c => IndexStream.appendBatch(
       vecs(c, seed = 3), "vec_id", "embedding", liveF))
@@ -88,8 +86,7 @@ class IndexStreamSpec extends SparkSpec {
       k = 6, dim = 8, iters = 2)
 
     // streaming path: compaction runs IN-LINE inside the maintainer
-    val liveS = java.nio.file.Files.createTempDirectory("graft-ivfsc")
-      .toString + "/ivf"
+    val liveS = tempDir("graft-ivfsc").toString + "/ivf"
     IndexStore.saveIvf(base, "vec_id", "embedding", nlist = 6, liveS)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, Seq[Double])]
@@ -105,8 +102,7 @@ class IndexStreamSpec extends SparkSpec {
     } finally q.stop()
 
     // batch path: fold the appends, compact once at the end
-    val liveB = java.nio.file.Files.createTempDirectory("graft-ivfbc")
-      .toString + "/ivf"
+    val liveB = tempDir("graft-ivfbc").toString + "/ivf"
     IndexStore.saveIvf(base, "vec_id", "embedding", nlist = 6, liveB)
     chunks.foreach(c => IndexStream.appendBatch(
       vecs(c, seed = 7), "vec_id", "embedding", liveB))
@@ -153,8 +149,7 @@ class IndexStreamSpec extends SparkSpec {
         "doc_id", "text", shingleN = 2, k = 32, bands = 8,
         minEstJaccard = 0.3, hasher = Dedup.portableShingleHashes)
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
-    def tmp(t: String) = java.nio.file.Files
-      .createTempDirectory(s"graft-$t").toString + "/mh"
+    def tmp(t: String) = tempDir(s"graft-$t").toString + "/mh"
 
     // streaming path
     val liveS = tmp("mhs"); build(liveS)
@@ -197,8 +192,7 @@ class IndexStreamSpec extends SparkSpec {
 
   test("restart from the checkpoint neither re-appends nor skips") {
     val base = vecs(100L to 179L, seed = 5)
-    val live = java.nio.file.Files.createTempDirectory("graft-ivfr")
-      .toString + "/ivf"
+    val live = tempDir("graft-ivfr").toString + "/ivf"
     IndexStore.saveIvf(base, "vec_id", "embedding", nlist = 4, live)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val s1 = MemoryStream[(Long, Seq[Double])]

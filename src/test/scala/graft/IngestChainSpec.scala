@@ -66,7 +66,7 @@ class IngestChainSpec extends SparkSpec {
 
   test("arrival-ordered micro-batches == one-shot batch for the full " +
       "ingest chain") {
-    val live = java.nio.file.Files.createTempDirectory("graft-ingest")
+    val live = tempDir("graft-ingest")
       .toString + "/mh"
     IndexStore.saveMinhash(baseDocs, "doc_id", "text",
       shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,

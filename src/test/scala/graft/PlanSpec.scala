@@ -11,9 +11,26 @@ class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The query's executed plan text with every `InMemoryRelation` printed
+    * as a leaf: the cached relation's nested plan (its own, already
+    * materialized scan and exchange) is cut, so assertions count only the
+    * query's own operators — the same view perfbench's plan counts take.
+    */
   private def planOf(name: String): String = {
-    val df = AllQueries.queries(name)(spark, dir)
-    df.queryExecution.executedPlan.toString
+    val plan = AllQueries.queries(name)(spark, dir).queryExecution.executedPlan
+    // depth of a tree line = column where the node text starts, after the
+    // ":", "|", "+-" and space drawing characters
+    def depth(l: String): Int = l.indexWhere(c => !" :|+-".contains(c))
+    val out = new StringBuilder
+    var cut = Int.MaxValue
+    for (l <- plan.toString.linesIterator) {
+      val d = depth(l)
+      if (d <= cut) {
+        cut = if (l.startsWith("InMemoryRelation", d)) d else Int.MaxValue
+        out.append(l).append('\n')
+      }
+    }
+    out.toString
   }
 
   // The session-cached Tables.load path scans an InMemoryRelation, so
@@ -84,9 +101,7 @@ class PlanSpec extends SparkSpec {
     // BEFORE aggregating (RangePartitioning satisfies the groupBy's
     // ClusteredDistribution); a trailing orderBy would add a second
     // exchange AND re-execute the aggregation for range sampling
-    // count only above the InMemoryTableScan — the cached relation's
-    // nested plan text carries its own (already materialized) exchange
-    val plan = planOf("g6_presence_matrix").split("InMemoryTableScan")(0)
+    val plan = planOf("g6_presence_matrix")
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(exchanges == 1, s"expected exactly 1 exchange, got $exchanges:\n$plan")
     assert(plan.contains("rangepartitioning"),
@@ -148,10 +163,8 @@ class PlanSpec extends SparkSpec {
 
   test("mm_tile: 2D patch gather is a narrow plan — no shuffle before the sort") {
     val plan = planOf("mm_tile")
-    // the only allowed shuffles: the presentation orderBy (range) and the
-    // cached source's own repartition (round-robin, inside
-    // InMemoryRelation); the tiling itself (explode + aggregate-concat)
-    // must add NO hash exchange
+    // the only allowed shuffle is the presentation orderBy (range); the
+    // tiling itself (explode + aggregate-concat) must add NO hash exchange
     assert(!plan.contains("Exchange hashpartitioning"),
       s"tiling must not shuffle:\n${plan.take(3000)}")
     assert("Exchange rangepartitioning".r.findAllIn(plan).size == 1,

@@ -108,7 +108,7 @@ class ProfilesSpec extends SparkSpec {
       "warehouse") {
     // a private copy of the corpus: no other suite of the shared session
     // holds memo entries under its path
-    val tmp = Files.createTempDirectory("profiles-slices")
+    val tmp = tempDir("profiles-slices")
     try {
       Files.copy(Paths.get(s"$corpus/lineitem.parquet"),
         tmp.resolve("lineitem.parquet"))

@@ -103,7 +103,7 @@ class SkewCacheSpec extends SparkSpec {
   }
 
   test("fullSwap: readers see complete snapshots across refreshes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-swap").toString + "/cache"
+    val dir = tempDir("graft-swap").toString + "/cache"
     CacheRefresh.fullSwap(Seq((1, "v1")).toDF("id", "v"), dir)
     val live1 = CacheRefresh.resolveLive(spark, dir)
     assert(spark.read.parquet(live1).as[(Int, String)].collect().toSeq == Seq((1, "v1")))

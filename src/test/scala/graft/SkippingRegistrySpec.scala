@@ -12,7 +12,7 @@ class SkippingRegistrySpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-reg").toString + "/data"
+    tempDir("graft-reg").toString + "/data"
 
   private def writeRows(dir: String, rows: Seq[(Long, Long, String)],
       parts: Int = 8, mode: String = "overwrite"): Unit =

@@ -86,7 +86,7 @@ class SourcesSpec extends SparkSpec {
       (2L, "uri://c2", "deadbeef"), // recorded, stale → flagged
       (3L, "uri://c3", null))       // never fetched before → passes
       .toDF("seqbin_id", "uri", "checksum")
-    val live = java.nio.file.Files.createTempDirectory("graft-rc").toString + "/contigs"
+    val live = tempDir("graft-rc").toString + "/contigs"
     RemoteContigs.materialize(refs, "uri", "checksum", live)
     val out = RemoteContigs.read(spark, live)
       .select("seqbin_id", "checksum_ok").as[(Long, Boolean)].collect().toMap
@@ -224,7 +224,7 @@ class SourcesSpec extends SparkSpec {
     // archives are a pure function of the entries
     assert(java.util.Arrays.equals(bytes, WebDataset.tarBytes(entries)))
     // the real `tar` reads our archives (interop, not just self-consistency)
-    val f = java.nio.file.Files.createTempFile("graft_wds", ".tar")
+    val f = tempFile("graft_wds", ".tar")
     java.nio.file.Files.write(f, bytes)
     val listed = new java.io.BufferedReader(new java.io.InputStreamReader(
       new ProcessBuilder("tar", "-tf", f.toString).start().getInputStream))
@@ -245,7 +245,7 @@ class SourcesSpec extends SparkSpec {
         .as("es"))
       .groupBy(col("shard"))
       .agg(sort_array(flatten(collect_list(col("es")))).as("entries"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_wds_rt").toString
+    val dir = tempDir("graft_wds_rt").toString
     WebDataset.write(entries, "shard", "entries", dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".tar")) == 4)
     val back = WebDataset.read(spark, dir)

@@ -1,10 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per JVM via getOrCreate). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -19,4 +23,24 @@ trait SparkSpec extends AnyFunSuite {
 
   def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  // One temp root per suite: every spec directory and file goes under it,
+  // and afterAll deletes the whole tree.
+  private var tmpRoot: Option[Path] = None
+
+  /** A fresh directory under this suite's temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  /** A fresh file under this suite's temp root. */
+  def tempFile(prefix: String, suffix: String): Path =
+    Files.createTempFile(root, prefix, suffix)
+
+  private def root: Path = synchronized {
+    if (tmpRoot.isEmpty) tmpRoot = Some(Files.createTempDirectory("graft-spec-"))
+    tmpRoot.get
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally synchronized(tmpRoot.foreach(p => FileUtils.deleteQuietly(p.toFile)))
 }

@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(
       batchIn.schema.filter(f => Set("user_id", "value")(f.name)))
     // the streaming file source monitors a DIRECTORY; stage the single file
-    val stage = java.nio.file.Files.createTempDirectory("graft-stream-test")
+    val stage = tempDir("graft-stream-test")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       stage.resolve("events.parquet"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class TreeExportSpec extends SparkSpec {
   import spark.implicits._
 
-  private val tmp = sys.props("java.io.tmpdir")
+  private lazy val tmp = tempDir("tree-export").toString
 
   test("nexus roundtrip: hand matrix with default for absent pairs") {
     val pairs = Seq((1L, 2L, 3L), (1L, 3L, 5L)) // (2,3) absent → default 7

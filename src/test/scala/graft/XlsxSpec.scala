@@ -82,7 +82,7 @@ class XlsxSpec extends SparkSpec {
   test("sharded write + read reassembles the table exactly") {
     val df = (1L to 57L).map(i => (i % 3, i, s"name_$i", i * 10))
       .toDF("shard", "id", "name", "v")
-    val dir = java.nio.file.Files.createTempDirectory("xlsx_spec").toString
+    val dir = tempDir("xlsx_spec").toString
     Xlsx.write(df, "shard", Seq("id"), dir)
     assert(new java.io.File(dir).list().count(_.endsWith(".xlsx")) == 3)
     val back = Xlsx.read(spark, dir)

@@ -12,8 +12,7 @@ class ZoneMapsSpec extends SparkSpec {
   import spark.implicits._
 
   private def layout(rows: Seq[(Long, Long, String)], parts: Int = 8) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     rows.toDF("id", "v", "tag")
       .repartitionByRange(parts, col("v"), col("id"))
       .write.parquet(dir)
@@ -56,8 +55,7 @@ class ZoneMapsSpec extends SparkSpec {
 
   test("null zones: an all-null file prunes, a mixed file survives with " +
       "its non-null matches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     // three explicit files: all-null, mixed, all-in-range
     Seq((1L, None: Option[Long], "n"), (2L, None, "n"))
       .toDF("id", "v", "tag").coalesce(1).write.parquet(dir)
@@ -149,11 +147,10 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("appendStats scans only the new files and equals a full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     (0L until 100L).map(i => (i, i * 2, "a")).toDF("id", "v", "tag")
       .repartitionByRange(4, col("v")).write.parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
     // new files land (append); refresh incrementally
@@ -174,12 +171,11 @@ class ZoneMapsSpec extends SparkSpec {
 
   test("appendStats migrates a pre-drift artifact by full rebuild: no " +
       "AnalysisException, no silently-pruning null zones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     (0L until 100L).map(i => (i, i * 2, s"TAG${i % 7}"))
       .toDF("id", "v", "tag")
       .repartitionByRange(4, col("v")).write.parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     // simulate an artifact published by an OLDER statsAggs: no nulls_
     // columns, raw-cased string zones under min_/max_ names
@@ -215,11 +211,10 @@ class ZoneMapsSpec extends SparkSpec {
 
   test("crash window: files appended without a stats refresh are KEPT by " +
       "pruneForClauses — prune never decides") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     (0L until 100L).map(i => (i, i * 2, "a")).toDF("id", "v", "tag")
       .repartitionByRange(4, col("v")).write.parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
     // the appendFiles crash window: data committed, refresh never ran
@@ -254,7 +249,7 @@ class ZoneMapsSpec extends SparkSpec {
     import graft.operators.Predicates
     val rows = (0L until 400L).map(i => (i, i % 97 * 10, s"t${i % 3}"))
     val dir = layout(rows)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
     val lay = ZoneMaps.Layout(dir, statsLive = Some(statsPath))
@@ -309,7 +304,7 @@ class ZoneMapsSpec extends SparkSpec {
     import graft.operators.Predicates
     val rows = (0L until 400L).map(i => (i, i % 97 * 10, s"t${i % 3}"))
     val dir = layout(rows)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
@@ -344,13 +339,12 @@ class ZoneMapsSpec extends SparkSpec {
     // three columns carry tight per-file zones: the grouped clause
     // (tag|alt = t1) contributes its members' units to the survivor
     // union next to the provenance arm's
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     (0L until 400L).map(i => (i, i, s"t${i / 50}", s"a${i / 80}"))
       .toDF("id", "v", "tag", "alt")
       .repartitionByRange(8, col("v"), col("id"))
       .write.parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(
       ZoneMaps.buildStats(spark, dir, Seq("v", "tag", "alt")), statsPath)
@@ -396,7 +390,7 @@ class ZoneMapsSpec extends SparkSpec {
     // v-ordered layout: id zones span every file, only the Bloom prunes
     val rows = (0L until 400L).map(i => (i, (i * 37) % 400, s"t${i % 3}"))
     val dir = layout(rows)
-    val base = java.nio.file.Files.createTempDirectory("graft-zm").toString
+    val base = tempDir("graft-zm").toString
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")),
       s"$base/stats")
     ZoneMaps.saveStats(ZoneMaps.buildBloomStats(spark, dir, "id"),
@@ -432,8 +426,7 @@ class ZoneMapsSpec extends SparkSpec {
       "the raw min/max must not be lost, and ci equality skips files") {
     import graft.api.QueryCompiler._
     import graft.operators.Predicates
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     // two explicit files. File 1's RAW range is ["Banana", "cherry"]
     // (uppercase sorts before lowercase in binary order), so a raw-zone
     // probe for 'APPLE' ('apple' upper-cased) would fall OUTSIDE it and
@@ -443,7 +436,7 @@ class ZoneMapsSpec extends SparkSpec {
       .toDF("id", "name", "v").coalesce(1).write.parquet(dir)
     Seq((4L, "xenon", 40L), (5L, "Yttrium", 50L))
       .toDF("id", "name", "v").coalesce(1).write.mode("append").parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("name")),
       statsPath)
@@ -462,8 +455,7 @@ class ZoneMapsSpec extends SparkSpec {
       "after the prefix survives, a non-ASCII prefix declines") {
     import graft.api.QueryCompiler._
     import graft.operators.Predicates
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     val emoji = new String(Character.toChars(0x1F600))
     // one file whose only AB-prefixed value continues with an astral
     // character: in UTF-8 byte order "AB😀X" > "AB￿", so a CLOSED
@@ -472,7 +464,7 @@ class ZoneMapsSpec extends SparkSpec {
       .toDF("id", "name").coalesce(1).write.parquet(dir)
     Seq((3L, "zz1"), (4L, "zz2"))
       .toDF("id", "name").coalesce(1).write.mode("append").parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("name")),
       statsPath)
@@ -497,15 +489,14 @@ class ZoneMapsSpec extends SparkSpec {
       "other quarters' files and rows match the plain filter") {
     import graft.api.QueryCompiler._
     import graft.operators.Predicates
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm").toString +
-      "/data"
+    val dir = tempDir("graft-zm").toString + "/data"
     val days = (0 until 360).map(d =>
       (d.toLong, java.sql.Date.valueOf(
         java.time.LocalDate.of(1995, 1, 1).plusDays(d.toLong))))
     days.toDF("id", "day")
       .repartitionByRange(6, col("day"), col("id"))
       .write.parquet(dir)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("day")),
       statsPath)
@@ -528,7 +519,7 @@ class ZoneMapsSpec extends SparkSpec {
       "stream session holds at most one live entry per artifact") {
     val rows = (0L until 60L).map(i => (i, i, "t"))
     val dir = layout(rows, parts = 2)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     (1 to 4).foreach { _ =>
       ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")),
@@ -543,7 +534,7 @@ class ZoneMapsSpec extends SparkSpec {
       "refresh flips atomically") {
     val rows = (0L until 100L).map(i => (i, i * 3, "t"))
     val dir = layout(rows, parts = 4)
-    val statsPath = java.nio.file.Files.createTempDirectory("graft-zm")
+    val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     val built = ZoneMaps.buildStats(spark, dir, Seq("v"))
     ZoneMaps.saveStats(built, statsPath)
