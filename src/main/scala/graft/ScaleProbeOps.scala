@@ -150,9 +150,11 @@ object ScaleProbeOps {
           col("a.bucket") === col("b.bucket") &&
           col("a.__id") < col("b.__id"))
         .select(col("a.__id"), col("b.__id")).distinct().count()
-      val result = graft.pipeline.Dedup.minhashLsh(docs, "doc_id", "text",
+      val pairs = graft.pipeline.Dedup.minhashLsh(docs, "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
-        hasher = graft.pipeline.Dedup.portableShingleHashes).count()
+        hasher = graft.pipeline.Dedup.portableShingleHashes)
+      val result = pairs.count()
+      graft.operators.Pinning.unpin(pairs)
       graft.operators.Pinning.unpin(sigs)
       s""""expanded_bucket_pairs":$expanded,"distinct_candidates":$candidates,"result_pairs":$result"""
     }

@@ -5,7 +5,8 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one session artifact cache. Every value the engine keeps past a
   * single call — cached corpus tables, profile warehouses, trained models,
@@ -72,6 +73,19 @@ object SessionMemo {
     val slot = entries.computeIfAbsent(k, _ => new Slot)
     try slot.get(build).asInstanceOf[T]
     catch { case t: Throwable => entries.remove(k, slot); throw t }
+  }
+
+  /** A memoized frame served from the CacheManager: the entry keeps the
+    * uncached frame `build` returns, and every call registers it again
+    * when its cache entry is gone. `spark.catalog.clearCache()` drops
+    * CacheManager entries but not memos; without the re-registration a
+    * memo would keep serving an unregistered frame, and every later
+    * query would recompute the whole build inline.
+    */
+  def cached(spark: SparkSession, namespace: String, key: String)(
+      build: => DataFrame): DataFrame = {
+    val df = apply(spark, namespace, key)(build)
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
   }
 
   /** Drops every session's entries in `namespace` whose key starts with

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
 /** Loaders for the driver corpus (TESTDATA.md): TPC-H-ish star schema +
   * `events` + `documents` + `embeddings`, one parquet per table under
@@ -31,24 +30,19 @@ object Tables {
   // decode of lineitem. Caching once per (session, dir, table) is the same
   // posture as the reference's scheme/dataset caches; disable with
   // SPARK_GRAFT_NO_CACHE=1 (e.g. when inputs exceed cluster memory).
+  // SessionMemo.cached registers the table again after a clearCache().
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (sys.env.contains("SPARK_GRAFT_NO_CACHE")) loadUncached(spark, dir, name)
-    else {
-      val keyed = SessionMemo(spark, "tables", s"$dir|$name") {
-        // repartition before caching: the cache preserves partitioning,
-        // and a one-row-group file is one partition — without this, every
-        // cached scan would still be serial. One shuffle at
-        // materialization buys full-width parallelism for every later
-        // query; hashing it on the key lets key joins and aggregations
-        // reuse it, and needs no per-partition sort to make retries
-        // deterministic (spark.sql.execution.sortBeforeRepartition).
-        val df = loadUncached(spark, dir, name)
-        df.repartition(spark.sparkContext.defaultParallelism, col(df.columns.head))
-      }
-      // (re-)register on every load: spark.catalog.clearCache() drops the
-      // CacheManager entry but not the memo, and an unregistered table
-      // would re-read and re-shuffle its file in every later query
-      if (keyed.storageLevel == StorageLevel.NONE) keyed.cache() else keyed
+    else SessionMemo.cached(spark, "tables", s"$dir|$name") {
+      // repartition before caching: the cache preserves partitioning,
+      // and a one-row-group file is one partition — without this, every
+      // cached scan would still be serial. One shuffle at
+      // materialization buys full-width parallelism for every later
+      // query; hashing it on the key lets key joins and aggregations
+      // reuse it, and needs no per-partition sort to make retries
+      // deterministic (spark.sql.execution.sortBeforeRepartition).
+      val df = loadUncached(spark, dir, name)
+      df.repartition(spark.sparkContext.defaultParallelism, col(df.columns.head))
     }
 
   /** Direct parquet read, no session cache — the path a cluster job over

@@ -66,6 +66,11 @@ object Pinning {
     * also holds a CacheManager entry that persists until `unpin` (or
     * `spark.catalog.clearCache()`), so long-running disk2 sessions that
     * discard many results without unpinning will accumulate entries.
+    * That reclaiming holds only for results that are dropped: a pin held
+    * by a [[graft.SessionMemo]] entry lives until the context stops, and
+    * so does every earlier pin its lineage still reads. An operator
+    * whose result may be memoized pins the result and then unpins its
+    * intermediate pins (`Dedup.minhashLsh` releases its signatures).
     */
   def pin(df: DataFrame): DataFrame = mode(df) match {
     case "local" => df.localCheckpoint()

@@ -42,11 +42,10 @@ object Profiles {
     // key range over all partitions and defeats batch pruning. Same move
     // as clustering a materialized view on its primary key; one extra
     // exchange at build time, once per session.
-    graft.SessionMemo(fact.sparkSession, "profiles.warehouse", key)(
+    graft.SessionMemo.cached(fact.sparkSession, "profiles.warehouse", key)(
       warehouse(fact, entity, locus, allele, nLoci)
         .repartitionByRange(col(entity))
-        .sortWithinPartitions(col(entity))
-        .cache())
+        .sortWithinPartitions(col(entity)))
 
   /** The (profile_md5 → st) numbering dimension over a warehouse —
     * memoized BESIDE the warehouse it derives from: ST numbering is a
@@ -58,10 +57,10 @@ object Profiles {
     */
   def cachedStDim(key: String, warehouse: DataFrame,
       entity: String): DataFrame =
-    graft.SessionMemo(warehouse.sparkSession, "profiles.st_dim", key) {
+    graft.SessionMemo.cached(warehouse.sparkSession, "profiles.st_dim", key) {
       val defs = warehouse.groupBy(col("profile_md5"))
         .agg(min(col(entity)).as("first_iso"))
-      Numbering.numberBySort(defs, "first_iso", "st").cache()
+      Numbering.numberBySort(defs, "first_iso", "st")
     }
 
   /** Build the profile warehouse from a long designation fact.

@@ -108,6 +108,11 @@ object Dedup {
   /** Full MinHash+LSH near-dup candidate pipeline:
     * docs(id, text) → candidate pairs (id1 < id2) with estimated jaccard
     * (signature agreement fraction) >= minEstJaccard.
+    *
+    * Eager: the pairs are computed before this returns, and the result is
+    * a materialized [[graft.operators.Pinning]] pin that the CALLER owns
+    * (`Pinning.unpin` frees it). The signatures it was built from are
+    * already released, so the pin holds only the pair rows.
     */
   def minhashLsh(
       docs: DataFrame,
@@ -122,7 +127,8 @@ object Dedup {
     val rows = k / bands
     // signatures once, pinned per call: reused by the band join and the
     // final estimate join (signatures are k longs per doc — small);
-    // GC-freed with the result, never a session-lifetime CacheManager row
+    // released below once the pairs are pinned, never a session-lifetime
+    // CacheManager row
     val sigs = graft.operators.Pinning.pin(docs
       .select(col(id).as("__id"), shingles(col(text), shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -147,14 +153,18 @@ object Dedup {
     val pairs = buckets.select(explode(bucketPairs).as("p"))
       .select(col("p.id1"), col("p.id2"))
       .distinct()
-    pairs
+    // pin the result, then release the signatures: the pin no longer
+    // reads them, so a memoized result does not keep them alive
+    val result = graft.operators.Pinning.pin(pairs
       .join(sigs.select(col("__id").as("id1"), col("sig").as("sig1")), Seq("id1"))
       .join(sigs.select(col("__id").as("id2"), col("sig").as("sig2")), Seq("id2"))
       .withColumn("est_jaccard",
         size(filter(zip_with(col("sig1"), col("sig2"), (a, b) => a === b),
           x => x)).cast("double") / k)
       .filter(col("est_jaccard") >= minEstJaccard)
-      .select(col("id1"), col("id2"), col("est_jaccard"))
+      .select(col("id1"), col("id2"), col("est_jaccard")))
+    graft.operators.Pinning.unpin(sigs)
+    result
   }
 
   /** Incremental (delta-vs-index) near-dup: dedup a NEW ingest batch

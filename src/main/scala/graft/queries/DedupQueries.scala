@@ -29,10 +29,11 @@ object DedupQueries extends QueryModule {
     "dedup_ngram_jaccard",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      // cache: the corpus side and the broadcast query side share one
-      // shingle computation instead of two full scans
+      // no cache: the query side's doc_id filter is pushed below the
+      // deterministic shingle projection, so it shingles nine rows, and
+      // a cached withSh would be a CacheManager entry nothing releases
       val withSh = docs.select(col("doc_id"),
-        Dedup.shingles(col("text"), 2).as("sh")).cache()
+        Dedup.shingles(col("text"), 2).as("sh"))
       val q = withSh.filter(col("doc_id") < 10)
         .select(col("doc_id").as("id1"), col("sh").as("sh1"))
       val c = withSh.select(col("doc_id").as("id2"), col("sh").as("sh2"))
@@ -204,13 +205,15 @@ object DedupQueries extends QueryModule {
   // Near-dup pairs materialized once per (session, corpus) — the real
   // pipeline computes signatures/pairs once and every consumer (pair
   // report, cluster+canonicalize) reads the materialization, the same
-  // posture as the reference's scheme caches. Dropped with its session.
+  // posture as the reference's scheme caches. The memo owns the pin
+  // minhashLsh returns (its signatures are already released); the pin's
+  // blocks go when the session's context stops.
   private def minhashPairs(
       s: org.apache.spark.sql.SparkSession, dir: String) =
     graft.SessionMemo(s, "dedup.pairs", dir)(
       Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id",
         "text", shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
-        hasher = Dedup.portableShingleHashes).cache())
+        hasher = Dedup.portableShingleHashes))
 
   // MinHash + LSH near-dup candidates over portable (md5-derived) shingle
   // hashes and md5-derived universal-hash coefficients: the oracle replays
@@ -234,12 +237,12 @@ object DedupQueries extends QueryModule {
   // its own canonical. Every document gets a verdict (singletons keep
   // themselves). Oracle: the shared MinHash replay + recursive-CTE
   // closure with the same min-id naming rule.
-  // Verdicts materialize once per (session, corpus), like the pair cache:
+  // Verdicts materialize once per (session, corpus), like the pair memo:
   // dedup_cluster, dedup_soft, and the sizes rollup all consume the same
   // materialization instead of re-running the iterative component search.
-  private def clusterVerdicts(s: org.apache.spark.sql.SparkSession,
+  private[graft] def clusterVerdicts(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo(s, "dedup.verdicts", dir) {
+    graft.SessionMemo.cached(s, "dedup.verdicts", dir) {
       val docs = Tables.load(s, dir, "documents")
       val pairs = minhashPairs(s, dir)
       val cc = graft.operators.Clustering.connectedComponents(
@@ -251,7 +254,6 @@ object DedupQueries extends QueryModule {
           coalesce(col("component"), col("doc_id")).as("canonical_id"),
           (coalesce(col("component"), col("doc_id")) === col("doc_id"))
             .as("keep"))
-        .cache()
     }
 
   private val dedupCluster = Q(

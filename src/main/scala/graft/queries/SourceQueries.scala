@@ -224,8 +224,8 @@ object SourceQueries extends QueryModule {
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val path = graft.SessionMemo.tempPath(s, "jsonl")
+      // one file per cached partition: no exchange to fix the file count
       docs.select(col("doc_id"), col("text"), col("lang"), col("source"))
-        .repartition(4)
         .write.mode("overwrite").json(path)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",

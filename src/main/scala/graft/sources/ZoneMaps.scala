@@ -147,9 +147,14 @@ object ZoneMaps {
         .writeBatchMarker(bloom.sparkSession, dir, b))
     }
 
+  /** The published stats table at `livePath`. A published version
+    * directory never changes, so its read (and the schema inference a
+    * parquet read runs) is served from [[loadStatsIfPresent]]'s
+    * per-version memo; a path with nothing published still throws.
+    */
   def loadStats(spark: SparkSession, livePath: String): DataFrame =
-    spark.read.parquet(
-      graft.operators.CacheRefresh.resolveLive(spark, livePath))
+    loadStatsIfPresent(spark, livePath).getOrElse(spark.read.parquet(
+      graft.operators.CacheRefresh.resolveLive(spark, livePath)))
 
   /** The surviving file list for a conjunction of range predicates:
     * a file is kept iff EVERY predicate's interval overlaps the file's

@@ -13,14 +13,19 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   *      (corpus, params) plan and become the eviction pressure that made
   *      r8's bench numbers nondeterministic. Library operators therefore
   *      use per-call [[Pinning]] pins; the only CacheManager entries
-  *      allowed are [[SessionMemo]] entries (Tables.load, the profile
-  *      warehouse/ST dimension, query-layer memos), which live until
-  *      their session's SparkContext stops.
+  *      allowed are memoized frames registered through
+  *      [[SessionMemo.cached]] (Tables.load, the profile warehouse/ST
+  *      dimension, query-layer memos), which live until their session's
+  *      SparkContext stops and register again after a `clearCache()`.
+  *      A query keeps no entry of its own, and a memoized pin holds only
+  *      its result: the MinHash pair memo keeps the pair rows, not the
+  *      signatures they were built from.
   *   2. An iterative loop that pins every round but frees none holds
   *      rounds × state blocks at peak instead of ~2 × state.
   *
-  * These specs run each operator to completion and then count what it
-  * left behind.
+  * These specs run each operator or query to completion and then count
+  * what it left behind; the query cases read a private copy of the
+  * sf0.001 corpus, so every memo they touch is their own.
   */
 class CacheLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -47,10 +52,20 @@ class CacheLifecycleSpec extends SparkSpec {
 
   private def pinnedCount = spark.sparkContext.getPersistentRDDs.size
 
+  private def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
+
+  private def cacheEntries = ColumnBridge.cachedPlanSummaries(spark).size
+
+  private lazy val dir = corpusCopy("cache-lifecycle")
+
+  private def query(name: String) =
+    queries.AllQueries.modules.flatMap(_.qs).find(_.name == name).get
+      .fn(spark, dir)
+
   test("library operators register no CacheManager entries") {
     // start from a clean CacheManager: entries present here belong to
-    // session memos (Tables.load etc.) of other suites — those rebuild
-    // lazily on next use, so clearing is safe and makes isEmpty exact
+    // session memos (Tables.load etc.) of other suites — those register
+    // again on next use, so clearing is safe and makes isEmpty exact
     spark.catalog.clearCache()
     val docs = docsFixture
     val vecs = vecsFixture
@@ -180,5 +195,45 @@ class CacheLifecycleSpec extends SparkSpec {
       s"left ${pinnedCount - base} pinned RDDs (want <=1: the pair list)")
     Pinning.unpin(pairs)
     assert(pinnedCount <= base)
+  }
+
+  test("dedup_minhash_lsh keeps one pin beyond the documents cache and " +
+      "serves the same rows after clearCache()") {
+    Tables.load(spark, dir, "documents").count()
+    val before = persistedIds
+    val first = rows(query("dedup_minhash_lsh"))
+    assert(first.nonEmpty)
+    val added = persistedIds -- before
+    assert(added.size == 1,
+      s"want only the pair pin, got ${added.size} new persisted RDDs")
+    spark.catalog.clearCache()
+    assert(rows(query("dedup_minhash_lsh")) == first)
+  }
+
+  test("dedup_ngram_jaccard adds no CacheManager entry") {
+    Tables.load(spark, dir, "documents")
+    val before = cacheEntries
+    assert(rows(query("dedup_ngram_jaccard")).nonEmpty)
+    assert(cacheEntries == before,
+      ColumnBridge.cachedPlanSummaries(spark).mkString("\n"))
+  }
+
+  test("memoized frames register again after clearCache()") {
+    import graft.queries.{DedupQueries, MiscQueries, ProfileQueries}
+    val memos: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "Tables.load" -> (() => Tables.load(spark, dir, "lineitem")),
+      "Profiles.cachedWarehouse" -> (() => ProfileQueries.wh(spark, dir)),
+      "Profiles.cachedStDim" -> (() => graft.operators.Profiles.cachedStDim(
+        s"$dir/full", ProfileQueries.wh(spark, dir), "l_orderkey")),
+      "DedupQueries.clusterVerdicts" ->
+        (() => DedupQueries.clusterVerdicts(spark, dir)),
+      "MiscQueries.staleCache" -> (() => MiscQueries.staleCache(spark, dir)))
+    def unregistered = memos.collect {
+      case (name, frame) if frame().storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE => name
+    }
+    assert(unregistered.isEmpty)
+    spark.catalog.clearCache()
+    assert(unregistered.isEmpty, "not registered again after clearCache()")
   }
 }

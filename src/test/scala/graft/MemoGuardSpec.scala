@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps hand-rolled memos and crossover gates out of the engine: every
   * value kept past one call goes through [[SessionMemo]], which alone
   * owns a concurrent map and the stopped-context check
-  * (`Pinning.disk2Pins` is a registry of live pins, not a memo), and
-  * every driver-local crossover goes through
-  * [[graft.operators.Crossover]], which alone owns the budgets and the
-  * forced-distributed override.
+  * (`Pinning.disk2Pins` is a registry of live pins, not a memo), every
+  * memoized cached frame goes through [[SessionMemo.cached]], and every
+  * driver-local crossover goes through [[graft.operators.Crossover]],
+  * which alone owns the budgets and the forced-distributed override.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -42,5 +42,20 @@ class MemoGuardSpec extends AnyFunSuite {
       "localWorkThreshold|localEdgeThreshold|fitsLocal|localPairs|localCap".r,
       Set("Crossover.scala"))
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no .cache() in src/main outside SessionMemo and the listed " +
+      "call sites") {
+    // file -> the .cache() calls allowed in it: Tokenizer.bpeTrain's loop
+    // unpersists every round; Profiles.similarityJoin's hot-key path
+    // caches for fault recovery (its comment says why); ApiQueries'
+    // catalog holds several memoized frames in one value
+    val allowed = Map("Tokenizer.scala" -> 2, "Profiles.scala" -> 1,
+      "ApiQueries.scala" -> 1)
+    val code = hits("""\.cache\(\)""".r, Set("SessionMemo.scala"))
+      .filterNot(h => Seq("//", "*").exists(h.split(": ", 2)(1).startsWith))
+    val over = code.groupBy(h => Paths.get(h.takeWhile(_ != ':')).getFileName
+      .toString).filter { case (f, hs) => hs.size > allowed.getOrElse(f, 0) }
+    assert(over.isEmpty, over.values.flatten.mkString("\n"))
   }
 }

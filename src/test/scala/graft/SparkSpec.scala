@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
@@ -34,6 +34,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** A fresh file under this suite's temp root. */
   def tempFile(prefix: String, suffix: String): Path =
     Files.createTempFile(root, prefix, suffix)
+
+  /** A private copy of the sf0.001 corpus under this suite's temp root:
+    * memo entries and CacheManager entries keyed on its path are this
+    * suite's own, since no other suite of the shared session reads it.
+    */
+  def corpusCopy(prefix: String): String = {
+    val tmp = tempDir(prefix)
+    Tables.names.foreach(t => Files.copy(
+      Paths.get(s"$corpus/$t.parquet"), tmp.resolve(s"$t.parquet")))
+    tmp.toString
+  }
+
+  private val corpus = "/root/testdata/sf0.001"
 
   private def root: Path = synchronized {
     if (tmpRoot.isEmpty) tmpRoot = Some(Files.createTempDirectory("graft-spec-"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -14,17 +12,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   */
 class TablesLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private val corpus = "/root/testdata/sf0.001"
-
   // a private copy of the corpus, so the cache entries are this suite's
   // own: other suites clear the shared CacheManager, which drops the
   // corpus entries from under later plans
-  private lazy val dir = {
-    val tmp = tempDir("tables-layout")
-    Tables.names.foreach(t => Files.copy(
-      Paths.get(s"$corpus/$t.parquet"), tmp.resolve(s"$t.parquet")))
-    tmp.toString
-  }
+  private lazy val dir = corpusCopy("tables-layout")
 
   test("every corpus table is cached hash-partitioned on its first column " +
       "with defaultParallelism partitions") {
