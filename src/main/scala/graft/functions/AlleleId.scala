@@ -17,8 +17,6 @@ object AlleleId {
   val Present   = "P"
   val MissingLocusSentinel = "-999"
 
-  def isMissing(c: Column): Column   = c === lit(Missing)
-  def isArbitrary(c: Column): Column = c === lit(Arbitrary)
   /** "N" matches anything in profile comparison; "0" only matches "0". */
   def matches(a: Column, b: Column): Column =
     a === b || a === lit(Arbitrary) || b === lit(Arbitrary)

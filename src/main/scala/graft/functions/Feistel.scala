@@ -123,13 +123,13 @@ object Feistel {
     p
   }
 
-  /** `feistel_permute(idx, epoch)` (or its inverse) as a codegen expression;
+  /** `feistel_permute(idx, epoch)` as a codegen expression;
     * n and seed are plan-time constants. The md5-per-round kernel is a
     * static call inside whole-stage codegen — no UDF boxing, no fallback.
     */
   case class FeistelPermute(
       idx: Expression, epoch: Expression,
-      n: Long, seed: Long, invert: Boolean)
+      n: Long, seed: Long)
       extends BinaryExpression {
     override def left: Expression = idx
     override def right: Expression = epoch
@@ -139,20 +139,15 @@ object Feistel {
 
     override def nullSafeEval(a: Any, b: Any): Any = {
       val i = a.asInstanceOf[Long]; val e = b.asInstanceOf[Long]
-      if (invert) inverse(i, n, seed, e) else permute(i, n, seed, e)
+      permute(i, n, seed, e)
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, (a, b) =>
-        if (invert) s"graft.functions.Feistel.inverse($a, ${n}L, ${seed}L, $b)"
-        else s"graft.functions.Feistel.permute($a, ${n}L, ${seed}L, $b)")
+        s"graft.functions.Feistel.permute($a, ${n}L, ${seed}L, $b)")
   }
 
   def permuteCol(idx: Column, epoch: Column, n: Long, seed: Long): Column =
     Bridge.column(FeistelPermute(
-      Bridge.expression(idx), Bridge.expression(epoch), n, seed, invert = false))
-
-  def inverseCol(pos: Column, epoch: Column, n: Long, seed: Long): Column =
-    Bridge.column(FeistelPermute(
-      Bridge.expression(pos), Bridge.expression(epoch), n, seed, invert = true))
+      Bridge.expression(idx), Bridge.expression(epoch), n, seed))
 }

@@ -99,13 +99,6 @@ object CacheRefresh {
         .write.mode("overwrite").parquet(dir)
     }
 
-  /** The versioned-pointer publish protocol, independent of WHAT gets
-    * written: `write` materializes the next version under the directory
-    * it is handed (one parquet table for [[fullSwap]], several coupled
-    * tables for a multi-table artifact like an ANN index — everything
-    * under ONE version flips with ONE pointer rename, so readers can
-    * never observe a torn combination of old and new parts).
-    */
   /** Pointer IO must bypass Hadoop's client-side checksum layer: the
     * local FileSystem/FileContext are ChecksumFs wrappers whose rename
     * moves the data file and its `.crc` sidecar in TWO steps (a reader
@@ -122,9 +115,19 @@ object CacheRefresh {
       case other => other
     }
 
+  /** The versioned-pointer publish protocol, independent of WHAT gets
+    * written: `write` materializes the next version under the directory
+    * it is handed (one parquet table for [[fullSwap]], several coupled
+    * tables for a multi-table artifact like an ANN index — everything
+    * under ONE version flips with ONE pointer rename, so readers can
+    * never observe a torn combination of old and new parts). `marker`
+    * is a stream's exactly-once batch id: written inside the version
+    * after `write` ([[graft.streaming.CacheStream.writeBatchMarker]]),
+    * so data and marker flip with the same rename.
+    */
   def publishVersioned(spark: org.apache.spark.sql.SparkSession,
-      livePath: String, minRetainMs: Long = 10L * 60 * 1000)(
-      write: String => Unit): Unit = {
+      livePath: String, minRetainMs: Long = 10L * 60 * 1000,
+      marker: Option[Long] = None)(write: String => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = rawFs(org.apache.hadoop.fs.FileSystem.get(conf))
     val pointer = new org.apache.hadoop.fs.Path(livePath + ".current")
@@ -133,6 +136,8 @@ object CacheRefresh {
     val nextV = prevV.map(_ + 1).getOrElse(1)
     val versioned = s"$livePath.v$nextV"
     write(versioned)
+    marker.foreach(graft.streaming.CacheStream
+      .writeBatchMarker(spark, versioned, _))
     val tmp = new org.apache.hadoop.fs.Path(livePath + ".current.tmp")
     val out = fs.create(tmp, true)
     out.write(versioned.getBytes("UTF-8")); out.close()

@@ -203,11 +203,6 @@ object Dedup {
     .select(col("__id"), col("bk.band").as("band"),
       col("bk.bucket").as("bucket"))
 
-  /** The two frames a MinHash near-dup index consists of: per-doc
-    * signatures (__id, sig) and capped per-(band, bucket) id lists — the
-    * tables [[incrementalNearDup]] derives per call and
-    * [[graft.pipeline.IndexStore.saveMinhash]] persists once.
-    */
   /** The bucket index derived from a signature frame: per-(band, bucket)
     * base-id lists with the degenerate-bucket cap — this aggregate IS the
     * materialized index side. Shared by every derivation site so sigs →
@@ -219,13 +214,6 @@ object Dedup {
       .groupBy(col("band"), col("bucket"))
       .agg(collect_list(col("__id")).as("base_ids"))
       .filter(size(col("base_ids")) <= maxBucketSize)
-
-  def minhashIndexFrames(base: DataFrame, id: String, text: String,
-      shingleN: Int, k: Int, bands: Int, maxBucketSize: Int,
-      hasher: Column => Column): (DataFrame, DataFrame) = {
-    val sigs = minhashSigsOf(base, id, text, shingleN, k, hasher)
-    (sigs, minhashBucketsOf(sigs, bands, k / bands, maxBucketSize))
-  }
 
   def incrementalNearDup(
       base: DataFrame,
@@ -299,10 +287,6 @@ object Dedup {
     */
   def simhash(shingleHashes: Column): Column =
     graft.functions.Vectors.simhash64(shingleHashes)
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** Exact n-gram Jaccard similarity between two (distinct-element) shingle
     * arrays — fused codegen'd set kernel (graft.functions.Vectors.JaccardSim).

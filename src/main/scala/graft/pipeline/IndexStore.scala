@@ -45,17 +45,15 @@ object IndexStore {
       Similarity.ivfCentroids(corpus, id, vec, nlist, trained))
     val assigned = Similarity.ivfAssign(centroids, corpus, id, vec)
     try {
+      // a save that runs INSIDE a stream's foreachBatch (the
+      // compaction step) must carry the batch marker forward: a
+      // marker-less version after a marked append would reset the
+      // replay guard and a redelivered batch would re-append
       graft.operators.CacheRefresh.publishVersioned(
-        corpus.sparkSession, livePath) { dir =>
+        corpus.sparkSession, livePath, marker = marker) { dir =>
         centroids.repartition(1).write.mode("overwrite")
           .parquet(s"$dir/centroids")
         assigned.write.mode("overwrite").parquet(s"$dir/assigned")
-        // a save that runs INSIDE a stream's foreachBatch (the
-        // compaction step) must carry the batch marker forward: a
-        // marker-less version after a marked append would reset the
-        // replay guard and a redelivered batch would re-append
-        marker.foreach(b => graft.streaming.CacheStream
-          .writeBatchMarker(corpus.sparkSession, dir, b))
       }
     } finally graft.operators.Pinning.unpin(centroids)
   }
@@ -189,13 +187,10 @@ object IndexStore {
     try {
       val buckets = Dedup.minhashBucketsOf(merged, bands, k / bands,
         maxBucketSize)
-      graft.operators.CacheRefresh.publishVersioned(spark, livePath) { dir =>
+      graft.operators.CacheRefresh.publishVersioned(spark, livePath,
+          marker = marker) { dir =>
         merged.write.mode("overwrite").parquet(s"$dir/sigs")
         buckets.write.mode("overwrite").parquet(s"$dir/buckets")
-        // exactly-once batch marker (CacheStream contract): rides inside
-        // the version, so data + marker flip with the one pointer rename
-        marker.foreach(b => graft.streaming.CacheStream
-          .writeBatchMarker(spark, dir, b))
       }
     } finally graft.operators.Pinning.unpin(merged)
   }
@@ -324,12 +319,11 @@ object IndexStore {
       minLen, id)
     val keptReports = oldR.join(
       affected.select(col("__aff").as(id)), Seq(id), "left_anti")
-    graft.operators.CacheRefresh.publishVersioned(spark, livePath) { dir =>
+    graft.operators.CacheRefresh.publishVersioned(spark, livePath,
+        marker = marker) { dir =>
       keptReports.unionByName(newReports)
         .write.mode("overwrite").parquet(s"$dir/reports")
       writeSubstrManifest(spark, dir, oldSegs :+ seg)
-      marker.foreach(b => graft.streaming.CacheStream
-        .writeBatchMarker(spark, dir, b))
     }
   }
 

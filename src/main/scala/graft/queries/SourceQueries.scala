@@ -443,34 +443,55 @@ object SourceQueries extends QueryModule {
   // table — equality IS the proof that pruning lost nothing.
   // ZoneMapsSpec additionally pins that files were actually skipped and
   // the null-zone prune rule.
-  private def cachedZonemapLayout(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    graft.SessionMemo(s, "source.zonemap", dir) {
-      val p = graft.SessionMemo.tempPath(s, "zonemap")
-      Tables.load(s, dir, "documents")
-        .repartitionByRange(16, col("n_chars"), col("doc_id"))
+  //
+  // The skipping-layout recipe every registered layout below shares: a
+  // session-memoized write of `rows`, range-partitioned into `parts`
+  // files on `order`, registered with the skipping registry so its
+  // artifacts ride WITH the table under <data>/_skipping and serving
+  // catalogs resolve the Layout from the table itself. `name` is both
+  // the memo namespace suffix and the temp-dir label; the result is the
+  // memo's directory, whose table is `$p/data`.
+  private def registeredLayout(s: org.apache.spark.sql.SparkSession,
+      dir: String, name: String, parts: Int, order: Seq[String],
+      zoneCols: Seq[String], bloomCol: Option[String] = None)(
+      rows: => org.apache.spark.sql.DataFrame): String =
+    graft.SessionMemo(s, s"source.$name", dir) {
+      val p = graft.SessionMemo.tempPath(s, name)
+      rows.repartitionByRange(parts, order.map(col): _*)
         .write.mode("overwrite").parquet(s"$p/data")
-      // registry-routed (r13 VERDICT #1): both artifacts — zone maps
-      // on the range column, the per-file doc_id Bloom (the point-
-      // predicate half; id zones span every file under the n_chars
-      // order), word_idx-clustered — ride WITH the table under
-      // <data>/_skipping via one registration; serving catalogs
-      // resolve the Layout from the table itself, nothing hand-built
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      graft.sources.SkippingRegistry.register(s, s"$p/data", zoneCols,
+        bloomCol)
       p
     }
+
+  // Both artifacts: zone maps on the range column and the per-file
+  // doc_id Bloom (the point-predicate half; id zones span every file
+  // under the n_chars order), word_idx-clustered.
+  private def cachedZonemapLayout(s: org.apache.spark.sql.SparkSession,
+      dir: String): String =
+    registeredLayout(s, dir, "zonemap", 16, Seq("n_chars", "doc_id"),
+      Seq("n_chars"), Some("doc_id"))(Tables.load(s, dir, "documents"))
+
+  // The hand-written skipping scans take the same read path as the
+  // compiled ones: the registry-resolved Layout, pruneForClauses, then
+  // the exact predicate; no registration means the plain read.
+  private def prunedScan(s: org.apache.spark.sql.SparkSession, dir: String,
+      ranges: Seq[graft.sources.ZoneMaps.ZoneRange],
+      anyKeys: Option[Seq[graft.sources.ZoneMaps.BloomKey]]) = {
+    val data = s"${cachedZonemapLayout(s, dir)}/data"
+    graft.sources.SkippingRegistry.layoutFor(s, data)
+      .flatMap(graft.sources.ZoneMaps.pruneForClauses(s, _, ranges, Nil,
+        anyKeys))
+      .map(_._1).getOrElse(s.read.parquet(data))
+  }
 
   private val scanZonemapPrune = Q(
     "scan_zonemap_prune",
     (s, dir) => {
-      val p = cachedZonemapLayout(s, dir)
-      val stats = graft.sources.ZoneMaps.loadStats(s,
-        graft.sources.SkippingRegistry.statsLivePath(s"$p/data"))
-      val (pruned, _) = graft.sources.ZoneMaps.prunedRead(
-        s, s"$p/data", stats,
-        Seq(graft.sources.ZoneMaps.ColRange("n_chars", 150, 300)))
-      pruned.groupBy(col("lang"))
+      prunedScan(s, dir,
+        Seq(graft.sources.ZoneMaps.ColRange("n_chars", 150, 300)), None)
+        .filter(col("n_chars").between(150, 300))
+        .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"),
           min(col("doc_id")).as("min_doc"),
@@ -493,12 +514,11 @@ object SourceQueries extends QueryModule {
   private val scanBloomPrune = Q(
     "scan_bloom_prune",
     (s, dir) => {
-      val p = cachedZonemapLayout(s, dir)
-      val bloom = graft.sources.ZoneMaps.loadStats(s,
-        graft.sources.SkippingRegistry.bloomLivePath(s"$p/data"))
-      val (pruned, _) = graft.sources.ZoneMaps.bloomPrunedRead(
-        s, s"$p/data", bloom, "doc_id", Seq(7L, 123L, 401L))
-      pruned.select(col("doc_id"), col("lang"), col("n_chars"))
+      val keys = Seq(7L, 123L, 401L)
+      prunedScan(s, dir, Nil, Some(keys.map(k =>
+          graft.sources.ZoneMaps.BloomKey(k.toString))))
+        .filter(col("doc_id").isin(keys: _*))
+        .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
     },
     Some("""SELECT doc_id, lang, n_chars FROM documents
@@ -642,15 +662,8 @@ object SourceQueries extends QueryModule {
   // full table; ZoneMapsSpec pins the case-fold rule and file skips.
   private def cachedTextLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.textzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "textzones")
-      Tables.load(s, dir, "documents")
-        .repartitionByRange(8, col("lang"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("lang"))
-      p
-    }
+    registeredLayout(s, dir, "textzones", 8, Seq("lang", "doc_id"),
+      Seq("lang"))(Tables.load(s, dir, "documents"))
 
   private val scanPrunedText = Q(
     "scan_pruned_text",
@@ -686,15 +699,10 @@ object SourceQueries extends QueryModule {
   // a quarter's range clause skips the other quarters' files.
   private def cachedDateLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.datezones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "datezones")
+    registeredLayout(s, dir, "datezones", 8,
+        Seq("o_orderdate", "o_orderkey"), Seq("o_orderdate")) {
       Tables.load(s, dir, "orders")
         .withColumn("o_orderdate", col("o_orderdate").cast("date"))
-        .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("o_orderdate"))
-      p
     }
 
   private val scanPrunedDate = Q(
@@ -789,18 +797,13 @@ object SourceQueries extends QueryModule {
   // replayed inline.
   private def cachedPointLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.pointzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "pointzones")
+    registeredLayout(s, dir, "pointzones", 8, Seq("opt_tag", "doc_id"),
+        Seq("opt_tag"), Some("doc_key")) {
       Tables.load(s, dir, "documents")
         .withColumn("doc_key", concat(lit("DOC-"), col("doc_id")))
         .withColumn("opt_tag",
           when(col("n_chars") % 7 === 0,
             concat(lit("T"), upper(col("lang")))))
-        .repartitionByRange(8, col("opt_tag"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("opt_tag"), bloomCol = Some("doc_key"))
-      p
     }
 
   private val scanPrunedTextPoint = Q(
@@ -854,19 +857,14 @@ object SourceQueries extends QueryModule {
   // designations; ZoneMapsSpec pins that fact files were skipped.
   private def cachedFactLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.factzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "factzones")
+    registeredLayout(s, dir, "factzones", 8,
+        Seq("l_linenumber", "l_orderkey"), Seq("l_linenumber")) {
       Tables.load(s, dir, "lineitem")
         // the designation "allele" is the locus's own measure, so the
         // clause grammar (one allele column) expresses both predicates
         .withColumn("allele",
           when(col("l_linenumber") === 1, col("l_quantity"))
             .when(col("l_linenumber") === 2, col("l_discount")))
-        .repartitionByRange(8, col("l_linenumber"), col("l_orderkey"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("l_linenumber"))
-      p
     }
 
   private val j1Pruned = Q(
@@ -914,17 +912,12 @@ object SourceQueries extends QueryModule {
   // routed ≡ unrouted.
   private def cachedEavLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.eavzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "eavzones")
+    registeredLayout(s, dir, "eavzones", 8, Seq("field", "entity_id"),
+        Seq("field")) {
       Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("entity_id"),
           concat(lit("f"), col("l_linenumber")).as("field"),
           col("l_returnflag").as("value"))
-        .repartitionByRange(8, col("field"), col("entity_id"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("field"))
-      p
     }
 
   private val f7Pruned = Q(
@@ -964,19 +957,14 @@ object SourceQueries extends QueryModule {
   // count clause declines pruning, like designations' counts).
   private def cachedTagLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.tagzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "tagzones")
+    registeredLayout(s, dir, "tagzones", 8, Seq("locus", "entity_id"),
+        Seq("locus")) {
       Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("entity_id"),
           col("l_linenumber").as("locus"),
           (upper(col("l_returnflag")) === "N").as("complete"),
           when(upper(col("l_returnflag")) === "R", lit("flagged"))
             .as("flag"))
-        .repartitionByRange(8, col("locus"), col("entity_id"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("locus"))
-      p
     }
 
   private val tagPruned = Q(
@@ -1021,15 +1009,8 @@ object SourceQueries extends QueryModule {
   // pruning (indexed members) and the decline (unindexed member).
   private def cachedOrGroupLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.SessionMemo(s, "source.orgroupzones", dir) {
-      val p = graft.SessionMemo.tempPath(s, "orgroupzones")
-      Tables.load(s, dir, "documents")
-        .repartitionByRange(8, col("lang"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      graft.sources.SkippingRegistry.register(s, s"$p/data",
-        zoneCols = Seq("lang", "source"))
-      p
-    }
+    registeredLayout(s, dir, "orgroupzones", 8, Seq("lang", "doc_id"),
+      Seq("lang", "source"))(Tables.load(s, dir, "documents"))
 
   private val scanPrunedOrGrouped = Q(
     "scan_pruned_or_grouped",

@@ -33,12 +33,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are a different hazard, see below) but unpruned. Registry-routed
   * reads instead see stats that every write path refreshed inline.
   *
-  * Correctness note on freshness: files ABSENT from the stats table
-  * would be (wrongly) pruned by the survivor-list read, which is why
-  * refresh is INLINE on the write path rather than a cron job — the
-  * same reasoning the reference uses triggers, not batch rebuilds. A
-  * table written outside [[appendFiles]]/[[refresh]] must re-[[refresh]]
-  * before serving reads.
+  * Freshness note: files ABSENT from the stats table are never pruned
+  * — [[ZoneMaps.pruneForClauses]], the one skipping read path, keeps
+  * every file no consulted artifact knows — but they are read
+  * unpruned, which is why refresh is INLINE on the write path rather
+  * than a cron job — the same reasoning the reference uses triggers,
+  * not batch rebuilds. A table written outside
+  * [[appendFiles]]/[[refresh]] should re-[[refresh]] before serving
+  * reads.
   */
 object SkippingRegistry {
 

@@ -118,13 +118,8 @@ object ZoneMaps {
   def saveStats(stats: DataFrame, livePath: String,
       numFiles: Int = 1, marker: Option[Long] = None): Unit =
     graft.operators.CacheRefresh.publishVersioned(
-      stats.sparkSession, livePath) { dir =>
+      stats.sparkSession, livePath, marker = marker) { dir =>
       stats.repartition(numFiles).write.mode("overwrite").parquet(dir)
-      // exactly-once batch marker for STREAM-maintained stats
-      // (CacheStream contract): rides inside the version, flips with
-      // the one pointer rename
-      marker.foreach(b => graft.streaming.CacheStream
-        .writeBatchMarker(stats.sparkSession, dir, b))
     }
 
   /** Publish a BLOOM table clustered by `word_idx` — the layout
@@ -139,12 +134,10 @@ object ZoneMaps {
   def saveBloomStats(bloom: DataFrame, livePath: String,
       numFiles: Int = 1, marker: Option[Long] = None): Unit =
     graft.operators.CacheRefresh.publishVersioned(
-      bloom.sparkSession, livePath) { dir =>
+      bloom.sparkSession, livePath, marker = marker) { dir =>
       bloom.repartitionByRange(numFiles, col("word_idx"))
         .sortWithinPartitions(col("word_idx"), col("file"))
         .write.mode("overwrite").parquet(dir)
-      marker.foreach(b => graft.streaming.CacheStream
-        .writeBatchMarker(bloom.sparkSession, dir, b))
     }
 
   /** The published stats table at `livePath`. A published version
@@ -187,19 +180,6 @@ object ZoneMaps {
     case NullRange(c, false) =>
       coalesce(col(s"nulls_$c") < col("rows"), lit(true))
   }
-
-  /** Predicate column for `ranges` — re-applied to the pruned read so
-    * zone maps only ever prune, never decide.
-    */
-  def rangePredicate(ranges: Seq[ZoneRange]): Column =
-    ranges.map {
-      case ColRange(c, lo, hi) => col(c) >= lo && col(c) <= hi
-      case TextRange(c, lo, hi, hiEx) =>
-        upper(col(c)) >= lit(lo) &&
-          (if (hiEx) upper(col(c)) < lit(hi) else upper(col(c)) <= lit(hi))
-      case NullRange(c, wantNull) =>
-        if (wantNull) col(c).isNull else col(c).isNotNull
-    }.reduce(_ && _)
 
   final case class PruneReport(filesTotal: Long, filesKept: Long)
 
@@ -456,52 +436,6 @@ object ZoneMaps {
       .as[String].collect().sorted.toIndexedSeq
   }
 
-  /** Read only the files whose Bloom filter might contain one of `keys`,
-    * with the exact IN predicate re-applied — no false negatives by
-    * Bloom's one-sided error, so pruning can only skip true-negative
-    * files.
-    */
-  def bloomPrunedRead(spark: SparkSession, dataDir: String,
-      bloom: DataFrame, keyCol: String, keys: Seq[Long]):
-      (DataFrame, PruneReport) = {
-    val total = bloom.select(col("file")).distinct().count()
-    val files = survivingBloom(bloom, keys.map(_.toString))
-    val df =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(dataDir).schema)
-      else spark.read.parquet(files: _*)
-    (df.filter(col(keyCol).isin(keys: _*)),
-      PruneReport(total, files.length.toLong))
-  }
-
-  /** Read only the files whose zones overlap `ranges`, with the exact
-    * predicate re-applied. Returns the frame plus the prune accounting
-    * (how many of the layout's files were skipped without a task).
-    * An empty survivor set short-circuits to an empty frame with the
-    * layout's schema — `parquet()` with zero paths is an error.
-    */
-  def prunedRead(spark: SparkSession, dataDir: String, stats: DataFrame,
-      ranges: Seq[ZoneRange]): (DataFrame, PruneReport) = {
-    // one job for both counts: every (file, overlap) row; a null overlap
-    // prunes, as it does in `surviving`'s filter
-    val overlaps = stats.select(col("file"), ranges.map(zoneOverlap).reduce(_ && _))
-      .collect()
-    val files = overlaps.collect { case r if !r.isNullAt(1) && r.getBoolean(1) =>
-      r.getString(0) }.sorted.toIndexedSeq
-    (filesRead(spark, dataDir, files).filter(rangePredicate(ranges)),
-      PruneReport(overlaps.length.toLong, files.length.toLong))
-  }
-
-  private def filesRead(spark: SparkSession, dataDir: String,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(dataDir).schema)
-    else spark.read.parquet(files: _*)
-
   // ---- default-read-path integration (QueryCompiler routing) ----
 
   /** Registration of a skipping-indexed parquet layout — what a
@@ -559,21 +493,6 @@ object ZoneMaps {
       livePath: String): Int =
     graft.SessionMemo.countPrefix(spark, StatsMemo, s"$livePath.v")
 
-  /** File-list pruning for a compiled conjunction of range and point
-    * predicates — the [[graft.api.QueryCompiler]] entry point. Returns
-    * None (caller falls back to the unpruned scan) when no artifact is
-    * published or no clause touches an indexed column; otherwise the
-    * pruned frame (schema of `dataDir`, exact predicates NOT applied —
-    * the compiler re-applies every clause, so pruning only ever skips
-    * files, never decides rows) plus the prune accounting.
-    *
-    * Survivor algebra: the clause families are AND'd, so the kept set
-    * is the INTERSECTION of the zone survivors (ranges, themselves
-    * AND'd inside [[surviving]]) and each point key's Bloom survivors.
-    * Ranges on columns the stats table does not index are ignored —
-    * sound under AND (pruning with a predicate subset only keeps more
-    * files).
-    */
   /** One prunable unit of an OR-combined clause family: a range on an
     * indexed column, or an equality key on the Bloom column.
     */
@@ -588,7 +507,22 @@ object ZoneMaps {
     */
   final case class BloomKey(key: String, ci: Boolean = false)
 
-  /** `andKeys` are AND-composed equality probes (a file must possibly
+  /** File-list pruning for a conjunction of range and point predicates
+    * — the one file-skipping read path: [[graft.api.QueryCompiler]] and
+    * the hand-written skipping queries both reach files through it.
+    * Returns None (caller falls back to the unpruned scan) when no
+    * artifact is published or no clause touches an indexed column;
+    * otherwise the pruned frame (schema of `dataDir`, exact predicates
+    * NOT applied — the caller re-applies every clause, so pruning only
+    * ever skips files, never decides rows) plus the prune accounting.
+    *
+    * Survivor algebra: the clause families are AND'd, so the kept set
+    * is the INTERSECTION of the zone survivors (a file must overlap
+    * every range) and each point key's Bloom survivors. Ranges on
+    * columns the stats table does not index are ignored — sound under
+    * AND (pruning with a predicate subset only keeps more files).
+    *
+    * `andKeys` are AND-composed equality probes (a file must possibly
     * contain EVERY key — per-key survivor intersection); `anyKeys` is
     * an IN-list/pasted-id-list membership probe (a file survives if it
     * may contain ANY of the keys — one Bloom pass, the semi-join S7
@@ -603,6 +537,14 @@ object ZoneMaps {
     * ([[MaxAnyKeys]]): at some width the probe cost exceeds the
     * skipped tasks, and the semi join downstream is already the right
     * plan.
+    *
+    * Cost: the zone artifact is consulted with ONE collect of (file,
+    * keep flag per constraint) — the AND'd ranges plus every OR unit —
+    * which also yields its file count and file list; the layout's
+    * listing infers the schema the kept-file read reuses. A warm
+    * zone-only call runs exactly those 2 jobs (ZoneMapsSpec pins it).
+    * Bloom artifacts add their [[survivingBloom]] passes and a file
+    * count.
     */
   def pruneForClauses(spark: SparkSession, layout: Layout,
       ranges: Seq[ZoneRange], andKeys: Seq[BloomKey],
@@ -637,8 +579,26 @@ object ZoneMaps {
     lazy val folded = bloom.exists(bloomFolded)
     def servable(k: BloomKey): Boolean = !k.ci || folded
     val idxRanges = ranges.filter(indexed)
-    val zoneKeep = stats.filter(_ => idxRanges.nonEmpty)
-      .map(st => surviving(st, idxRanges).toSet)
+    // the OR groups whose every unit a published artifact backs
+    val groups = orGs
+      .map(us => (us.collect { case Left(r) => r },
+        us.collect { case Right(k) => k }))
+      .filter { case (rs, ks) => rs.forall(indexed) &&
+        (ks.isEmpty || (bloom.nonEmpty && ks.forall(servable))) }
+    // the zone decision: one (file, and-flag, unit flags...) row per
+    // file; a null overlap prunes, as in [[surviving]]'s filter
+    val unitRanges = groups.flatMap(_._1)
+    val zoneRows = stats.filter(_ => idxRanges.nonEmpty || unitRanges.nonEmpty)
+      .map { st =>
+        val flags = idxRanges.map(zoneOverlap).reduceOption(_ && _)
+          .getOrElse(lit(true)) +: unitRanges.map(zoneOverlap)
+        st.select(col("file") +: flags.map(coalesce(_, lit(false))): _*)
+          .collect()
+      }
+    def zoneKept(flag: Int): Set[String] = zoneRows.get
+      .collect { case r if r.getBoolean(flag) => r.getString(0) }.toSet
+    val zoneKeep =
+      if (idxRanges.isEmpty) None else zoneRows.map(_ => zoneKept(1))
     val andServable =
       if (bloom.isEmpty) Nil else andKeys.filter(servable)
     val andKeep = bloom.filter(_ => andServable.nonEmpty).map(bl =>
@@ -648,25 +608,14 @@ object ZoneMaps {
     // could match files the others would prune, so all-or-nothing
     val anyKeep = for (bl <- bloom; ks <- anyK if ks.forall(servable))
       yield survivingBloom(bl, ks.map(_.key)).toSet
-    // per-group supported/used tracking feeds the crash-window check:
-    // only artifacts that actually CONTRIBUTED a keep set need their
-    // unknown files restored
-    var statsUsed = zoneKeep.nonEmpty
-    var bloomUsed = andKeep.nonEmpty || anyKeep.nonEmpty
-    val groupKeeps: Seq[Set[String]] = orGs.flatMap { units =>
-      val rs = units.collect { case Left(r) => r }
-      val ks = units.collect { case Right(k) => k }
-      val supported = rs.forall(indexed) &&
-        (ks.isEmpty || (bloom.nonEmpty && ks.forall(servable)))
-      if (!supported) None
-      else {
-        if (rs.nonEmpty) statsUsed = true
-        if (ks.nonEmpty) bloomUsed = true
-        Some(rs.flatMap(r => surviving(stats.get, Seq(r))).toSet ++
-          (if (ks.isEmpty) Set.empty[String]
-           else survivingBloom(bloom.get, ks.map(_.key)).toSet))
-      }
+    val firstFlags = groups.map(_._1.size).scanLeft(2)(_ + _)
+    val groupKeeps = groups.zip(firstFlags).map { case ((rs, ks), first) =>
+      rs.indices.flatMap(i => zoneKept(first + i)).toSet ++
+        (if (ks.isEmpty) Set.empty[String]
+         else survivingBloom(bloom.get, ks.map(_.key)).toSet)
     }
+    val bloomUsed = andKeep.nonEmpty || anyKeep.nonEmpty ||
+      groups.exists(_._2.nonEmpty)
     val keeps = zoneKeep.toSeq ++ andKeep.toSeq ++ anyKeep.toSeq ++
       groupKeeps
     if (keeps.isEmpty) None
@@ -674,37 +623,52 @@ object ZoneMaps {
       // crash-window soundness: [[SkippingRegistry.appendFiles]] commits
       // data BEFORE refreshing stats, so a reader compiling in that
       // window — or after a crash between the write and the refresh —
-      // sees layout files no consulted artifact knows. [[surviving]] /
-      // [[survivingBloom]] can only keep files their artifact lists, so
-      // unknown files must be restored HERE or the pruned read loses
-      // their rows (prune never decides). Steady state pays the
-      // directory listing (the same driver-resident InMemoryFileIndex
-      // work the scan's own planning does) plus the per-artifact file
-      // count: under the registry discipline artifacts are built from
-      // listings of an append-only layout (artifact files ⊆ listing),
-      // so count equality proves set equality, and the anti-join runs
-      // only inside the rare mismatch window — returning just the
-      // delta's names, never the known set.
-      val listing = spark.read.parquet(layout.dataDir).inputFiles
-      val consulted = (if (statsUsed) stats.toSeq else Nil) ++
-        (if (bloomUsed) bloom.toSeq else Nil)
-      val counts = consulted.map(_.select(col("file")).distinct().count())
-      val unknown: Set[String] =
-        if (counts.forall(_ == listing.length.toLong)) Set.empty
+      // sees layout files no consulted artifact knows. The survivor
+      // sets can only hold files their artifact lists, so unknown files
+      // must be restored HERE or the pruned read loses their rows
+      // (prune never decides). The listing is the same driver-resident
+      // InMemoryFileIndex work the scan's own planning does; the zone
+      // artifact's file list came back with its decision rows, so its
+      // unknown set is a driver-side difference. A Bloom artifact is
+      // files × words rows: under the registry discipline artifacts are
+      // built from listings of an append-only layout (artifact files ⊆
+      // listing), so its file count equal to the listing's proves set
+      // equality, and the anti-join runs only inside the rare mismatch
+      // window — returning just the delta's names, never the known set.
+      val listed = spark.read.parquet(layout.dataDir)
+      val listing = listed.inputFiles
+      val zoneFiles = zoneRows.map(_.map(_.getString(0)).toSet)
+      val bloomFiles =
+        bloom.filter(_ => bloomUsed).map(_.select(col("file")).distinct())
+      val bloomCount = bloomFiles.map(_.count())
+      val bloomUnknown: Set[String] =
+        if (bloomCount.forall(_ == listing.length.toLong)) Set.empty
         else {
           import spark.implicits._
-          val listDf = listing.toIndexedSeq.toDF("file")
-          consulted.map(a =>
-            listDf.join(a.select(col("file")).distinct(),
-              Seq("file"), "left_anti").as[String].collect().toSet)
-            .reduceOption(_ union _).getOrElse(Set.empty)
+          listing.toIndexedSeq.toDF("file")
+            .join(bloomFiles.get, Seq("file"), "left_anti")
+            .as[String].collect().toSet
         }
+      val unknown = zoneFiles.map(listing.toSet -- _).getOrElse(Set.empty) ++
+        bloomUnknown
       val kept = (keeps.reduce(_ intersect _) ++ unknown).toSeq.sorted
-      val total = counts.headOption.getOrElse(0L)
-      Some((filesRead(spark, layout.dataDir, kept),
+      val total = zoneFiles.map(_.size.toLong).orElse(bloomCount).getOrElse(0L)
+      Some((filesRead(spark, listed.schema, kept),
         PruneReport(total, kept.length.toLong)))
     }
   }
+
+  /** The kept files, read with the listing's already-inferred schema (no
+    * second footer job). An empty survivor set is an empty frame with
+    * that schema — `parquet()` with zero paths is an error.
+    */
+  private def filesRead(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
 
   /** Widest IN-list the Bloom route will prune with — beyond this the
     * probe table itself stops being broadcast-trivial and the skipped

@@ -60,9 +60,9 @@ object CacheStream {
   private[graft] val BatchMarker = "_applied_batch"
 
   /** Write the exactly-once batch marker INSIDE a version directory —
-    * shared by every versioned publisher that participates in a stream
-    * lineage (cache merge, IVF append/compact, MinHash append), so data
-    * and marker always flip with the one pointer rename.
+    * the one writer, behind [[graft.operators.CacheRefresh.publishVersioned]]'s
+    * `marker` (cache merge, IVF append/compact, MinHash append, skipping
+    * stats), so data and marker always flip with the one pointer rename.
     */
   private[graft] def writeBatchMarker(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -76,22 +76,17 @@ object CacheStream {
     out.write(batchId.toString.getBytes("UTF-8")); out.close()
   }
 
-  /** [[readAppliedBatch]] for callers outside the streaming package
-    * (the skipping registry's stream-maintained stats). Resolves the
-    * filesystem from the directory itself, like every sibling caller —
-    * FileSystem.get(conf) is the DEFAULT scheme, and on a non-default
-    * store the marker would always read None, re-applying every
-    * replayed batch.
+  /** The batch id [[writeBatchMarker]] recorded in version `dir`, if
+    * any. Resolves the filesystem from the directory itself, as the
+    * writer does — FileSystem.get(conf) is the DEFAULT scheme, and on a
+    * non-default store the marker would always read None, re-applying
+    * every replayed batch.
     */
   private[graft] def readAppliedBatchIn(
       conf: org.apache.hadoop.conf.Configuration,
-      dir: String): Option[Long] =
-    readAppliedBatch(
-      new org.apache.hadoop.fs.Path(dir).getFileSystem(conf), dir)
-
-  private[streaming] def readAppliedBatch(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Option[Long] = {
+      dir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir, BatchMarker)
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -133,16 +128,11 @@ object CacheStream {
       .option("checkpointLocation",
         checkpointLocation.getOrElse(livePath + ".checkpoint"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val hasCurrent = fs.exists(
-          new org.apache.hadoop.fs.Path(livePath + ".current"))
-        val currentDir =
-          if (hasCurrent)
-            Some(graft.operators.CacheRefresh.resolveLive(spark, livePath))
-          else None
-        val alreadyApplied = currentDir
-          .flatMap(readAppliedBatch(fs, _)).exists(_ >= batchId)
+        // resolveLive answers livePath itself when nothing is published
+        val currentDir = Some(graft.operators.CacheRefresh
+          .resolveLive(spark, livePath)).filter(_ != livePath)
+        val alreadyApplied = currentDir.flatMap(readAppliedBatchIn(
+          spark.sparkContext.hadoopConfiguration, _)).exists(_ >= batchId)
         if (alreadyApplied) {
           // replay of a batch the current version already folded in
           // (at-least-once redelivery): merging again would double-count
@@ -158,14 +148,11 @@ object CacheStream {
           // writes the next and only then moves the pointer — the read
           // plan is executed (write) before the pointer flip, so the
           // self-join on the snapshot is race-free
-          graft.operators.CacheRefresh.publishVersioned(spark, livePath) {
-            dir =>
-              // repartition, not coalesce — same rationale as fullSwap's
-              // numFiles: don't throttle the merge plan to 1-way
-              merged.repartition(1).write.mode("overwrite").parquet(dir)
-              val out = fs.create(
-                new org.apache.hadoop.fs.Path(dir, BatchMarker), true)
-              out.write(batchId.toString.getBytes("UTF-8")); out.close()
+          graft.operators.CacheRefresh.publishVersioned(spark, livePath,
+              marker = Some(batchId)) { dir =>
+            // repartition, not coalesce — same rationale as fullSwap's
+            // numFiles: don't throttle the merge plan to 1-way
+            merged.repartition(1).write.mode("overwrite").parquet(dir)
           }
         }
         ()

@@ -41,11 +41,11 @@ object IndexStream {
       graft.pipeline.IndexStore.loadIvf(spark, livePath)
     val merged = assigned.unionByName(
       graft.pipeline.Similarity.ivfAssign(centroids, batch, id, vec))
-    graft.operators.CacheRefresh.publishVersioned(spark, livePath) { dir =>
+    graft.operators.CacheRefresh.publishVersioned(spark, livePath,
+        marker = marker) { dir =>
       centroids.repartition(1).write.mode("overwrite")
         .parquet(s"$dir/centroids")
       merged.write.mode("overwrite").parquet(s"$dir/assigned")
-      marker.foreach(b => CacheStream.writeBatchMarker(spark, dir, b))
     }
   }
 
@@ -72,11 +72,9 @@ object IndexStream {
       vec: String, livePath: String,
       compaction: Option[CompactionPolicy] = None): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val live = graft.operators.CacheRefresh.resolveLive(spark, livePath)
-    val alreadyApplied = live != livePath &&
-      CacheStream.readAppliedBatch(fs, live).exists(_ >= batchId)
+    val alreadyApplied = live != livePath && CacheStream.readAppliedBatchIn(
+      spark.sparkContext.hadoopConfiguration, live).exists(_ >= batchId)
     if (!alreadyApplied) {
       appendBatch(batch, id, vec, livePath, marker = Some(batchId))
       compaction.foreach(p => graft.pipeline.IndexStore.compactIfSkewed(
@@ -131,11 +129,11 @@ object IndexStream {
       .option("checkpointLocation",
         checkpointLocation.getOrElse(livePath + ".checkpoint"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
         val live = graft.operators.CacheRefresh.resolveLive(spark, livePath)
         val alreadyApplied = live != livePath &&
-          CacheStream.readAppliedBatch(fs, live).exists(_ >= batchId)
+          CacheStream.readAppliedBatchIn(
+            spark.sparkContext.hadoopConfiguration, live)
+            .exists(_ >= batchId)
         if (!alreadyApplied)
           graft.pipeline.IndexStore.appendMinhash(batch, id, text,
             shingleN, k, bands, maxBucketSize, livePath, hasher,

@@ -110,13 +110,4 @@ object ColumnBridge {
             cd.plan.treeString.linesIterator.take(3).mkString(" | "))
       case _ => Seq.empty
     }
-
-  /** RDD ids of the checkpoint scans (`LogicalRDD`) in a frame's plan —
-    * lets a spec assert that the only blocks an operator left behind are
-    * the ones backing its returned result.
-    */
-  def pinnedRddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
 }

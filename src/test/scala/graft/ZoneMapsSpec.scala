@@ -1,6 +1,11 @@
 package graft
 
-import graft.sources.ZoneMaps
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import graft.sources.{SkippingRegistry, ZoneMaps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** File-granularity zone-map skipping: pruning must actually skip files
@@ -19,17 +24,61 @@ class ZoneMapsSpec extends SparkSpec {
     dir
   }
 
+  // every skipping read goes through pruneForClauses over a Layout; the
+  // caller re-applies the exact predicate
+  private def register(dir: String, zoneCols: Seq[String],
+      bloomCol: Option[String] = None) =
+    SkippingRegistry.register(spark, dir, zoneCols, bloomCol)
+
+  private def prune(lay: ZoneMaps.Layout, ranges: Seq[ZoneMaps.ZoneRange]) =
+    ZoneMaps.pruneForClauses(spark, lay, ranges, Nil).get
+
+  private def pruneAny(lay: ZoneMaps.Layout, keys: Seq[Long]) =
+    ZoneMaps.pruneForClauses(spark, lay, Nil, Nil,
+      Some(keys.map(k => ZoneMaps.BloomKey(k.toString)))).get
+
+  /** Result-stage names of the Spark jobs `body` starts, in order. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"zonemaps-spec-${java.util.UUID.randomUUID}"
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add((e.properties.getProperty("spark.job.description"),
+            e.stageInfos.maxBy(_.stageId).name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      body
+      sc.setJobDescription("sentinel")
+      spark.range(1).count()
+      // the bus delivers in order: once the sentinel shows, every job
+      // started before it has been counted
+      def done = seen.asScala.exists(_._1 == "sentinel")
+      val t0 = System.nanoTime()
+      while (!done && System.nanoTime() - t0 < 60e9) Thread.sleep(20)
+      assert(done, "listener never saw the sentinel")
+      seen.asScala.toSeq.takeWhile(_._1 != "sentinel").map(_._2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("range layout: files are skipped and the pruned read equals the " +
       "full-scan filter exactly") {
     val rows = (0L until 400L).map(i => (i, i % 97 * 10, s"t${i % 3}"))
     val dir = layout(rows)
-    val stats = ZoneMaps.buildStats(spark, dir, Seq("v"))
     val ranges = Seq(ZoneMaps.ColRange("v", 200, 350))
-    val (pruned, report) = ZoneMaps.prunedRead(spark, dir, stats, ranges)
+    val (pruned, report) = prune(register(dir, Seq("v")), ranges)
     assert(report.filesKept < report.filesTotal,
       s"a range layout must skip files (${report.filesKept}/${report.filesTotal})")
     assert(report.filesKept > 0)
-    val got = pruned.select("id", "v", "tag")
+    val got = pruned.filter(col("v").between(200, 350))
+      .select("id", "v", "tag")
       .as[(Long, Long, String)].collect().toSeq.sorted
     val want = spark.read.parquet(dir)
       .filter(col("v").between(200, 350))
@@ -42,13 +91,14 @@ class ZoneMapsSpec extends SparkSpec {
   test("conjunction: a file must overlap EVERY predicate to survive") {
     val rows = (0L until 200L).map(i => (i, i * 5, s"t${i % 2}"))
     val dir = layout(rows)
-    val stats = ZoneMaps.buildStats(spark, dir, Seq("v", "id"))
     val ranges = Seq(ZoneMaps.ColRange("v", 0, 995),
       ZoneMaps.ColRange("id", 150, 160))
-    val (pruned, report) = ZoneMaps.prunedRead(spark, dir, stats, ranges)
+    val (pruned, report) = prune(register(dir, Seq("v", "id")), ranges)
     // v covers the whole domain; the id interval alone must do the pruning
     assert(report.filesKept < report.filesTotal)
-    val got = pruned.select("id").as[Long].collect().toSeq.sorted
+    val got = pruned
+      .filter(col("v").between(0, 995) && col("id").between(150, 160))
+      .select("id").as[Long].collect().toSeq.sorted
     assert(got == (150L to 160L),
       "conjunction must keep exactly the intersection's rows")
   }
@@ -68,8 +118,10 @@ class ZoneMapsSpec extends SparkSpec {
     val files = ZoneMaps.surviving(stats, ranges)
     assert(files.size == 2,
       s"the all-null file must prune (survivors: ${files.size})")
-    val (pruned, _) = ZoneMaps.prunedRead(spark, dir, stats, ranges)
-    val got = pruned.select("id").as[Long].collect().toSeq.sorted
+    val (pruned, report) = prune(register(dir, Seq("v")), ranges)
+    assert(report.filesKept == 2 && report.filesTotal == 3, report.toString)
+    val got = pruned.filter(col("v").between(40, 100))
+      .select("id").as[Long].collect().toSeq.sorted
     assert(got == Seq(3L, 5L, 6L),
       "null rows in surviving files must still be filtered out")
   }
@@ -77,8 +129,7 @@ class ZoneMapsSpec extends SparkSpec {
   test("no survivors: empty frame with the layout's schema, zero rows") {
     val rows = (0L until 50L).map(i => (i, i, "t"))
     val dir = layout(rows, parts = 4)
-    val stats = ZoneMaps.buildStats(spark, dir, Seq("v"))
-    val (pruned, report) = ZoneMaps.prunedRead(spark, dir, stats,
+    val (pruned, report) = prune(register(dir, Seq("v")),
       Seq(ZoneMaps.ColRange("v", 1000, 2000)))
     assert(report.filesKept == 0)
     assert(pruned.count() == 0)
@@ -94,15 +145,14 @@ class ZoneMapsSpec extends SparkSpec {
     val zones = ZoneMaps.buildStats(spark, dir, Seq("id"))
     val zoneSurvivors = ZoneMaps.surviving(zones,
       Seq(ZoneMaps.ColRange("id", 17, 17)))
-    val bloom = ZoneMaps.buildBloomStats(spark, dir, "id")
     val keys = Seq(17L, 391L)
-    val (pruned, report) = ZoneMaps.bloomPrunedRead(spark, dir, bloom,
-      "id", keys)
+    val (pruned, report) = pruneAny(register(dir, Nil, Some("id")), keys)
     assert(report.filesKept < report.filesTotal,
       s"bloom must skip files (${report.filesKept}/${report.filesTotal})")
     assert(report.filesKept.toInt < zoneSurvivors.size,
       "bloom must out-prune id zone maps on a v-ordered layout")
-    val got = pruned.select("id", "v", "tag")
+    val got = pruned.filter(col("id").isin(keys: _*))
+      .select("id", "v", "tag")
       .as[(Long, Long, String)].collect().toSeq.sorted
     val want = spark.read.parquet(dir).filter(col("id").isin(keys: _*))
       .select("id", "v", "tag")
@@ -115,10 +165,9 @@ class ZoneMapsSpec extends SparkSpec {
       "false positives only cost reads)") {
     val rows = (0L until 100L).map(i => (i, i, "t"))
     val dir = layout(rows, parts = 4)
-    val bloom = ZoneMaps.buildBloomStats(spark, dir, "id")
-    val (pruned, report) = ZoneMaps.bloomPrunedRead(spark, dir, bloom,
-      "id", Seq(99999L))
-    assert(pruned.count() == 0)
+    val (pruned, report) = pruneAny(register(dir, Nil, Some("id")),
+      Seq(99999L))
+    assert(pruned.filter(col("id") === 99999L).count() == 0)
     // with mBits = 8192 and 100 keys the false-positive odds per file
     // are negligible; tolerate them but expect usually-zero survivors
     assert(report.filesKept <= 1,
@@ -132,18 +181,18 @@ class ZoneMapsSpec extends SparkSpec {
     // autoBits resolves ~2^19 and an absent key prunes everything
     val rows = (0L until 200000L).map(i => (i, i, "t"))
     val dir = layout(rows, parts = 4)
-    val bloom = ZoneMaps.buildBloomStats(spark, dir, "id")
+    val lay = register(dir, Nil, Some("id"))
+    val bloom = ZoneMaps.loadStats(spark, SkippingRegistry.bloomLivePath(dir))
     assert(bloom.select("m_bits").head().getLong(0) >= (1L << 19),
       "auto width must scale with keys per file")
-    val (pruned, report) = ZoneMaps.bloomPrunedRead(spark, dir, bloom,
-      "id", Seq(999999999L))
-    assert(pruned.count() == 0)
+    val (pruned, report) = pruneAny(lay, Seq(999999999L))
+    assert(pruned.filter(col("id") === 999999999L).count() == 0)
     assert(report.filesKept <= 1,
       s"absent key must prune a dense corpus too (kept ${report.filesKept})")
     // present keys still never lose rows (no false negatives)
-    val (hit, _) = ZoneMaps.bloomPrunedRead(spark, dir, bloom, "id",
-      Seq(123456L))
-    assert(hit.select("id").as[Long].collect().toSeq == Seq(123456L))
+    val (hit, _) = pruneAny(lay, Seq(123456L))
+    assert(hit.filter(col("id") === 123456L)
+      .select("id").as[Long].collect().toSeq == Seq(123456L))
   }
 
   test("appendStats scans only the new files and equals a full rebuild") {
@@ -198,10 +247,11 @@ class ZoneMapsSpec extends SparkSpec {
     assert(migrated == rebuilt,
       "schema-drift refresh must equal the full rebuild row-for-row")
     // and TEXT pruning over the migrated artifact keeps every live row
-    val stats = ZoneMaps.loadStats(spark, statsPath)
     val ranges = Seq(ZoneMaps.TextRange("tag", "TAG3", "TAG3"))
-    val (pruned, _) = ZoneMaps.prunedRead(spark, dir, stats, ranges)
-    val got = pruned.select("id").as[Long].collect().toSeq.sorted
+    val (pruned, _) = prune(ZoneMaps.Layout(dir, statsLive = Some(statsPath)),
+      ranges)
+    val got = pruned.filter(upper(col("tag")) === "TAG3")
+      .select("id").as[Long].collect().toSeq.sorted
     val want = spark.read.parquet(dir)
       .filter(upper(col("tag")) === "TAG3")
       .select("id").as[Long].collect().toSeq.sorted
@@ -241,6 +291,42 @@ class ZoneMapsSpec extends SparkSpec {
       Seq(ZoneMaps.ColRange("v", 0, 10)), Nil)
     assert(steady.get._2.filesKept <= 1 + 2,
       "known-file pruning must still work inside the window")
+  }
+
+  test("job budget: a warm zone-only pruneForClauses runs 2 jobs — one " +
+      "stats collect and the listing's schema inference") {
+    val rows = (0L until 400L).map(i => (i, i % 97 * 10, s"t${i % 3}"))
+    val lay = register(layout(rows), Seq("v"))
+    val ranges = Seq(ZoneMaps.ColRange("v", 200, 350))
+    prune(lay, ranges) // cold: loads the stats memo
+    val jobs = jobsOf(prune(lay, ranges))
+    assert(jobs.size == 2, s"warm zone-only decision jobs: $jobs")
+    assert(jobs.count(_.startsWith("collect at ZoneMaps")) == 1, jobs.toString)
+  }
+
+  test("job budget: an OR group of 3 zone units decides in ONE stats " +
+      "collect and keeps every unit's rows") {
+    val rows = (0L until 400L).map(i => (i, i % 97 * 10, s"t${i % 3}"))
+    val dir = layout(rows)
+    val lay = register(dir, Seq("v"))
+    val units = Seq((0L, 10L), (500L, 510L), (900L, 910L))
+    val group: Seq[ZoneMaps.OrUnit] =
+      units.map { case (lo, hi) => Left(ZoneMaps.ColRange("v", lo, hi)) }
+    def run() = ZoneMaps.pruneForClauses(spark, lay, Nil, Nil,
+      orGroups = Seq(group)).get
+    run() // cold: loads the stats memo
+    val jobs = jobsOf(run())
+    assert(jobs.count(_.startsWith("collect at ZoneMaps")) == 1,
+      s"one stats collect for every unit: $jobs")
+    assert(jobs.size == 2, jobs.toString)
+    val (pruned, report) = run()
+    assert(report.filesKept < report.filesTotal, report.toString)
+    val exact = units.map { case (lo, hi) => col("v").between(lo, hi) }
+      .reduce(_ || _)
+    val got = pruned.filter(exact).select("id").as[Long].collect().toSeq.sorted
+    val want = spark.read.parquet(dir).filter(exact)
+      .select("id").as[Long].collect().toSeq.sorted
+    assert(got == want && want.nonEmpty, "the OR survivors lost rows")
   }
 
   test("compiled routing: an F1 range clause prunes the file list, the " +
