@@ -327,7 +327,7 @@ object QueryCompiler {
       // equality on the Bloom column probes with the clause value in
       // the BUILD-side representation (raw value — cast-to-string for
       // non-text keys, case-folding applied centrally by
-      // survivingBloom per the artifact's own `folded` flag); the ci
+      // ZoneMaps.decideBlooms per the artifact's own `folded` flag); the ci
       // marker gates servability: a ci probe against a raw-cased
       // artifact would be a false negative, so it only routes at
       // case-folded Blooms
@@ -369,7 +369,7 @@ object QueryCompiler {
         // survivor-union group (groups intersect — a clause whose
         // members don't all compile just drops, sound under AND)
         graft.sources.ZoneMaps.pruneForClauses(
-          cat.entities.sparkSession, layout,
+          cat.entities, layout,
           spec.provenance.flatMap(clauseRange),
           spec.provenance.flatMap(bloomEq), listKeys,
           orGroups = spec.grouped.flatMap(groupUnits(_).toSeq))
@@ -385,7 +385,7 @@ object QueryCompiler {
           spec.provenance.map(c => unitOf(c).map(Seq(_))) ++
             spec.grouped.map(groupUnits)
         graft.sources.ZoneMaps.pruneForClauses(
-          cat.entities.sparkSession, layout, Nil, Nil, listKeys,
+          cat.entities, layout, Nil, Nil, listKeys,
           orGroups = if (arms.forall(_.isDefined))
             Seq(arms.flatten.flatten) else Nil)
       }
@@ -398,12 +398,12 @@ object QueryCompiler {
           case HasAllele(l, _, _) => l
           case LocusMissing(l) => l
         }.distinct
-        graft.sources.ZoneMaps.pruneForClauses(
-          cat.entities.sparkSession, layout, Nil, Nil, None,
+        cat.facts.flatMap(graft.sources.ZoneMaps.pruneForClauses(
+          _, layout, Nil, Nil, None,
           orGroups = Seq(loci.map(l =>
             Left(graft.sources.ZoneMaps.ColRange(
               cat.locusCol, l.toLong, l.toLong)):
-              graft.sources.ZoneMaps.OrUnit)))
+              graft.sources.ZoneMaps.OrUnit))))
       }
     // EAV fact pruning (the reference's per-(isolate, field) eav_*
     // indexes, sql/isolatedb.sql:1707-1812, at file granularity): the
@@ -420,12 +420,12 @@ object QueryCompiler {
       .filter(_ => spec.eav.nonEmpty)
       .flatMap { layout =>
         val fields = spec.eav.map(_.field).distinct
-        graft.sources.ZoneMaps.pruneForClauses(
-          cat.entities.sparkSession, layout, Nil, Nil, None,
+        cat.eav.flatMap(graft.sources.ZoneMaps.pruneForClauses(
+          _, layout, Nil, Nil, None,
           orGroups = Seq(fields.map(f =>
             Left(graft.sources.ZoneMaps.TextRange(
               cat.eavField, f.toUpperCase, f.toUpperCase)):
-              graft.sources.ZoneMaps.OrUnit)))
+              graft.sources.ZoneMaps.OrUnit))))
       }
     // Tag fact pruning (allele_sequences' locus index at file
     // granularity): both tag families — membership AND zero-inclusive
@@ -441,12 +441,12 @@ object QueryCompiler {
       .flatMap { layout =>
         val loci = (spec.tags.flatMap(_.locus) ++
           spec.tagCounts.flatMap(_.locus)).distinct
-        graft.sources.ZoneMaps.pruneForClauses(
-          cat.entities.sparkSession, layout, Nil, Nil, None,
+        cat.tags.flatMap(graft.sources.ZoneMaps.pruneForClauses(
+          _, layout, Nil, Nil, None,
           orGroups = Seq(loci.map(l =>
             Left(graft.sources.ZoneMaps.ColRange(
               cat.tagLocusCol, l.toLong, l.toLong)):
-              graft.sources.ZoneMaps.OrUnit)))
+              graft.sources.ZoneMaps.OrUnit))))
       }
     val cat2 = cat.copy(
       entities = routed.map(_._1).getOrElse(cat.entities),

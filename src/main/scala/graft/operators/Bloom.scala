@@ -26,7 +26,10 @@ object Bloom {
 
   final case class Filter(words: Seq[Long], mBits: Long, k: Int)
 
-  private def probe(i: Int, key: Column, mBits: Long): Column =
+  /** Probe `i`'s bit position for `key`: the one md5 probe, shared with
+    * the per-file skipping Blooms ([[graft.sources.ZoneMaps]]).
+    */
+  private[graft] def probe(i: Int, key: Column, mBits: Long): Column =
     pmod(conv(substring(md5(
       concat(lit(s"$i|"), key.cast("string"))), 1, 15), 16, 10).cast("long"),
       lit(mBits))

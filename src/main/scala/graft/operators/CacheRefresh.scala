@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem,
+  Options, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -107,13 +110,61 @@ object CacheRefresh {
     * window sees NO pointer at all). FederationSpec's swap-race reader
     * caught both under full-suite load. The raw filesystem's rename is
     * one rename(2) on POSIX (atomic overwrite) and one atomic NN op on
-    * HDFS — and raw readers never consult crc sidecars.
+    * HDFS — and raw readers never consult crc sidecars. The FileSystem
+    * is the PATH's own, not the configured default: an artifact on
+    * s3a/abfs under an HDFS default lives on the path's store.
     */
-  private def rawFs(fs: org.apache.hadoop.fs.FileSystem): org.apache.hadoop.fs.FileSystem =
-    fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+  private def rawFs(p: Path, conf: Configuration): FileSystem =
+    p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
       case other => other
     }
+
+  /** Atomically replace the small text file at `path` with `text` — the
+    * one pointer-file writer, behind [[publishVersioned]]'s `.current`
+    * pointer and the skipping registry's manifest: a reader in any JVM
+    * sees the old or the new content, never a gap or a torn file. The
+    * content is written to `path.tmp` and moved over `path` with ONE raw
+    * rename (POSIX rename(2) overwrites atomically; HDFS needs the
+    * explicit OVERWRITE fallback below — there FileContext.rename is a
+    * single atomic namenode op and HDFS has no client-side crc
+    * sidecars).
+    */
+  private[graft] def writePointerFile(conf: Configuration, path: String,
+      text: String): Unit = {
+    val p = new Path(path)
+    val fs = rawFs(p, conf)
+    val tmp = new Path(path + ".tmp")
+    val out = fs.create(tmp, true)
+    out.write(text.getBytes("UTF-8")); out.close()
+    // heal sidecars a pre-raw writer may have left: a raw rename would
+    // leave them describing stale bytes, failing any checksummed reader
+    Seq(p, tmp).foreach { f =>
+      val crc = new Path(f.getParent, "." + f.getName + ".crc")
+      if (fs.exists(crc)) fs.delete(crc, false)
+    }
+    if (!fs.rename(tmp, p))
+      FileContext.getFileContext(fs.getUri, conf)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+  }
+
+  /** The trimmed text [[writePointerFile]] wrote at `path`, or None when
+    * the file is absent or empty. Raw, so it never consults a crc
+    * sidecar.
+    */
+  private[graft] def readPointerFile(conf: Configuration,
+      path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = rawFs(p, conf)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try {
+        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        if (s.isEmpty) None else Some(s)
+      } finally in.close()
+    }
+  }
 
   /** The versioned-pointer publish protocol, independent of WHAT gets
     * written: `write` materializes the next version under the directory
@@ -129,40 +180,23 @@ object CacheRefresh {
       livePath: String, minRetainMs: Long = 10L * 60 * 1000,
       marker: Option[Long] = None)(write: String => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = rawFs(org.apache.hadoop.fs.FileSystem.get(conf))
-    val pointer = new org.apache.hadoop.fs.Path(livePath + ".current")
-    val prev = readPointer(fs, pointer)
+    val prev = readPointerFile(conf, livePath + ".current")
     val prevV = prev.flatMap(p => "\\.v(\\d+)$".r.findFirstMatchIn(p).map(_.group(1).toInt))
     val nextV = prevV.map(_ + 1).getOrElse(1)
     val versioned = s"$livePath.v$nextV"
     write(versioned)
     marker.foreach(graft.streaming.CacheStream
       .writeBatchMarker(spark, versioned, _))
-    val tmp = new org.apache.hadoop.fs.Path(livePath + ".current.tmp")
-    val out = fs.create(tmp, true)
-    out.write(versioned.getBytes("UTF-8")); out.close()
-    // heal sidecars a pre-raw writer may have left: a raw rename would
-    // leave them describing stale bytes, failing any checksummed reader
-    Seq(pointer, tmp).foreach { p =>
-      val crc = new org.apache.hadoop.fs.Path(
-        p.getParent, "." + p.getName + ".crc")
-      if (fs.exists(crc)) fs.delete(crc, false)
-    }
-    // atomic publish: ONE raw rename (POSIX rename(2) overwrites
-    // atomically; HDFS needs the explicit OVERWRITE fallback below —
-    // there FileContext.rename is a single atomic namenode op and HDFS
-    // has no client-side crc sidecars)
-    if (!fs.rename(tmp, pointer))
-      org.apache.hadoop.fs.FileContext.getFileContext(conf)
-        .rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    writePointerFile(conf, livePath + ".current", versioned)
     // prune STALE versions below N-1: a reader that resolved the old
     // pointer just before the swap can still finish its scan (N-1 always
     // survives), and the age grace keeps any version a live scan could
     // still hold even when refreshes arrive faster than scans complete
     prevV.filter(_ >= 2).foreach { pv =>
+      val fs = rawFs(new Path(livePath), conf)
       val now = System.currentTimeMillis()
       (1 until pv).foreach { v =>
-        val p = new org.apache.hadoop.fs.Path(s"$livePath.v$v")
+        val p = new Path(s"$livePath.v$v")
         if (fs.exists(p) &&
             now - fs.getFileStatus(p).getModificationTime > minRetainMs)
           fs.delete(p, true)
@@ -174,22 +208,7 @@ object CacheRefresh {
     * [[fullSwap]] (falls back to `livePath` itself for caches written
     * directly, pre-pointer).
     */
-  def resolveLive(spark: org.apache.spark.sql.SparkSession, livePath: String): String = {
-    val fs = rawFs(
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration))
-    readPointer(fs, new org.apache.hadoop.fs.Path(livePath + ".current"))
-      .getOrElse(livePath)
-  }
-
-  private def readPointer(
-      fs: org.apache.hadoop.fs.FileSystem,
-      pointer: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(pointer)) None
-    else {
-      val in = fs.open(pointer)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        if (s.isEmpty) None else Some(s)
-      } finally in.close()
-    }
+  def resolveLive(spark: org.apache.spark.sql.SparkSession, livePath: String): String =
+    readPointerFile(spark.sparkContext.hadoopConfiguration,
+      livePath + ".current").getOrElse(livePath)
 }

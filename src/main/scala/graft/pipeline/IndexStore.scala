@@ -105,15 +105,6 @@ object IndexStore {
     } finally graft.operators.Pinning.unpin(sigs)
   }
 
-  /** Dedup an ingest batch against the persisted index — the daily-crawl
-    * access pattern with ZERO base-corpus access: the delta pays its own
-    * signature work plus one bucket-key join against the stored bucket
-    * table; base signatures attach only for surviving candidates.
-    * Parquet round-trips the BIGINT signatures exactly, so verdicts are
-    * bit-identical to the in-session [[Dedup.incrementalNearDup]]
-    * (IndexStoreSpec pins it; the dedup_index_persisted CORRECTNESS row
-    * shares dedup_incremental's oracle).
-    */
   /** Persist a learned BPE merge table — the third artifact family with
     * the build-once / serve-across-sessions lifecycle (IVF index, MinHash
     * index, tokenizer): training sweeps the corpus once
@@ -147,6 +138,15 @@ object IndexStore {
       .sortBy(_.rank).toIndexedSeq
   }
 
+  /** Dedup an ingest batch against the persisted index — the daily-crawl
+    * access pattern with ZERO base-corpus access: the delta pays its own
+    * signature work plus one bucket-key join against the stored bucket
+    * table; base signatures attach only for surviving candidates.
+    * Parquet round-trips the BIGINT signatures exactly, so verdicts are
+    * bit-identical to the in-session [[Dedup.incrementalNearDup]]
+    * (IndexStoreSpec pins it; the dedup_index_persisted CORRECTNESS row
+    * shares dedup_incremental's oracle).
+    */
   def queryMinhash(spark: SparkSession, livePath: String, delta: DataFrame,
       id: String, text: String, shingleN: Int, k: Int, bands: Int,
       minEstJaccard: Double,

@@ -473,16 +473,18 @@ object SourceQueries extends QueryModule {
       Seq("n_chars"), Some("doc_id"))(Tables.load(s, dir, "documents"))
 
   // The hand-written skipping scans take the same read path as the
-  // compiled ones: the registry-resolved Layout, pruneForClauses, then
-  // the exact predicate; no registration means the plain read.
+  // compiled ones: the registry-resolved Layout, pruneForClauses over
+  // the one plain read, then the exact predicate; no registration means
+  // that plain read.
   private def prunedScan(s: org.apache.spark.sql.SparkSession, dir: String,
       ranges: Seq[graft.sources.ZoneMaps.ZoneRange],
       anyKeys: Option[Seq[graft.sources.ZoneMaps.BloomKey]]) = {
     val data = s"${cachedZonemapLayout(s, dir)}/data"
+    val scan = s.read.parquet(data)
     graft.sources.SkippingRegistry.layoutFor(s, data)
-      .flatMap(graft.sources.ZoneMaps.pruneForClauses(s, _, ranges, Nil,
+      .flatMap(graft.sources.ZoneMaps.pruneForClauses(scan, _, ranges, Nil,
         anyKeys))
-      .map(_._1).getOrElse(s.read.parquet(data))
+      .map(_._1).getOrElse(scan)
   }
 
   private val scanZonemapPrune = Q(

@@ -19,8 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `manifest` — one line per entry, `zone_cols=a,b` /
   *     `bloom_col=k`: WHICH columns are indexed (column identifiers
   *     only — no quoting). The manifest is metadata about artifact
-  *     existence, written once at [[register]] and atomically replaced
-  *     on re-register.
+  *     existence, written once at [[register]] and replaced on
+  *     re-register through the one pointer-file writer
+  *     ([[graft.operators.CacheRefresh.writePointerFile]], the
+  *     `.current` pointers' atomic raw rename): a reader in any JVM
+  *     sees the old or the new registration, never none.
   *   - `stats.v<N>` + `stats.current` — the zone-map table under the
   *     [[graft.operators.CacheRefresh]] versioned pointer.
   *   - `bloom.v<N>` + `bloom.current` — the per-file Bloom table,
@@ -33,14 +36,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are a different hazard, see below) but unpruned. Registry-routed
   * reads instead see stats that every write path refreshed inline.
   *
+  * Reads: [[ZoneMaps.pruneForClauses]] is the one skipping read path.
+  * It consults each artifact with one job — the zone stats with one
+  * collect of per-file flags, the Bloom with one collect of
+  * (constraint, file) for every point-key constraint of the query —
+  * and memoizes each published version, a Bloom version with its build
+  * constants and file count, so a warm consult reads no constants.
+  *
   * Freshness note: files ABSENT from the stats table are never pruned
-  * — [[ZoneMaps.pruneForClauses]], the one skipping read path, keeps
-  * every file no consulted artifact knows — but they are read
-  * unpruned, which is why refresh is INLINE on the write path rather
-  * than a cron job — the same reasoning the reference uses triggers,
-  * not batch rebuilds. A table written outside
-  * [[appendFiles]]/[[refresh]] should re-[[refresh]] before serving
-  * reads.
+  * — [[ZoneMaps.pruneForClauses]] keeps every file no consulted
+  * artifact knows — but they are read unpruned, which is why refresh
+  * is INLINE on the write path rather than a cron job — the same
+  * reasoning the reference uses triggers, not batch rebuilds. A table
+  * written outside [[appendFiles]]/[[refresh]] should re-[[refresh]]
+  * before serving reads.
   */
 object SkippingRegistry {
 
@@ -155,42 +164,30 @@ object SkippingRegistry {
     refresh(df.sparkSession, dataDir)
   }
 
+  // the manifest goes through the one pointer-file writer: a reader in
+  // another JVM sees the old or the new registration, never a gap it
+  // would memoize as "unregistered" for its whole session
   private def writeManifest(spark: SparkSession, dataDir: String,
       reg: Registration): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    val fs = path.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(manifestPath(dataDir) + ".tmp")
-    val out = fs.create(tmp, true)
     val lines = (if (reg.zoneCols.nonEmpty)
         Seq(s"zone_cols=${reg.zoneCols.mkString(",")}") else Nil) ++
       reg.bloomCol.map(c => s"bloom_col=$c")
-    out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")); out.close()
-    // atomic replace: readers see the old or the new manifest, never a
-    // torn one (single rename; see CacheRefresh's pointer discipline)
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      org.apache.hadoop.fs.FileContext.getFileContext(conf)
-        .rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.operators.CacheRefresh.writePointerFile(
+      spark.sparkContext.hadoopConfiguration, manifestPath(dataDir),
+      lines.mkString("\n") + "\n")
   }
 
-  private def readManifest(spark: SparkSession,
-      dataDir: String): Option[Registration] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val kv = text.linesIterator.map(_.trim).filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap
-      Some(Registration(
-        kv.get("zone_cols").map(_.split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq).getOrElse(Nil),
-        kv.get("bloom_col").map(_.trim).filter(_.nonEmpty)))
-    }
-  }
+  private[graft] def readManifest(spark: SparkSession,
+      dataDir: String): Option[Registration] =
+    graft.operators.CacheRefresh.readPointerFile(
+      spark.sparkContext.hadoopConfiguration, manifestPath(dataDir))
+      .map { text =>
+        val kv = text.linesIterator.map(_.trim).filter(_.contains("="))
+          .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+          .toMap
+        Registration(
+          kv.get("zone_cols").map(_.split(",").map(_.trim)
+            .filter(_.nonEmpty).toSeq).getOrElse(Nil),
+          kv.get("bloom_col").map(_.trim).filter(_.nonEmpty))
+      }
 }

@@ -142,23 +142,12 @@ object ZoneMaps {
 
   /** The published stats table at `livePath`. A published version
     * directory never changes, so its read (and the schema inference a
-    * parquet read runs) is served from [[loadStatsIfPresent]]'s
-    * per-version memo; a path with nothing published still throws.
+    * parquet read runs) is served from [[loadArtifact]]'s per-version
+    * memo; a path with nothing published still throws.
     */
   def loadStats(spark: SparkSession, livePath: String): DataFrame =
-    loadStatsIfPresent(spark, livePath).getOrElse(spark.read.parquet(
+    loadArtifact(spark, livePath).map(_.table).getOrElse(spark.read.parquet(
       graft.operators.CacheRefresh.resolveLive(spark, livePath)))
-
-  /** The surviving file list for a conjunction of range predicates:
-    * a file is kept iff EVERY predicate's interval overlaps the file's
-    * [min, max] zone. Null zones (all-null file) fail the overlap and
-    * prune — see the NULL contract above.
-    */
-  def surviving(stats: DataFrame, ranges: Seq[ZoneRange]): Seq[String] = {
-    val keep = ranges.map(zoneOverlap).reduce(_ && _)
-    stats.filter(keep).select(col("file"))
-      .collect().map(_.getString(0)).sorted.toIndexedSeq
-  }
 
   /** The stats-row overlap test for one interval. Zone columns and the
     * probe literal compare in the SAME Spark string/long order the
@@ -179,6 +168,30 @@ object ZoneMaps {
       coalesce(col(s"nulls_$c") > 0, lit(true))
     case NullRange(c, false) =>
       coalesce(col(s"nulls_$c") < col("rows"), lit(true))
+  }
+
+  /** What one zone decision yields: the artifact's file list, the files
+    * overlapping every AND'd range, and each OR group's survivors.
+    */
+  private[graft] final case class ZoneDecision(files: Set[String],
+    kept: Set[String], groupKept: IndexedSeq[Set[String]])
+
+  /** The zone decision: ONE collect of (file, AND'd-ranges flag, one
+    * flag per OR group) over the stats table — a file is kept iff its
+    * [min, max] zone overlaps EVERY AND'd range, and survives a group
+    * iff it overlaps ANY of the group's ranges. A null overlap
+    * (all-null file) prunes — see the NULL contract above.
+    */
+  private[graft] def decideZones(stats: DataFrame, ranges: Seq[ZoneRange],
+      groups: Seq[Seq[ZoneRange]]): ZoneDecision = {
+    def overlap(r: ZoneRange) = coalesce(zoneOverlap(r), lit(false))
+    val flags = ranges.map(overlap).foldLeft(lit(true))(_ && _) +:
+      groups.map(_.map(overlap).foldLeft(lit(false))(_ || _))
+    val rows = stats.select(col("file") +: flags: _*).collect()
+    def keptBy(flag: Int): Set[String] =
+      rows.collect { case r if r.getBoolean(flag) => r.getString(0) }.toSet
+    ZoneDecision(rows.map(_.getString(0)).toSet, keptBy(1),
+      groups.indices.map(i => keptBy(i + 2)))
   }
 
   final case class PruneReport(filesTotal: Long, filesKept: Long)
@@ -246,17 +259,19 @@ object ZoneMaps {
   def appendBloomStats(spark: SparkSession, dataDir: String,
       livePath: String, keyCol: String,
       marker: Option[Long] = None): Unit = {
-    val current = loadStats(spark, livePath)
-    val head = current.select(col("m_bits"), col("k")).limit(1).collect()
-    if (head.isEmpty) {
+    val current = loadArtifact(spark, livePath)
+      .flatMap(a => a.bloom.map(a.table -> _))
+    // nothing published, or an empty table: no constants to keep
+    if (current.isEmpty) {
       saveBloomStats(buildBloomStats(spark, dataDir, keyCol), livePath,
         marker = marker)
       return
     }
+    val (table, c) = current.get
     import spark.implicits._
     val all = spark.read.parquet(dataDir).inputFiles
     val fresh = all.toIndexedSeq.toDF("file")
-      .join(current.select(col("file")).distinct(), Seq("file"), "left_anti")
+      .join(table.select(col("file")).distinct(), Seq("file"), "left_anti")
       .as[String].collect()
     // a no-op delta skips the republish UNLESS a batch marker must be
     // recorded (the stream-maintenance contract needs the applied id
@@ -264,15 +279,14 @@ object ZoneMaps {
     if (fresh.isEmpty && marker.isEmpty) return
     // the delta folds exactly as the artifact did — the `folded` flag
     // is as much a build constant as (m_bits, k)
-    val folded = bloomFolded(current)
-    val keyExpr = if (folded) upper(col(keyCol)) else col(keyCol)
+    val keyExpr = if (c.folded) upper(col(keyCol)) else col(keyCol)
     val merged =
-      if (fresh.isEmpty) current
-      else current.unionByName(
+      if (fresh.isEmpty) table
+      else table.unionByName(
         bloomStatsOf(
           spark.read.parquet(fresh.toIndexedSeq: _*)
             .select(input_file_name().as("file"), keyExpr.as("__key")),
-          head(0).getLong(0), head(0).getInt(1), folded = folded),
+          c.mBits, c.k, folded = c.folded),
         allowMissingColumns = true)
     saveBloomStats(merged, livePath, marker = marker)
   }
@@ -291,16 +305,10 @@ object ZoneMaps {
   // bytes per file. Probes reuse the md5 scheme of operators/Bloom
   // (cross-engine-reproducible), so the filter is deterministic.
 
-  /** k md5-derived probe positions for one key value — the Column form
-    * (build side), identical arithmetic to [[bloomPositionsLocal]].
-    */
-  private def bloomProbe(i: Int, key: Column, mBits: Long): Column =
-    pmod(conv(substring(md5(
-      concat(lit(s"$i|"), key.cast("string"))), 1, 15), 16, 10).cast("long"),
-      lit(mBits))
-
-  /** The same k positions computed driver-side for the pruning decision
-    * — one md5 per (probe, key), no Spark job.
+  /** The k md5-derived probe positions of one key value, computed
+    * driver-side for the pruning decision — the arithmetic of
+    * [[graft.operators.Bloom]]'s build-side probe, one md5 per (probe,
+    * key), no Spark job.
     */
   private[sources] def bloomPositionsLocal(key: String, mBits: Long,
       k: Int): Seq[Long] =
@@ -364,7 +372,8 @@ object ZoneMaps {
     rows
       .select(col("file"),
         explode(array((0 until k).map(i =>
-          bloomProbe(i, col("__key"), mBits)): _*)).as("pos"))
+          graft.operators.Bloom.probe(i, col("__key"), mBits)): _*))
+          .as("pos"))
       .groupBy(col("file"), floor(col("pos") / 32).cast("int").as("word_idx"))
       // 2^(pos mod 32) via pow — exact in double up to 2^31, the
       // operators/Bloom mask idiom (shiftleft takes only literal shifts)
@@ -374,66 +383,53 @@ object ZoneMaps {
       .withColumn("k", lit(k))
       .withColumn("folded", lit(folded))
 
-  /** Whether a published Bloom artifact was built over case-folded
-    * keys. Artifacts predating the column read as NOT folded.
+  /** Files that might satisfy each of `constraints`: a constraint is a
+    * key list, and a file survives it iff for at least one of its keys
+    * EVERY probe bit is set in the file's sparse word map (an AND key is
+    * a one-key constraint). ONE job decides them all. The probe set —
+    * per word slot, the (constraint, key, mask, key-bit) probes landing
+    * in it — rides as a plan literal (the [[graft.operators.Bloom]]
+    * `mightContain` pattern), so no probe table is broadcast; each key's
+    * full hit mask is computed here, on the driver. Only the probed
+    * slots' word rows are scanned (a pushable `isin` — with the table
+    * word_idx-clustered it prunes whole files and row groups), each
+    * matching probe ORs its key-bit into a per-(constraint, key, file)
+    * mask in one RDD reduce (one job whatever the AQE setting), and only
+    * the (constraint, file) pairs whose mask is full come back. The
+    * decision runs DISTRIBUTED: unlike the zone stats (one row per
+    * file), the Bloom table is files × set-words rows, nowhere near
+    * driver-sized at 100 TB. Probe constants and the fold come from the
+    * artifact ([[BloomConstants]]).
     */
-  def bloomFolded(bloom: DataFrame): Boolean =
-    bloom.columns.contains("folded") &&
-      bloom.select(col("folded")).limit(1).collect()
-        .headOption.exists(r => !r.isNullAt(0) && r.getBoolean(0))
-
-  /** Files that might contain ANY of `keys` — a file survives iff for at
-    * least one key EVERY probe bit is set in its sparse word map.
-    * The decision runs DISTRIBUTED: the probe set (a few (key, word_idx,
-    * mask) rows, driver-computed) broadcast-joins the bloom table, a
-    * per-(file, key) match count picks full-probe hits, and only the
-    * surviving FILE NAMES collect — unlike the zone stats (one row per
-    * file), the bloom table is files × set-words rows, which at 100 TB
-    * (~800k files × ~300k words at 10 bits/key) is nowhere near
-    * driver-sized. Probe constants come from the table itself (see
-    * [[buildBloomStats]]).
-    */
-  def survivingBloom(bloom: DataFrame, keys: Seq[String]): Seq[String] = {
-    // ONE constants collect: the decision path is latency-sensitive at
-    // 800k files (see the prune_decision probes) — m_bits, k and the
-    // fold flag ride in the same row rather than two tiny jobs
-    val hasFold = bloom.columns.contains("folded")
-    val constCols = Seq(col("m_bits"), col("k")) ++
-      (if (hasFold) Seq(col("folded")) else Nil)
-    val head = bloom.select(constCols: _*).limit(1).collect()
-    if (head.isEmpty || keys.isEmpty) return Seq.empty
-    val mBits = head(0).getLong(0)
-    val k = head(0).getInt(1)
-    val folded = hasFold && !head(0).isNullAt(2) && head(0).getBoolean(2)
+  private[graft] def decideBlooms(bloom: DataFrame, c: BloomConstants,
+      constraints: Seq[Seq[String]]): IndexedSeq[Set[String]] = {
+    require(c.k < 64, s"a Bloom artifact with k = ${c.k} probes per key " +
+      "does not fit the 63-bit hit mask")
     // the fold lives in the artifact: probes against a case-folded
     // Bloom fold HERE, the single place build and probe can't diverge
-    val useKeys = if (folded) keys.map(_.toUpperCase) else keys
-    val spark = bloom.sparkSession
-    import spark.implicits._
-    val probes = useKeys.zipWithIndex.flatMap { case (key, ki) =>
-      bloomPositionsLocal(key, mBits, k).map(p =>
-        (ki, (p >> 5).toInt, 1L << (p & 31).toInt))
-    }.distinct
-    val probeRows = probes.toDF("key_id", "word_idx", "mask")
-    // the probe set's word_idx values are driver-known and few (≤ keys·k
-    // of the mBits/32 slots) — pre-filtering the bloom table on them is
-    // a pushable scan predicate that drops ~(1 − |idxs|/slots) of the
-    // word rows before the join ever sees them; at 800k files this is
-    // the difference between scanning the whole tens-of-millions-row
-    // artifact and touching only the probed slots
-    val idxs = probes.map(_._2).distinct
-    bloom.filter(col("word_idx").isin(idxs: _*))
-      .join(broadcast(probeRows), Seq("word_idx"))
-      .filter(col("word").bitwiseAND(col("mask")) =!= 0L)
-      // a key's k probes can share a word_idx slot — count DISTINCT
-      // satisfied positions (mask identifies the bit), not joined rows
-      .groupBy(col("file"), col("key_id"))
-      .agg(countDistinct(col("word_idx"), col("mask")).as("hit"))
-      .join(broadcast(probeRows.groupBy(col("key_id"))
-        .agg(count(lit(1)).as("need"))), Seq("key_id"))
-      .filter(col("hit") === col("need"))
-      .select(col("file")).distinct()
-      .as[String].collect().sorted.toIndexedSeq
+    val keys = constraints.zipWithIndex.flatMap { case (ks, ci) =>
+      ks.map(k => (ci, if (c.folded) k.toUpperCase else k)) }
+    // a key's k probes can share a position: its distinct positions
+    // each own one bit of the key's hit mask
+    val positions = keys.map { case (_, k) =>
+      bloomPositionsLocal(k, c.mBits, c.k).distinct }
+    val full = positions.map(ps => (1L << ps.size) - 1).toArray
+    val bySlot = keys.indices.flatMap { ki =>
+      positions(ki).zipWithIndex.map { case (p, j) =>
+        (p >> 5).toInt -> ((keys(ki)._1, ki, 1L << (p & 31).toInt, 1L << j))
+      }
+    }.groupBy(_._1).map { case (slot, ps) => slot -> ps.map(_._2) }
+    val hits = bloom.filter(col("word_idx").isin(bySlot.keys.toSeq: _*))
+      .select(col("file"), col("word"),
+        explode(typedLit(bySlot).apply(col("word_idx"))).as("p"))
+      .filter(col("word").bitwiseAND(col("p._3")) =!= 0L)
+      .select(col("p._1"), col("p._2"), col("file"), col("p._4"))
+      .rdd.map(r => ((r.getInt(0), r.getInt(1), r.getString(2)), r.getLong(3)))
+      .reduceByKey(_ | _)
+      .filter { case ((_, ki, _), mask) => mask == full(ki) }
+      .map { case ((ci, _, file), _) => (ci, file) }
+      .collect()
+    constraints.indices.map(ci => hits.collect { case (`ci`, f) => f }.toSet)
   }
 
   // ---- default-read-path integration (QueryCompiler routing) ----
@@ -458,14 +454,28 @@ object ZoneMaps {
     bloomLive: Option[String] = None,
     bloomCol: Option[String] = None)
 
-  /** The published stats table at `livePath`, or None when nothing has
+  /** A Bloom version's build constants — (m_bits, k) and the case fold,
+    * which probes must reuse — and its distinct file count. Artifacts
+    * predating the `folded` column read as not folded.
+    */
+  private[graft] final case class BloomConstants(mBits: Long, k: Int,
+    folded: Boolean, files: Long)
+
+  /** One published artifact version: its table and, for a non-empty
+    * Bloom table (one with `m_bits`), its [[BloomConstants]].
+    */
+  private[graft] final case class Artifact(table: DataFrame,
+    bloom: Option[BloomConstants])
+
+  /** The published artifact at `livePath`, or None when nothing has
     * been published yet — the transparent-fallback probe: a missing
     * pointer AND missing directory mean "no skipping", never an error
     * (the query must compile identically before the stats job has ever
-    * run).
+    * run). A Bloom version's constants are read in ONE aggregation when
+    * the version first loads, never per decision.
     */
-  def loadStatsIfPresent(spark: SparkSession,
-      livePath: String): Option[DataFrame] = {
+  private[graft] def loadArtifact(spark: SparkSession,
+      livePath: String): Option[Artifact] = {
     val live = graft.operators.CacheRefresh.resolveLive(spark, livePath)
     // memo keyed on the RESOLVED version dir: a compile-time consult
     // must not pay footer reads on every query, and a republish flips
@@ -479,9 +489,26 @@ object ZoneMaps {
     graft.SessionMemo(spark, StatsMemo, live) {
       val p = new org.apache.hadoop.fs.Path(live)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(spark.read.parquet(live)) else None
+      if (!fs.exists(p)) None
+      else {
+        val t = spark.read.parquet(live)
+        Some(Artifact(t, bloomConstants(t)))
+      }
     }
   }
+
+  private def bloomConstants(t: DataFrame): Option[BloomConstants] =
+    if (!t.columns.contains("m_bits")) None
+    else {
+      val folded = if (t.columns.contains("folded"))
+        first(col("folded"), ignoreNulls = true) else lit(false)
+      val r = t.agg(first(col("m_bits"), ignoreNulls = true),
+        first(col("k"), ignoreNulls = true), folded,
+        countDistinct(col("file"))).head()
+      if (r.isNullAt(0)) None // an empty table: no constants to reuse
+      else Some(BloomConstants(r.getLong(0), r.getInt(1),
+        !r.isNullAt(2) && r.getBoolean(2), r.getLong(3)))
+    }
 
   private val StatsMemo = "zonemaps.stats"
 
@@ -510,11 +537,14 @@ object ZoneMaps {
   /** File-list pruning for a conjunction of range and point predicates
     * — the one file-skipping read path: [[graft.api.QueryCompiler]] and
     * the hand-written skipping queries both reach files through it.
-    * Returns None (caller falls back to the unpruned scan) when no
-    * artifact is published or no clause touches an indexed column;
-    * otherwise the pruned frame (schema of `dataDir`, exact predicates
-    * NOT applied — the caller re-applies every clause, so pruning only
-    * ever skips files, never decides rows) plus the prune accounting.
+    * `scan` is the caller's plain read of the layout's `dataDir`: its
+    * listing (`inputFiles`) and schema serve the decision and the
+    * kept-file read, so the layout is read once per query. Returns None
+    * (caller falls back to `scan`) when no artifact is published or no
+    * clause touches an indexed column; otherwise the pruned frame
+    * (schema of `scan`, exact predicates NOT applied — the caller
+    * re-applies every clause, so pruning only ever skips files, never
+    * decides rows) plus the prune accounting.
     *
     * Survivor algebra: the clause families are AND'd, so the kept set
     * is the INTERSECTION of the zone survivors (a file must overlap
@@ -525,8 +555,8 @@ object ZoneMaps {
     * `andKeys` are AND-composed equality probes (a file must possibly
     * contain EVERY key — per-key survivor intersection); `anyKeys` is
     * an IN-list/pasted-id-list membership probe (a file survives if it
-    * may contain ANY of the keys — one Bloom pass, the semi-join S7
-    * shape); `orGroups` are OR-combined clause families, each an
+    * may contain ANY of the keys — one Bloom constraint, the semi-join
+    * S7 shape); `orGroups` are OR-combined clause families, each an
     * AND-composed constraint: a group's keep set is the UNION of its
     * units' survivors and the groups' keep sets INTERSECT. A group
     * contributes NOTHING unless EVERY one of its units is backed by a
@@ -538,19 +568,21 @@ object ZoneMaps {
     * skipped tasks, and the semi join downstream is already the right
     * plan.
     *
-    * Cost: the zone artifact is consulted with ONE collect of (file,
-    * keep flag per constraint) — the AND'd ranges plus every OR unit —
-    * which also yields its file count and file list; the layout's
-    * listing infers the schema the kept-file read reuses. A warm
-    * zone-only call runs exactly those 2 jobs (ZoneMapsSpec pins it).
-    * Bloom artifacts add their [[survivingBloom]] passes and a file
-    * count.
+    * Cost: ONE job per consulted artifact. The zone artifact answers
+    * with one collect of (file, keep flag per constraint) — the AND'd
+    * ranges plus every OR unit ([[decideZones]]) — which also yields its
+    * file list; the Bloom artifact decides every AND key, the ANY list
+    * and every OR group's keys in one collect of (constraint, file)
+    * ([[decideBlooms]]), its constants and file count coming from the
+    * per-version memo. A warm zone-only call, counting the caller's
+    * read, runs exactly 2 jobs (ZoneMapsSpec pins it).
     */
-  def pruneForClauses(spark: SparkSession, layout: Layout,
+  def pruneForClauses(scan: DataFrame, layout: Layout,
       ranges: Seq[ZoneRange], andKeys: Seq[BloomKey],
       anyKeys: Option[Seq[BloomKey]] = None,
       orGroups: Seq[Seq[OrUnit]] = Nil):
       Option[(DataFrame, PruneReport)] = {
+    val spark = scan.sparkSession
     val anyK = anyKeys.filter(ks => ks.nonEmpty && ks.size <= MaxAnyKeys)
     val orGs = orGroups.filter(_.nonEmpty)
     // nothing to prune WITH → fall back before touching any artifact
@@ -561,11 +593,12 @@ object ZoneMaps {
     val orKeys = orGs.flatten.collect { case Right(k) => k }
     val stats =
       if (ranges.nonEmpty || orRanges.nonEmpty)
-        layout.statsLive.flatMap(loadStatsIfPresent(spark, _))
+        layout.statsLive.flatMap(loadArtifact(spark, _)).map(_.table)
       else None
     val bloom =
       if (andKeys.nonEmpty || anyK.nonEmpty || orKeys.nonEmpty)
-        layout.bloomLive.flatMap(loadStatsIfPresent(spark, _))
+        layout.bloomLive.flatMap(loadArtifact(spark, _))
+          .flatMap(a => a.bloom.map(a.table -> _))
       else None
     def indexed(r: ZoneRange): Boolean = r match {
       case _: ColRange =>
@@ -576,48 +609,34 @@ object ZoneMaps {
         stats.exists(_.columns.contains(s"nulls_${r.col}"))
     }
     // ci keys need the case-folded artifact (see [[BloomKey]])
-    lazy val folded = bloom.exists(bloomFolded)
-    def servable(k: BloomKey): Boolean = !k.ci || folded
+    def servable(k: BloomKey): Boolean =
+      bloom.exists { case (_, c) => !k.ci || c.folded }
     val idxRanges = ranges.filter(indexed)
     // the OR groups whose every unit a published artifact backs
     val groups = orGs
       .map(us => (us.collect { case Left(r) => r },
         us.collect { case Right(k) => k }))
-      .filter { case (rs, ks) => rs.forall(indexed) &&
-        (ks.isEmpty || (bloom.nonEmpty && ks.forall(servable))) }
-    // the zone decision: one (file, and-flag, unit flags...) row per
-    // file; a null overlap prunes, as in [[surviving]]'s filter
-    val unitRanges = groups.flatMap(_._1)
-    val zoneRows = stats.filter(_ => idxRanges.nonEmpty || unitRanges.nonEmpty)
-      .map { st =>
-        val flags = idxRanges.map(zoneOverlap).reduceOption(_ && _)
-          .getOrElse(lit(true)) +: unitRanges.map(zoneOverlap)
-        st.select(col("file") +: flags.map(coalesce(_, lit(false))): _*)
-          .collect()
-      }
-    def zoneKept(flag: Int): Set[String] = zoneRows.get
-      .collect { case r if r.getBoolean(flag) => r.getString(0) }.toSet
-    val zoneKeep =
-      if (idxRanges.isEmpty) None else zoneRows.map(_ => zoneKept(1))
-    val andServable =
-      if (bloom.isEmpty) Nil else andKeys.filter(servable)
-    val andKeep = bloom.filter(_ => andServable.nonEmpty).map(bl =>
-      andServable.map(k => survivingBloom(bl, Seq(k.key)).toSet)
-        .reduce(_ intersect _))
-    // an ANY list is ONE composite constraint: a single unservable key
-    // could match files the others would prune, so all-or-nothing
-    val anyKeep = for (bl <- bloom; ks <- anyK if ks.forall(servable))
-      yield survivingBloom(bl, ks.map(_.key)).toSet
-    val firstFlags = groups.map(_._1.size).scanLeft(2)(_ + _)
-    val groupKeeps = groups.zip(firstFlags).map { case ((rs, ks), first) =>
-      rs.indices.flatMap(i => zoneKept(first + i)).toSet ++
-        (if (ks.isEmpty) Set.empty[String]
-         else survivingBloom(bloom.get, ks.map(_.key)).toSet)
+      .filter { case (rs, ks) => rs.forall(indexed) && ks.forall(servable) }
+    val zone = stats
+      .filter(_ => idxRanges.nonEmpty || groups.exists(_._1.nonEmpty))
+      .map(decideZones(_, idxRanges, groups.map(_._1)))
+    // the Bloom constraints: each servable AND key (the kept sets
+    // intersect below), the ANY list — ONE composite constraint: a
+    // single unservable key could match files the others would prune,
+    // so all-or-nothing — then each group's keys
+    val anded = andKeys.filter(servable).map(Seq(_)) ++
+      anyK.filter(_.forall(servable))
+    val constraints = anded ++ groups.map(_._2).filter(_.nonEmpty)
+    val bloomKept = bloom.filter(_ => constraints.nonEmpty)
+      .map { case (t, c) => decideBlooms(t, c, constraints.map(_.map(_.key))) }
+      .getOrElse(IndexedSeq.empty)
+    val groupBloom = bloomKept.drop(anded.size).iterator
+    val groupKeeps = groups.zipWithIndex.map { case ((_, ks), i) =>
+      zone.map(_.groupKept(i)).getOrElse(Set.empty[String]) ++
+        (if (ks.isEmpty) Set.empty[String] else groupBloom.next())
     }
-    val bloomUsed = andKeep.nonEmpty || anyKeep.nonEmpty ||
-      groups.exists(_._2.nonEmpty)
-    val keeps = zoneKeep.toSeq ++ andKeep.toSeq ++ anyKeep.toSeq ++
-      groupKeeps
+    val keeps = (if (idxRanges.isEmpty) None else zone.map(_.kept)).toSeq ++
+      bloomKept.take(anded.size) ++ groupKeeps
     if (keeps.isEmpty) None
     else {
       // crash-window soundness: [[SkippingRegistry.appendFiles]] commits
@@ -626,41 +645,38 @@ object ZoneMaps {
       // sees layout files no consulted artifact knows. The survivor
       // sets can only hold files their artifact lists, so unknown files
       // must be restored HERE or the pruned read loses their rows
-      // (prune never decides). The listing is the same driver-resident
-      // InMemoryFileIndex work the scan's own planning does; the zone
-      // artifact's file list came back with its decision rows, so its
-      // unknown set is a driver-side difference. A Bloom artifact is
-      // files × words rows: under the registry discipline artifacts are
-      // built from listings of an append-only layout (artifact files ⊆
-      // listing), so its file count equal to the listing's proves set
-      // equality, and the anti-join runs only inside the rare mismatch
-      // window — returning just the delta's names, never the known set.
-      val listed = spark.read.parquet(layout.dataDir)
-      val listing = listed.inputFiles
-      val zoneFiles = zoneRows.map(_.map(_.getString(0)).toSet)
-      val bloomFiles =
-        bloom.filter(_ => bloomUsed).map(_.select(col("file")).distinct())
-      val bloomCount = bloomFiles.map(_.count())
-      val bloomUnknown: Set[String] =
-        if (bloomCount.forall(_ == listing.length.toLong)) Set.empty
-        else {
+      // (prune never decides). The listing is the caller's scan's
+      // driver-resident InMemoryFileIndex; the zone artifact's file list
+      // came back with its decision rows, so its unknown set is a
+      // driver-side difference. A Bloom artifact is files × words rows:
+      // under the registry discipline artifacts are built from listings
+      // of an append-only layout (artifact files ⊆ listing), so its
+      // memoized file count equal to the listing's proves set equality,
+      // and the anti-join runs only inside the rare mismatch window —
+      // returning just the delta's names, never the known set.
+      val listing = scan.inputFiles
+      val bloomUsed = bloom.filter(_ => constraints.nonEmpty)
+      val bloomUnknown: Set[String] = bloomUsed match {
+        case Some((t, c)) if c.files != listing.length =>
           import spark.implicits._
           listing.toIndexedSeq.toDF("file")
-            .join(bloomFiles.get, Seq("file"), "left_anti")
+            .join(t.select(col("file")).distinct(), Seq("file"), "left_anti")
             .as[String].collect().toSet
-        }
-      val unknown = zoneFiles.map(listing.toSet -- _).getOrElse(Set.empty) ++
+        case _ => Set.empty
+      }
+      val unknown = zone.map(listing.toSet -- _.files).getOrElse(Set.empty) ++
         bloomUnknown
       val kept = (keeps.reduce(_ intersect _) ++ unknown).toSeq.sorted
-      val total = zoneFiles.map(_.size.toLong).orElse(bloomCount).getOrElse(0L)
-      Some((filesRead(spark, listed.schema, kept),
+      val total = zone.map(_.files.size.toLong)
+        .orElse(bloomUsed.map(_._2.files)).getOrElse(0L)
+      Some((filesRead(spark, scan.schema, kept),
         PruneReport(total, kept.length.toLong)))
     }
   }
 
-  /** The kept files, read with the listing's already-inferred schema (no
-    * second footer job). An empty survivor set is an empty frame with
-    * that schema — `parquet()` with zero paths is an error.
+  /** The kept files, read with the caller's scan's already-inferred
+    * schema (no second footer job). An empty survivor set is an empty
+    * frame with that schema — `parquet()` with zero paths is an error.
     */
   private def filesRead(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
@@ -671,8 +687,8 @@ object ZoneMaps {
     else spark.read.schema(schema).parquet(files: _*)
 
   /** Widest IN-list the Bloom route will prune with — beyond this the
-    * probe table itself stops being broadcast-trivial and the skipped
-    * tasks no longer pay for the decision.
+    * probe literal itself stops being trivial and the skipped tasks no
+    * longer pay for the decision.
     */
   val MaxAnyKeys: Int = 256
 }

@@ -7,13 +7,15 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps hand-rolled memos and crossover gates out of the engine: every
-  * value kept past one call goes through [[SessionMemo]], which alone
-  * owns a concurrent map and the stopped-context check
-  * (`Pinning.disk2Pins` is a registry of live pins, not a memo), every
-  * memoized cached frame goes through [[SessionMemo.cached]], and every
-  * driver-local crossover goes through [[graft.operators.Crossover]],
-  * which alone owns the budgets and the forced-distributed override.
+/** Keeps hand-rolled memos, crossover gates and default-store
+  * FileSystem lookups out of the engine: every value kept past one call
+  * goes through [[SessionMemo]], which alone owns a concurrent map and
+  * the stopped-context check (`Pinning.disk2Pins` is a registry of live
+  * pins, not a memo), every memoized cached frame goes through
+  * [[SessionMemo.cached]], every driver-local crossover goes through
+  * [[graft.operators.Crossover]], which alone owns the budgets and the
+  * forced-distributed override, and artifact IO resolves each path's
+  * own FileSystem.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -29,6 +31,11 @@ class MemoGuardSpec extends AnyFunSuite {
         case (l, i) if banned.findFirstIn(l).nonEmpty => s"$p:${i + 1}: ${l.trim}"
       }).toList
   }
+
+  /** [[hits]] on code lines only: comment lines may name what they ban. */
+  private def codeHits(banned: Regex, allowed: Set[String]): List[String] =
+    hits(banned, allowed).filterNot(h =>
+      Seq("//", "/*", "*").exists(h.split(": ", 2)(1).startsWith))
 
   test("no concurrent map or isStopped check in src/main outside " +
       "SessionMemo and Pinning") {
@@ -52,10 +59,18 @@ class MemoGuardSpec extends AnyFunSuite {
     // catalog holds several memoized frames in one value
     val allowed = Map("Tokenizer.scala" -> 2, "Profiles.scala" -> 1,
       "ApiQueries.scala" -> 1)
-    val code = hits("""\.cache\(\)""".r, Set("SessionMemo.scala"))
-      .filterNot(h => Seq("//", "*").exists(h.split(": ", 2)(1).startsWith))
+    val code = codeHits("""\.cache\(\)""".r, Set("SessionMemo.scala"))
     val over = code.groupBy(h => Paths.get(h.takeWhile(_ != ':')).getFileName
       .toString).filter { case (f, hs) => hs.size > allowed.getOrElse(f, 0) }
     assert(over.isEmpty, over.values.flatten.mkString("\n"))
+  }
+
+  test("no FileSystem.get( in src/main code: artifact IO resolves the " +
+      "path's own FileSystem") {
+    // FileSystem.get(conf) is the configured DEFAULT store: a pointer,
+    // manifest or marker of a table on another store would be read from
+    // or written to the wrong one
+    val found = codeHits("""FileSystem\.get\(""".r, Set.empty)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -192,14 +192,17 @@ object ScaleProbeOps {
       val s2 = (System.nanoTime() - t1) / 1e9
       (r1, s1, s2)
     }
+    // the decision functions pruneForClauses itself calls: run 1 pays
+    // the version's first load (schema inference and, for the Bloom,
+    // its constants aggregation), run 2 is the warm per-query decision
     def decisionJson(base: String, zoneRanges: Seq[graft.sources.ZoneMaps.ColRange],
         bloomKeys: Seq[String]): String = {
-      val (zk, z1, z2) = timed2(() => graft.sources.ZoneMaps.surviving(
-        graft.sources.ZoneMaps.loadStats(spark, s"$base/stats"),
-        zoneRanges).size)
-      val (bk, b1, b2) = timed2(() => graft.sources.ZoneMaps.survivingBloom(
-        graft.sources.ZoneMaps.loadStats(spark, s"$base/bloom"),
-        bloomKeys).size)
+      import graft.sources.ZoneMaps
+      val (zk, z1, z2) = timed2(() => ZoneMaps.decideZones(
+        ZoneMaps.loadStats(spark, s"$base/stats"), zoneRanges, Nil).kept.size)
+      val (bk, b1, b2) = timed2(() => ZoneMaps.loadArtifact(spark,
+        s"$base/bloom").map(a => ZoneMaps.decideBlooms(a.table, a.bloom.get,
+          Seq(bloomKeys)).head.size).get)
       f""""zone_sec":${math.min(z1, z2)}%.3f,"zone_sec1":$z1%.3f,"zone_sec2":$z2%.3f,"zone_kept":$zk%d,"bloom_sec":${math.min(b1, b2)}%.3f,"bloom_sec1":$b1%.3f,"bloom_sec2":$b2%.3f,"bloom_kept":$bk%d,"mode":"min2-post-gc""""
     }
     def pruneDecisionReal(nFiles: Int): String = {

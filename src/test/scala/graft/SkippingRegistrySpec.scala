@@ -175,9 +175,8 @@ class SkippingRegistrySpec extends SparkSpec {
       .write.parquet(dir)
     SkippingRegistry.register(spark, dir,
       zoneCols = Seq("v"), bloomCol = Some("name"))
-    val bloom = ZoneMaps.loadStats(spark,
-      SkippingRegistry.bloomLivePath(dir))
-    assert(ZoneMaps.bloomFolded(bloom),
+    assert(ZoneMaps.loadArtifact(spark, SkippingRegistry.bloomLivePath(dir))
+      .flatMap(_.bloom).exists(_.folded),
       "a STRING key column must build a case-folded artifact")
     val cat = registryCatalog(spark, dir, "id")
     // the probe is cased differently from BOTH the stored value and
@@ -372,5 +371,31 @@ class SkippingRegistrySpec extends SparkSpec {
     assert(ureps.tags.isEmpty,
       "tag pruning must decline under an unscoped count clause")
     assert(ids(udf) == ids(compile(unscoped, plain)))
+  }
+
+  test("manifest: a reader racing 20 re-registrations reads a manifest " +
+      "every time — the replace leaves no gap") {
+    val dir = freshDir()
+    writeRows(dir, (0L until 40L).map(i => (i, i, "t")), parts = 2)
+    SkippingRegistry.register(spark, dir, zoneCols = Seq("v"))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val misses = new java.util.concurrent.atomic.AtomicInteger()
+    val reader = new Thread(() =>
+      while (!stop.get) {
+        // a read that throws (the file vanished between exists and
+        // open) saw no manifest too
+        val seen = try SkippingRegistry.readManifest(spark, dir).nonEmpty
+          catch { case _: java.io.IOException => false }
+        if (!seen) misses.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.start()
+    try (1 to 20).foreach(i => SkippingRegistry.register(spark, dir,
+      zoneCols = if (i % 2 == 0) Seq("v") else Seq("v", "id")))
+    finally { stop.set(true); reader.join() }
+    assert(reads.get > 0)
+    assert(misses.get == 0,
+      s"${misses.get} of ${reads.get} reads saw no manifest")
   }
 }

@@ -24,17 +24,19 @@ class ZoneMapsSpec extends SparkSpec {
     dir
   }
 
-  // every skipping read goes through pruneForClauses over a Layout; the
-  // caller re-applies the exact predicate
+  // every skipping read goes through pruneForClauses over a Layout and
+  // the caller's plain read of it; the caller re-applies the exact
+  // predicate
   private def register(dir: String, zoneCols: Seq[String],
       bloomCol: Option[String] = None) =
     SkippingRegistry.register(spark, dir, zoneCols, bloomCol)
 
   private def prune(lay: ZoneMaps.Layout, ranges: Seq[ZoneMaps.ZoneRange]) =
-    ZoneMaps.pruneForClauses(spark, lay, ranges, Nil).get
+    ZoneMaps.pruneForClauses(spark.read.parquet(lay.dataDir), lay, ranges,
+      Nil).get
 
   private def pruneAny(lay: ZoneMaps.Layout, keys: Seq[Long]) =
-    ZoneMaps.pruneForClauses(spark, lay, Nil, Nil,
+    ZoneMaps.pruneForClauses(spark.read.parquet(lay.dataDir), lay, Nil, Nil,
       Some(keys.map(k => ZoneMaps.BloomKey(k.toString)))).get
 
   /** Result-stage names of the Spark jobs `body` starts, in order. */
@@ -113,13 +115,10 @@ class ZoneMapsSpec extends SparkSpec {
       .toDF("id", "v", "tag").coalesce(1).write.mode("append").parquet(dir)
     Seq((5L, Some(60L), "r"), (6L, Some(70L), "r"))
       .toDF("id", "v", "tag").coalesce(1).write.mode("append").parquet(dir)
-    val stats = ZoneMaps.buildStats(spark, dir, Seq("v"))
     val ranges = Seq(ZoneMaps.ColRange("v", 40, 100))
-    val files = ZoneMaps.surviving(stats, ranges)
-    assert(files.size == 2,
-      s"the all-null file must prune (survivors: ${files.size})")
     val (pruned, report) = prune(register(dir, Seq("v")), ranges)
-    assert(report.filesKept == 2 && report.filesTotal == 3, report.toString)
+    assert(report.filesKept == 2 && report.filesTotal == 3,
+      s"the all-null file must prune: $report")
     val got = pruned.filter(col("v").between(40, 100))
       .select("id").as[Long].collect().toSeq.sorted
     assert(got == Seq(3L, 5L, 6L),
@@ -142,15 +141,15 @@ class ZoneMapsSpec extends SparkSpec {
     // every file and only the Bloom can prune an id probe
     val rows = (0L until 400L).map(i => (i, (i * 37) % 400, s"t${i % 3}"))
     val dir = layout(rows)
-    val zones = ZoneMaps.buildStats(spark, dir, Seq("id"))
-    val zoneSurvivors = ZoneMaps.surviving(zones,
-      Seq(ZoneMaps.ColRange("id", 17, 17)))
+    val lay = register(dir, Seq("id"), Some("id"))
+    val (_, zoneReport) = prune(lay, Seq(ZoneMaps.ColRange("id", 17, 17)))
     val keys = Seq(17L, 391L)
-    val (pruned, report) = pruneAny(register(dir, Nil, Some("id")), keys)
+    val (pruned, report) = pruneAny(lay, keys)
     assert(report.filesKept < report.filesTotal,
       s"bloom must skip files (${report.filesKept}/${report.filesTotal})")
-    assert(report.filesKept.toInt < zoneSurvivors.size,
-      "bloom must out-prune id zone maps on a v-ordered layout")
+    assert(report.filesKept < zoneReport.filesKept,
+      s"bloom must out-prune id zone maps on a v-ordered layout: " +
+        s"$report vs $zoneReport")
     val got = pruned.filter(col("id").isin(keys: _*))
       .select("id", "v", "tag")
       .as[(Long, Long, String)].collect().toSeq.sorted
@@ -272,7 +271,7 @@ class ZoneMapsSpec extends SparkSpec {
       .coalesce(2).write.mode("append").parquet(dir)
     val lay = ZoneMaps.Layout(dir, statsLive = Some(statsPath))
     // the range matches rows in BOTH known and unknown files
-    val routed = ZoneMaps.pruneForClauses(spark, lay,
+    val routed = ZoneMaps.pruneForClauses(spark.read.parquet(dir), lay,
       Seq(ZoneMaps.ColRange("v", 150, 250)), Nil)
     assert(routed.nonEmpty, "pruning must stay on through the window")
     val (pruned, rep) = routed.get
@@ -287,7 +286,7 @@ class ZoneMapsSpec extends SparkSpec {
     // out-of-range KNOWN files are still skipped
     assert(rep.filesKept < rep.filesTotal + 2,
       s"kept ${rep.filesKept} of ${rep.filesTotal} known + 2 unknown")
-    val steady = ZoneMaps.pruneForClauses(spark, lay,
+    val steady = ZoneMaps.pruneForClauses(spark.read.parquet(dir), lay,
       Seq(ZoneMaps.ColRange("v", 0, 10)), Nil)
     assert(steady.get._2.filesKept <= 1 + 2,
       "known-file pruning must still work inside the window")
@@ -312,8 +311,8 @@ class ZoneMapsSpec extends SparkSpec {
     val units = Seq((0L, 10L), (500L, 510L), (900L, 910L))
     val group: Seq[ZoneMaps.OrUnit] =
       units.map { case (lo, hi) => Left(ZoneMaps.ColRange("v", lo, hi)) }
-    def run() = ZoneMaps.pruneForClauses(spark, lay, Nil, Nil,
-      orGroups = Seq(group)).get
+    def run() = ZoneMaps.pruneForClauses(spark.read.parquet(dir), lay, Nil,
+      Nil, orGroups = Seq(group)).get
     run() // cold: loads the stats memo
     val jobs = jobsOf(run())
     assert(jobs.count(_.startsWith("collect at ZoneMaps")) == 1,
@@ -327,6 +326,66 @@ class ZoneMapsSpec extends SparkSpec {
     val want = spark.read.parquet(dir).filter(exact)
       .select("id").as[Long].collect().toSeq.sorted
     assert(got == want && want.nonEmpty, "the OR survivors lost rows")
+  }
+
+  test("job budget: a warm Bloom-only call with 2 AND keys, an ANY list " +
+      "and an OR group decides in ONE collect and keeps the exact rows") {
+    // mixed-case text key scattered under the v order: only the
+    // (case-folded) Bloom can prune; the two AND keys fold to one value,
+    // so the conjunction has rows to keep
+    val dir = tempDir("graft-zm").toString + "/data"
+    (0L until 400L).map(i => (i, (i * 37) % 400, s"Key$i"))
+      .toDF("id", "v", "name")
+      .repartitionByRange(8, col("v"), col("id"))
+      .write.parquet(dir)
+    val lay = register(dir, Nil, Some("name"))
+    def ci(k: String) = ZoneMaps.BloomKey(k, ci = true)
+    def run() = ZoneMaps.pruneForClauses(spark.read.parquet(dir), lay,
+      Nil, Seq(ci("kEy17"), ci("KEY17")),
+      anyKeys = Some(Seq(ci("key17"), ci("key300"))),
+      orGroups = Seq(Seq(Right(ci("KEY17")), Right(ci("key5"))))).get
+    run() // cold: loads the Bloom version and its constants
+    val jobs = jobsOf(run())
+    assert(jobs.count(_.startsWith("collect at ZoneMaps")) == 1,
+      s"one decision collect for every Bloom constraint: $jobs")
+    assert(jobs.size == 2, s"the caller's read plus the decision: $jobs")
+    val (pruned, report) = run()
+    assert(report.filesKept > 0 && report.filesKept < report.filesTotal,
+      report.toString)
+    val name = upper(col("name"))
+    val exact = name === "KEY17" && name === "KEY17" &&
+      name.isin("KEY17", "KEY300") && (name === "KEY17" || name === "KEY5")
+    val got = pruned.filter(exact).select("id").as[Long].collect().toSeq
+    val want = spark.read.parquet(dir).filter(exact)
+      .select("id").as[Long].collect().toSeq
+    assert(got == want && want == Seq(17L), s"kept $got, want $want")
+  }
+
+  test("bloom constants are read once per published version: after an " +
+      "appendFiles republish the new version loads once, warm calls read " +
+      "none, and the old version's entry evicts") {
+    val rows = (0L until 400L).map(i => (i, (i * 37) % 400, s"t${i % 3}"))
+    val dir = layout(rows)
+    val lay = register(dir, Nil, Some("id"))
+    pruneAny(lay, Seq(17L)) // loads the first version
+    SkippingRegistry.appendFiles(
+      Seq((1000L, 5L, "new")).toDF("id", "v", "tag"), dir)
+    // the new version's load: its schema read plus the one constants
+    // aggregation (split into several jobs under AQE)
+    val first = jobsOf(pruneAny(lay, Seq(1000L)))
+    assert(first.exists(_.startsWith("parquet at ZoneMaps")), first.toString)
+    val warm = jobsOf(pruneAny(lay, Seq(1000L)))
+    assert(warm.size == 2 &&
+      warm.count(_.startsWith("collect at ZoneMaps")) == 1,
+      s"a warm call is the caller's read plus the decision: $warm")
+    assert(first.size > warm.size + 1, s"cold $first vs warm $warm")
+    assert(ZoneMaps.cachedVersionsOf(spark,
+      SkippingRegistry.bloomLivePath(dir)) <= 1)
+    val (pruned, report) = pruneAny(lay, Seq(1000L))
+    assert(report.filesTotal == 9 && report.filesKept < report.filesTotal,
+      report.toString)
+    assert(pruned.filter(col("id") === 1000L).select("id").as[Long]
+      .collect().toSeq == Seq(1000L))
   }
 
   test("compiled routing: an F1 range clause prunes the file list, the " +
@@ -610,7 +669,7 @@ class ZoneMapsSpec extends SparkSpec {
     (1 to 4).foreach { _ =>
       ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")),
         statsPath)
-      assert(ZoneMaps.loadStatsIfPresent(spark, statsPath).nonEmpty)
+      assert(ZoneMaps.loadArtifact(spark, statsPath).nonEmpty)
     }
     assert(ZoneMaps.cachedVersionsOf(spark, statsPath) <= 1,
       "older versions' memo entries must evict when a newer one lands")
