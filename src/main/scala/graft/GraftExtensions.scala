@@ -28,6 +28,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer: thresholded levenshtein predicates drop to the O(n*band)
     // banded kernel — exact rewrite, see BandedLevenshteinRewrite
     ext.injectOptimizerRule(_ => graft.plans.BandedLevenshteinRewrite)
+    // a small ORDER BY sorts in one task, no range-sampling job — see
+    // SmallSort
+    ext.injectOptimizerRule(_ => graft.plans.SmallSort)
     inject(ext, "reverse_complement", "reverse-complements a DNA sequence",
       { case Seq(c) => functions.Bio.ReverseComplement(c) })
     inject(ext, "is_complete_cds", "start codon, in-frame terminal stop, no internal stop",

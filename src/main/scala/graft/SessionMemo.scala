@@ -83,10 +83,15 @@ object SessionMemo {
     * query would recompute the whole build inline.
     */
   def cached(spark: SparkSession, namespace: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val df = apply(spark, namespace, key)(build)
+      build: => DataFrame): DataFrame =
+    register(apply(spark, namespace, key)(build))
+
+  /** `df`, cached in the CacheManager again if its entry is gone — the
+    * re-registration of [[cached]], for a memo that holds several frames
+    * in one value.
+    */
+  def register(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.cache() else df
-  }
 
   /** Drops every session's entries in `namespace` whose key starts with
     * `prefix`, except the key `keep`: invalidation when an artifact is

@@ -80,24 +80,27 @@ object Clustering {
     // endpoint-distinct pass (~0.7 s per call).
     val nodeType = nodes.map(_.schema("node").dataType)
       .getOrElse(edges.schema("src").dataType)
+    // the explicit nodes ride in the same bounded take as self-loop
+    // rows, which union-find only adds — no collect job of their own. One
+    // extra partition keeps the take's rounds (1, then 4x the scanned
+    // partitions) those of the edges alone.
+    val typed = edges.select(col("src").cast(nodeType).as("src"),
+      col("dst").cast(nodeType).as("dst"))
     Crossover.take(
-        edges.select(col("src").cast(nodeType).as("src"),
-          col("dst").cast(nodeType).as("dst")),
+        nodes.map(n => typed.unionByName(n.select(col("node").as("src"),
+            col("node").as("dst")).coalesce(1)))
+          .getOrElse(typed),
         Crossover.GraphEdges, "src", "dst") match {
       case None =>
       case Some(taken) =>
-        import spark.implicits._
-        val ns = nodes
-          .map(_.select(col("node").cast("long")).as[Long].collect())
-          .getOrElse(Array.empty[Long])
         val uf = new UnionFind
-        ns.foreach(uf.add)
         taken.foreach { r =>
           val a = r.getLong(0); val b = r.getLong(1)
           uf.add(a); uf.add(b); uf.union(a, b)
         }
         // root = min member id: UnionFind unions by min root
         val out = uf.members.toSeq.sorted.map(n => (n, uf.find(n)))
+        import spark.implicits._
         return spark.createDataset(out).toDF("node", "component")
           .select(col("node").cast(nodeType).as("node"),
             col("component").cast(nodeType).as("component"))

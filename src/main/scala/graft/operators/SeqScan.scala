@@ -351,14 +351,14 @@ object SeqScan {
     // pick the join — SMJ at genuine scale, broadcast if runtime stats
     // still allow.
     // The candidate list and its count are memoized per (session,
-    // contigs plan, library plan, k): persisting means the sweep that
-    // produced the count is never recomputed by the final plan.
-    val (candsP, nCands) = graft.SessionMemo(spark, "seqscan.candidates",
-      s"${contigs.queryExecution.analyzed.semanticHash()}|" +
-        s"${library.queryExecution.analyzed.semanticHash()}|$k") {
-      val c = cands.persist()
-      (c, c.count())
-    }
+    // contigs plan, library plan, k): caching means the sweep that
+    // produced the count is never recomputed by the final plan, and the
+    // list registers again after a clearCache().
+    val key = s"${contigs.queryExecution.analyzed.semanticHash()}|" +
+      s"${library.queryExecution.analyzed.semanticHash()}|$k"
+    val candsP = graft.SessionMemo.cached(spark, "seqscan.candidates", key)(cands)
+    val nCands = graft.SessionMemo(spark, "seqscan.candidates.count", key)(
+      candsP.count())
     val candsSide =
       if (nCands <= maxBroadcastCandidates) broadcast(candsP) else candsP
     val enriched = up.join(candsSide, Seq(contigId))

@@ -119,7 +119,9 @@ object ProfileQueries extends QueryModule {
       val b = w.select(col("l_orderkey").as("iso2"), col("profile").as("p2"))
       // output is the bounded pair slice (<40 isolates → 780 rows): a
       // single-partition sort skips the range-sampling pass that would
-      // re-execute the join child; total order is preserved
+      // re-execute the join child; total order is preserved. SmallSort
+      // cannot choose it: a join's size estimate is the product of its
+      // inputs (GBs here)
       a.join(b, col("iso1") < col("iso2"))
         .select(col("iso1"), col("iso2"),
           Profiles.profileDiff(col("p1"), col("p2")).cast("long").as("ndiff"))

@@ -52,8 +52,16 @@ object AllQueries {
     require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
     qs
   }
+  /** Every query by name. Each call first installs the registry's plan
+    * rules in the caller's session ([[graft.plans.SmallSort.setup]]).
+    */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
+        graft.plans.SmallSort.setup(s)
+        q.fn(s, dir)
+      }
+    }.toMap
   lazy val oracles: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

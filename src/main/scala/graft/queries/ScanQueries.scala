@@ -726,7 +726,8 @@ object ScanQueries extends QueryModule {
         lib, "locus", "allele_id", "allele_seq", overlapping = true)
       // bounded output (five loci, amplicon-contained tags): a
       // single-partition sort skips the range sampler that would
-      // re-execute the primer scan + tag scan
+      // re-execute the primer scan + tag scan (hand-written: the join's
+      // size estimate is far above SmallSort's gate)
       hits.join(prods.withColumnRenamed("doc_id", "p_doc"),
           hits("doc_id") === col("p_doc") &&
             col("start_pos") >= col("start") && col("end_pos") <= col("end"),
@@ -810,6 +811,8 @@ object ScanQueries extends QueryModule {
           col("end_pos"), col("reverse"))
         // bounded output: single-partition sort skips the range sampler
         // that would re-run both tag scans over the rebuilt long contigs
+        // (hand-written: the join's size estimate is far above SmallSort's
+        // gate)
         .repartition(1)
         .sortWithinPartitions(col("cid"), col("locus"), col("start_pos"),
           col("reverse"))

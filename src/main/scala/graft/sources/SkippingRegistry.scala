@@ -131,11 +131,13 @@ object SkippingRegistry {
   def refresh(spark: SparkSession, dataDir: String,
       marker: Option[Long] = None): Unit =
     readManifest(spark, dataDir).foreach { reg =>
+      // one listing serves both artifacts' delta anti-joins
+      val files = spark.read.parquet(dataDir).inputFiles.toSeq
       reg.bloomCol.foreach(c =>
-        ZoneMaps.appendBloomStats(spark, dataDir, bloomLivePath(dataDir), c,
-          marker = marker.filter(_ => reg.zoneCols.isEmpty)))
+        ZoneMaps.appendBloomStats(spark, dataDir, files, bloomLivePath(dataDir),
+          c, marker = marker.filter(_ => reg.zoneCols.isEmpty)))
       if (reg.zoneCols.nonEmpty)
-        ZoneMaps.appendStats(spark, dataDir, statsLivePath(dataDir),
+        ZoneMaps.appendStats(spark, dataDir, files, statsLivePath(dataDir),
           reg.zoneCols, marker = marker)
     }
 

@@ -236,4 +236,29 @@ class CacheLifecycleSpec extends SparkSpec {
     spark.catalog.clearCache()
     assert(unregistered.isEmpty, "not registered again after clearCache()")
   }
+
+  test("seeded-scan candidates and the API catalog register again after " +
+      "clearCache()") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.storage.StorageLevel
+    val contigs = Seq((1L, "ACGGGTTTACGAAACCCGT"), (2L, "GGGTTTGGGTTT"))
+      .toDF("cid", "seq")
+    val lib = Seq(("locusA", "1", "GGGTTT")).toDF("locus", "allele_id", "aseq")
+    // the memoized candidate list is the scan's only cached relation
+    def candidatesCached = operators.SeqScan.seededTagScan(contigs, "cid",
+        "seq", lib, "locus", "allele_id", "aseq", k = 5)
+      .queryExecution.withCachedData
+      .collectWithSubqueries { case r: InMemoryRelation => r }.nonEmpty
+    def catalogLevels = {
+      val c = queries.ApiQueries.catalog(spark, dir)
+      Seq(c.seqbinStats, c.schemeCache, c.variations).flatten
+        .map(_.storageLevel)
+    }
+    assert(candidatesCached)
+    assert(catalogLevels.size == 3 && !catalogLevels.contains(StorageLevel.NONE))
+    spark.catalog.clearCache()
+    assert(candidatesCached, "candidates not registered again")
+    assert(!catalogLevels.contains(StorageLevel.NONE),
+      "catalog frames not registered again")
+  }
 }

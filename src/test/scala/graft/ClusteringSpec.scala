@@ -66,6 +66,23 @@ class ClusteringSpec extends SparkSpec {
     assert(emptyLocal == Seq(1L, 2L, 5L, 7L, 8L, 9L, 42L).map(n => n -> n).toMap)
   }
 
+  test("g3_single_linkage: warm construction runs 3 jobs — the nodes " +
+      "ride in the bounded take, no collect of their own") {
+    val g3 = graft.queries.AllQueries.queries("g3_single_linkage")
+    val dir = "/root/testdata/sf0.001"
+    // AQE off, as the benchmark runs: each job is one whole plan, not
+    // one adaptive stage
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val jobs = try {
+      g3(spark, dir).collect() // warm: builds the memoized warehouse slice
+      jobsOf(g3(spark, dir))
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    // the nodes ride in the take (2 rounds over 4 + 1 partitions); a
+    // separate nodes collect would make it 4
+    assert(jobs.size == 3 &&
+      jobs.count(_.startsWith("take at Crossover")) == 2, jobs.toString)
+  }
+
   test("connectedComponents: throws instead of returning non-converged labels") {
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {

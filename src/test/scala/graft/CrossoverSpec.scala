@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Crossover
@@ -52,36 +47,12 @@ class CrossoverSpec extends SparkSpec {
   }
 
   test("forced scope: the probe runs no Spark job") {
-    val sc = spark.sparkContext
-    val group = s"crossover-spec-${java.util.UUID.randomUUID}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(e.properties.getProperty("spark.job.description"))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "forced")
-      assert(Crossover.distributed(
-        Crossover.take(pairs(5), 5, "src", "dst")).isEmpty)
-      sc.setJobDescription("unforced") // control: the listener sees probes
-      assert(Crossover.take(pairs(5), 5, "src", "dst").nonEmpty)
-      sc.setJobDescription("sentinel")
-      spark.range(1).count()
-      // the bus delivers in order: once the sentinel shows, every job
-      // started before it has been counted
-      val t0 = System.nanoTime()
-      while (!seen.contains("sentinel") && System.nanoTime() - t0 < 60e9)
-        Thread.sleep(20)
-      val before = seen.asScala.toSeq.takeWhile(_ != "sentinel")
-      assert(seen.contains("sentinel"), "listener never saw the sentinel")
-      assert(!before.contains("forced"), s"forced probe ran jobs: $before")
-      assert(before.contains("unforced"), s"control probe ran none: $before")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val forced = jobsOf(assert(Crossover.distributed(
+      Crossover.take(pairs(5), 5, "src", "dst")).isEmpty))
+    assert(forced.isEmpty, s"forced probe ran jobs: $forced")
+    // control: the listener sees probes
+    val unforced = jobsOf(assert(
+      Crossover.take(pairs(5), 5, "src", "dst").nonEmpty))
+    assert(unforced.nonEmpty, "control probe ran none")
   }
 }

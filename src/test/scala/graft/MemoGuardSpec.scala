@@ -12,10 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * goes through [[SessionMemo]], which alone owns a concurrent map and
   * the stopped-context check (`Pinning.disk2Pins` is a registry of live
   * pins, not a memo), every memoized cached frame goes through
-  * [[SessionMemo.cached]], every driver-local crossover goes through
-  * [[graft.operators.Crossover]], which alone owns the budgets and the
-  * forced-distributed override, and artifact IO resolves each path's
-  * own FileSystem.
+  * [[SessionMemo.cached]] or its [[SessionMemo.register]], every
+  * driver-local crossover goes through [[graft.operators.Crossover]],
+  * which alone owns the budgets and the forced-distributed override,
+  * and artifact IO resolves each path's own FileSystem.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
@@ -55,14 +55,20 @@ class MemoGuardSpec extends AnyFunSuite {
       "call sites") {
     // file -> the .cache() calls allowed in it: Tokenizer.bpeTrain's loop
     // unpersists every round; Profiles.similarityJoin's hot-key path
-    // caches for fault recovery (its comment says why); ApiQueries'
-    // catalog holds several memoized frames in one value
-    val allowed = Map("Tokenizer.scala" -> 2, "Profiles.scala" -> 1,
-      "ApiQueries.scala" -> 1)
+    // caches for fault recovery (its comment says why)
+    val allowed = Map("Tokenizer.scala" -> 2, "Profiles.scala" -> 1)
     val code = codeHits("""\.cache\(\)""".r, Set("SessionMemo.scala"))
     val over = code.groupBy(h => Paths.get(h.takeWhile(_ != ':')).getFileName
       .toString).filter { case (f, hs) => hs.size > allowed.getOrElse(f, 0) }
     assert(over.isEmpty, over.values.flatten.mkString("\n"))
+  }
+
+  test("no .persist() in src/main code: a memoized frame is cached " +
+      "through SessionMemo.cached") {
+    // persist() is cache() under another name; Pinning's explicit
+    // storage levels are per-call pins, not memos
+    val found = codeHits("""\.persist\(\)""".r, Set.empty)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("no FileSystem.get( in src/main code: artifact IO resolves the " +

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +27,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Result-stage names of the Spark jobs `body` starts, in order — the
+    * job budget of a call. Under AQE a multi-stage query's jobs are
+    * named after the AQE thread, not the call site: count them.
+    */
+  def jobsOf(body: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"spark-spec-${java.util.UUID.randomUUID}"
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add((e.properties.getProperty("spark.job.description"),
+            e.stageInfos.maxBy(_.stageId).name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      body
+      sc.setJobDescription("sentinel")
+      spark.range(1).count()
+      // the bus delivers in order: once the sentinel shows, every job
+      // started before it has been counted
+      def done = seen.asScala.exists(_._1 == "sentinel")
+      val t0 = System.nanoTime()
+      while (!done && System.nanoTime() - t0 < 60e9) Thread.sleep(20)
+      assert(done, "listener never saw the sentinel")
+      seen.asScala.toSeq.takeWhile(_._1 != "sentinel").map(_._2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   // One temp root per suite: every spec directory and file goes under it,
   // and afterAll deletes the whole tree.

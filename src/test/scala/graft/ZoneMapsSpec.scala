@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import graft.sources.{SkippingRegistry, ZoneMaps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** File-granularity zone-map skipping: pruning must actually skip files
@@ -35,40 +30,11 @@ class ZoneMapsSpec extends SparkSpec {
     ZoneMaps.pruneForClauses(spark.read.parquet(lay.dataDir), lay, ranges,
       Nil).get
 
+  private def listing(dir: String) = spark.read.parquet(dir).inputFiles.toSeq
+
   private def pruneAny(lay: ZoneMaps.Layout, keys: Seq[Long]) =
     ZoneMaps.pruneForClauses(spark.read.parquet(lay.dataDir), lay, Nil, Nil,
       Some(keys.map(k => ZoneMaps.BloomKey(k.toString)))).get
-
-  /** Result-stage names of the Spark jobs `body` starts, in order. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"zonemaps-spec-${java.util.UUID.randomUUID}"
-    val seen = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add((e.properties.getProperty("spark.job.description"),
-            e.stageInfos.maxBy(_.stageId).name))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      body
-      sc.setJobDescription("sentinel")
-      spark.range(1).count()
-      // the bus delivers in order: once the sentinel shows, every job
-      // started before it has been counted
-      def done = seen.asScala.exists(_._1 == "sentinel")
-      val t0 = System.nanoTime()
-      while (!done && System.nanoTime() - t0 < 60e9) Thread.sleep(20)
-      assert(done, "listener never saw the sentinel")
-      seen.asScala.toSeq.takeWhile(_._1 != "sentinel").map(_._2)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("range layout: files are skipped and the pruned read equals the " +
       "full-scan filter exactly") {
@@ -204,7 +170,7 @@ class ZoneMapsSpec extends SparkSpec {
     // new files land (append); refresh incrementally
     (100L until 150L).map(i => (i, i * 2, "b")).toDF("id", "v", "tag")
       .coalesce(2).write.mode("append").parquet(dir)
-    ZoneMaps.appendStats(spark, dir, statsPath, Seq("v"))
+    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v"))
     val appended = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
     val rebuilt = ZoneMaps.buildStats(spark, dir, Seq("v"))
@@ -212,7 +178,7 @@ class ZoneMapsSpec extends SparkSpec {
     assert(appended == rebuilt,
       "incremental append must equal the full rebuild row-for-row")
     // idempotent: nothing new -> same stats republished
-    ZoneMaps.appendStats(spark, dir, statsPath, Seq("v"))
+    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v"))
     assert(ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq == rebuilt)
   }
@@ -238,7 +204,7 @@ class ZoneMapsSpec extends SparkSpec {
     // a strict union would throw; a lenient one would publish rows whose
     // null min_uc_ zones read as all-null files and silently prune —
     // the drift detector must rebuild instead
-    ZoneMaps.appendStats(spark, dir, statsPath, Seq("v", "tag"))
+    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v", "tag"))
     val migrated = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
     val rebuilt = ZoneMaps.buildStats(spark, dir, Seq("v", "tag"))
@@ -359,6 +325,28 @@ class ZoneMapsSpec extends SparkSpec {
     val want = spark.read.parquet(dir).filter(exact)
       .select("id").as[Long].collect().toSeq
     assert(got == want && want == Seq(17L), s"kept $got, want $want")
+  }
+
+  test("job budget: a refresh after one appended file lists the data " +
+      "directory once for both artifacts") {
+    val dir = tempDir("graft-zm").toString + "/data"
+    (0L until 200L).map(i => (i, i % 50, s"t$i")).toDF("id", "v", "tag")
+      .repartitionByRange(4, col("v"), col("id")).write.parquet(dir)
+    val lay = register(dir, Seq("v"), Some("id"))
+    Seq((500L, 7L, "t500")).toDF("id", "v", "tag")
+      .write.mode("append").parquet(dir)
+    val jobs = jobsOf(SkippingRegistry.refresh(spark, dir))
+    // one listing read in refresh; per artifact, one read of its
+    // published version and one of the fresh file — a listing per
+    // artifact would make it 6
+    assert(jobs.count(_.startsWith("parquet at SkippingRegistry")) == 1,
+      s"one listing: $jobs")
+    assert(jobs.count(_.startsWith("parquet at")) == 5,
+      s"the listing plus two reads per artifact: $jobs")
+    val (kept, report) = pruneAny(lay, Seq(500L))
+    assert(report.filesTotal == listing(dir).size && report.filesKept >= 1,
+      report.toString)
+    assert(kept.filter(col("id") === 500L).count() == 1)
   }
 
   test("bloom constants are read once per published version: after an " +
