@@ -210,76 +210,25 @@ object Vectors {
   def simhash64(shingleHashes: Column): Column =
     Bridge.column(SimHash64(Bridge.expression(shingleHashes)))
 
-  /** MinHash signature over an ARRAY<BIGINT> of element hashes: k universal
-    * hashes h_i(x) = (a_i·(x mod p) + b_i) mod p, min per i — all k mins in
-    * ONE fused loop over the input (the HOF form re-traverses the array k
-    * times, interpreted). Same (seeded) coefficients and arithmetic as the
-    * built-in-expression form, so signatures are stable across engines.
+  /** The per-shingle hash a MinHash signature is built over — a closed
+    * choice, so the fused kernel computes it in its own loop.
     */
-  case class MinHashSig(child: Expression, k: Int, seed: Long)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    private val P = 2147483647L // 2^31-1
-
-    // Universal-hash coefficients derived from md5 of a seed-and-index tag,
-    // not from a JVM PRNG: any engine with md5 can replay the identical
-    // signature (the DuckDB oracle for dedup_minhash_lsh does exactly that).
-    @transient private lazy val coefs: (Array[Long], Array[Long]) = {
-      val as = Array.tabulate(k)(i => (MinHashSig.md5Long60(s"graft-mh-a-$seed-$i") % (P - 1)) + 1)
-      val bs = Array.tabulate(k)(i => MinHashSig.md5Long60(s"graft-mh-b-$seed-$i") % P)
-      (as, bs)
-    }
-
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false)
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val (as, bs) = coefs
-      val mins = Array.fill(k)(Long.MaxValue)
-      var j = 0
-      val m = arr.numElements()
-      while (j < m) {
-        val hm = { val r = arr.getLong(j) % P; if (r < 0) r + P else r }
-        var i = 0
-        while (i < k) {
-          val v = (hm * as(i) + bs(i)) % P
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-        j += 1
-      }
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(mins)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val asRef = ctx.addReferenceObj("minhashA", coefs._1, "long[]")
-      val bsRef = ctx.addReferenceObj("minhashB", coefs._2, "long[]")
-      nullSafeCodeGen(ctx, ev, c => {
-        val mins = ctx.freshName("mins")
-        val j = ctx.freshName("j")
-        val i = ctx.freshName("i")
-        val hm = ctx.freshName("hm")
-        val v = ctx.freshName("v")
-        s"""
-        long[] $mins = new long[$k];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        for (int $j = 0; $j < $c.numElements(); $j++) {
-          long $hm = $c.getLong($j) % ${P}L;
-          if ($hm < 0) $hm += ${P}L;
-          for (int $i = 0; $i < $k; $i++) {
-            long $v = ($hm * $asRef[$i] + $bsRef[$i]) % ${P}L;
-            if ($v < $mins[$i]) $mins[$i] = $v;
-          }
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($mins);
-        """
-      })
-    }
+  sealed trait ShingleHash
+  object ShingleHash {
+    /** Spark's `xxhash64(s)` (seed 42) of the shingle's UTF-8 bytes: the
+      * fast default.
+      */
+    case object XxHash64 extends ShingleHash
+    /** The top 60 bits of md5(s) (`MinHashSig.md5Long60`,
+      * `('0x'||substr(md5(s),1,15))::BIGINT`): replayable in any SQL
+      * engine, so an external oracle can check the signatures.
+      */
+    case object Md5Portable extends ShingleHash
   }
 
   object MinHashSig {
+    val P = 2147483647L // 2^31-1
+
     /** First 15 hex chars (60 bits) of md5(s) as a non-negative Long —
       * matches SQL `('0x' || substr(md5(s),1,15))::BIGINT`.
       */
@@ -289,6 +238,17 @@ object Vectors {
       d.take(8).map("%02x".format(_)).mkString.take(15).foldLeft(0L)(
         (acc, c) => acc * 16 + Character.digit(c, 16))
     }
+
+    /** The k universal-hash coefficient pairs (a_i, b_i) of
+      * h_i(x) = (a_i·(x mod p) + b_i) mod p, derived from md5 of a
+      * seed-and-index tag (`graft-mh-a-42-<i>`, `graft-mh-b-42-<i>`),
+      * not from a JVM PRNG: any engine with md5 can
+      * replay the identical signature (the DuckDB oracle for
+      * dedup_minhash_lsh does exactly that).
+      */
+    def coefficients(k: Int): (Array[Long], Array[Long]) = (
+      Array.tabulate(k)(i => (md5Long60(s"graft-mh-a-42-$i") % (P - 1)) + 1),
+      Array.tabulate(k)(i => md5Long60(s"graft-mh-b-42-$i") % P))
   }
 
   private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
@@ -296,32 +256,207 @@ object Vectors {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** md5Long60 of `len` bytes of `buf`. */
+  private def md5Top60(d: java.security.MessageDigest, buf: Array[Byte],
+      len: Int): Long = {
+    d.reset()
+    d.update(buf, 0, len)
+    val h = d.digest()
+    var v = 0L
+    var j = 0
+    while (j < 8) { v = (v << 8) | (h(j) & 0xffL); j += 1 }
+    v >>> 4
+  }
+
+  /** MinHash signature of a word array's n-gram shingles in one loop:
+    * each n-gram is its words joined by one space (the `Dedup.shingles`
+    * gram), hashed by `portable` ? md5Long60 : xxhash64, and folded into
+    * the k universal-hash mins. Repeated grams fold to the same mins, so
+    * the distinct step of the shingle array is not needed. A gram with a
+    * null word is no shingle; null when no shingle is left.
+    */
+  def minhashShingleKernel(words: ArrayData, n: Int, portable: Boolean,
+      as: Array[Long], bs: Array[Long]): ArrayData = {
+    val m = words.numElements()
+    val k = as.length
+    val P = MinHashSig.P
+    val bytes = new Array[Array[Byte]](m)
+    var i = 0
+    while (i < m) {
+      if (!words.isNullAt(i)) bytes(i) = words.getUTF8String(i).getBytes
+      i += 1
+    }
+    val d = if (portable) md5Digest.get() else null
+    val mins = Array.fill(k)(Long.MaxValue)
+    var buf = new Array[Byte](64)
+    var any = false
+    var g = 0
+    while (g + n <= m) {
+      var len = 0
+      var ok = true
+      var w = g
+      while (ok && w < g + n) {
+        val b = bytes(w)
+        if (b == null) ok = false
+        else {
+          val need = len + b.length + 1
+          if (need > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
+          if (w > g) { buf(len) = ' '.toByte; len += 1 }
+          System.arraycopy(b, 0, buf, len, b.length)
+          len += b.length
+        }
+        w += 1
+      }
+      if (ok) {
+        any = true
+        val h =
+          if (portable) md5Top60(d, buf, len)
+          else org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+            buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+        val hm = { val r = h % P; if (r < 0) r + P else r }
+        var j = 0
+        while (j < k) {
+          val v = (hm * as(j) + bs(j)) % P
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
+      }
+      g += 1
+    }
+    if (any) ArrayData.toArrayData(mins) else null
+  }
+
+  /** Word array -> MinHash signature (ARRAY<BIGINT> of length k, null when
+    * the array has no n-gram), fused: n-gram concatenation, shingle hash
+    * and the k universal-hash mins run in one generated call, where the
+    * built-in form interprets a zip_with per gram step, an md5 + conv
+    * lambda per shingle and then folds the hashes. Bit-identical to that
+    * unfused chain for both hash choices (DedupSpec pins it against the
+    * reference form in src/test).
+    */
+  case class MinHashShingles(child: Expression, n: Int, k: Int,
+      hash: ShingleHash)
+      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    @transient private lazy val coefs = MinHashSig.coefficients(k)
+    private def portable = hash == ShingleHash.Md5Portable
+
+    override def nullable: Boolean = true
+    override def dataType: DataType =
+      org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+
+    override def nullSafeEval(input: Any): Any =
+      minhashShingleKernel(input.asInstanceOf[ArrayData], n, portable,
+        coefs._1, coefs._2)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val asRef = ctx.addReferenceObj("minhashA", coefs._1, "long[]")
+      val bsRef = ctx.addReferenceObj("minhashB", coefs._2, "long[]")
+      nullSafeCodeGen(ctx, ev, c => s"""
+        ${ev.value} = graft.functions.Vectors.minhashShingleKernel(
+          $c, $n, $portable, $asRef, $bsRef);
+        ${ev.isNull} = ${ev.value} == null;
+        """)
+    }
+  }
+
+  /** MinHash signature of the word array `words`' n-gram shingles (see
+    * [[MinHashShingles]]).
+    */
+  def minhashShingles(words: Column, n: Int, k: Int,
+      hash: ShingleHash): Column =
+    Bridge.column(MinHashShingles(Bridge.expression(words), n, k, hash))
+
+  /** LSH bucket of band `b`: xxhash64 (seed 42) of the band's `rows`
+    * signature values as decimal text joined by "," — the value of
+    * `xxhash64(array_join(transform(slice(sig, b·rows + 1, rows),
+    * x -> cast(x as string)), ","))`. Shared by the band expression and
+    * the driver-local banding of `Dedup.minhashLsh`.
+    */
+  def bandBucket(sig: Array[Long], b: Int, rows: Int): Long = {
+    val sb = new java.lang.StringBuilder
+    var r = b * rows
+    val end = math.min(sig.length, b * rows + rows)
+    while (r < end) {
+      if (r > b * rows) sb.append(',')
+      sb.append(sig(r))
+      r += 1
+    }
+    val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(bytes,
+      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
+  }
+
+  def minhashBandsKernel(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val s = sig.toLongArray()
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](bands)(b =>
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](b, bandBucket(s, b, rows)))))
+  }
+
+  /** Signature -> ARRAY<STRUCT<band INT, bucket BIGINT>>, one entry per
+    * band (see [[bandBucket]]): the LSH band keys in one call instead of
+    * a per-band slice, cast and array_join lambda. With b bands of r rows,
+    * P(candidate) = 1 - (1 - s^r)^b for Jaccard s.
+    */
+  case class MinHashBands(child: Expression, bands: Int, rows: Int)
+      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("band",
+          org.apache.spark.sql.types.IntegerType, nullable = false),
+        org.apache.spark.sql.types.StructField("bucket", LongType,
+          nullable = false))),
+      containsNull = false)
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+    override def nullSafeEval(input: Any): Any =
+      minhashBandsKernel(input.asInstanceOf[ArrayData], bands, rows)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c =>
+        s"graft.functions.Vectors.minhashBandsKernel($c, $bands, $rows)")
+  }
+
+  def minhashBands(sig: Column, bands: Int, rows: Int): Column =
+    Bridge.column(MinHashBands(Bridge.expression(sig), bands, rows))
+
   /** Whole-array md5Long60: ARRAY<STRING> -> ARRAY<BIGINT> in one static
     * call (thread-local digest, UTF8String bytes straight into the digest —
     * no per-element String or expression-eval overhead). Bit-identical to
-    * mapping md5Long60 / `('0x'||substr(md5(s),1,15))::BIGINT`.
+    * mapping md5Long60 / `('0x'||substr(md5(s),1,15))::BIGINT`, null
+    * elements included: a null element hashes to null.
     */
   def md5ArrayKernel(arr: ArrayData): ArrayData = {
     val d = md5Digest.get()
     val n = arr.numElements()
     val out = new Array[Long](n)
+    var nulls = false
     var i = 0
     while (i < n) {
-      d.reset()
-      val h = d.digest(arr.getUTF8String(i).getBytes)
-      var v = 0L
-      var j = 0
-      while (j < 8) { v = (v << 8) | (h(j) & 0xffL); j += 1 }
-      out(i) = v >>> 4
+      if (arr.isNullAt(i)) nulls = true
+      else {
+        val b = arr.getUTF8String(i).getBytes
+        out(i) = md5Top60(d, b, b.length)
+      }
       i += 1
     }
-    ArrayData.toArrayData(out)
+    val res = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(out)
+    if (nulls) {
+      i = 0
+      while (i < n) { if (arr.isNullAt(i)) res.setNullAt(i); i += 1 }
+    }
+    res
   }
 
   case class Md5Array60(child: Expression)
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
+      LongType, child.dataType.asInstanceOf[
+        org.apache.spark.sql.types.ArrayType].containsNull)
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(c)
     override def nullSafeEval(input: Any): Any =
@@ -537,9 +672,6 @@ object Vectors {
   def cellTopK(qv: Column, block: Column, selfId: Column, k: Int): Column =
     Bridge.column(CellTopK(Bridge.expression(qv), Bridge.expression(block),
       Bridge.expression(selfId), k))
-
-  def minhashSignature(hashes: Column, k: Int, seed: Long = 42L): Column =
-    Bridge.column(MinHashSig(Bridge.expression(hashes), k, seed))
 
   /** Jaccard similarity of two DISTINCT-element arrays: one hash-set build
     * + one probe pass, vs array_intersect + array_union (two interpreted

@@ -13,16 +13,18 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * keep their own cost formulas; this object owns the budgets, the
   * bounded collect and the override that forces the distributed path.
   * Both paths are bit-identical (local ≡ [[distributed]] specs in
-  * ClusteringSpec and SimilaritySpec).
+  * ClusteringSpec, SimilaritySpec and DedupSpec).
   */
 object Crossover {
   val LinWork = 20000000000L  // n²·L compares, LIN / PRIM nearest maps (~20 s)
   val LinMatrix = 64000000L   // n·L dictionary-coded matrix cells, same paths
   val GraphEdges = 5000000L   // raw edges, components + MSF (~80 MB, ~1 s union)
-  val GraphPairs = 2000000L   // pairs, dbscan + labelPropagate/coreness/pagerank
+  val GraphPairs = 2000000L   // pairs, dbscan + labelPropagate/coreness/pagerank,
+                              // MinHash LSH candidate pairs
   val NewickEdges = 200000L   // edges, Newick per-level memberships
   val NnDescentWork = 50000L  // n·k list rows, NN-descent (O(n·k²) local work)
   val MmrRows = 4096L         // shortlist rows, MMR greedy
+  val MinhashCells = 2200000L // n·k signature longs, MinHash LSH (~64 MB of rows)
 
   private val forced = new DynamicVariable(false)
 

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Vectors
+import graft.functions.Vectors.ShingleHash
+import graft.operators.Crossover
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 /** Large-scale dedup operators (builder-prompt pipeline surface).
   *
@@ -9,8 +13,11 @@ import org.apache.spark.sql.functions._
   * compositions — every stage is shuffle-minimal and map-side combinable:
   *
   *   exact        — hash groupBy on a content digest (1 shuffle on digest)
-  *   minhashLsh   — shingle → minhash signature (narrow) → band buckets →
-  *                  self equi join on (band, bucket) (shuffle on bucket key,
+  *   minhashLsh   — word array → fused shingle-hash-minhash signature
+  *                  (narrow) → band buckets → in-bucket pairs: within the
+  *                  Crossover budget banded on the driver after one
+  *                  bounded collect (no shuffle); beyond it one
+  *                  aggregation on (band, bucket) (shuffle on bucket key,
   *                  candidate pairs only — never the O(n²) pair space)
   *   simhash      — 64-bit simhash per doc (narrow), near-dup = hamming ≤ k
   *                  over bucketed prefixes
@@ -65,21 +72,14 @@ object Dedup {
     array_distinct(filter(grams, x => x.isNotNull))
   }
 
-  /** Deterministic 32-bit hash of a string, reproducible across engines:
-    * the classic FNV-1a, computed with Spark built-ins on the shingle array
-    * (no UDF in the hot path would be better still via a custom Expression;
-    * xxhash64 is used instead — Spark-native, codegen'd, stable).
-    */
-  def shingleHashes(sh: Column): Column =
-    transform(sh, s => xxhash64(s))
-
   /** Cross-engine-reproducible shingle hashes: the top 60 bits of md5(s),
-    * decoded from hex. Slower than xxhash64 (md5 + string conv), but every
-    * SQL engine computes the identical value — used where an external
-    * oracle must replay the pipeline; xxhash64 stays the fast path.
+    * decoded from hex, in one fused call over the array
+    * (graft.functions.Vectors.md5Array60). Every SQL engine computes the
+    * identical value — used where an external oracle must replay the
+    * pipeline.
     */
   def portableShingleHashes(sh: Column): Column =
-    transform(sh, portableHash(_))
+    Vectors.md5Array60(sh)
 
   /** Scalar form of the portable hash: top 60 bits of md5, hex-decoded —
     * identical in any SQL engine. The fast path is xxhash64.
@@ -87,32 +87,21 @@ object Dedup {
   def portableHash(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  /** MinHash signature: k universal hashes h_i(x) = (a_i*x + b_i) mod p,
-    * min over shingle hashes. Returns ARRAY<BIGINT> length k. A fused
-    * codegen'd expression (graft.functions.Vectors.MinHashSig): one loop
-    * computes all k mins, vs k interpreted array traversals for the
-    * built-in transform/array_min form.
-    */
-  def minhashSignature(shingleHashes: Column, k: Int): Column =
-    graft.functions.Vectors.minhashSignature(shingleHashes, k)
-
-  /** LSH band key: hash of each size-r slice of the signature. With b bands
-    * of r rows, P(candidate) = 1 - (1 - s^r)^b for Jaccard s.
-    */
-  def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(array_join(transform(slice(sig, b * lit(rows) + lit(1), lit(rows)),
-          x => x.cast("string")), ",")).as("bucket")))
-
   /** Full MinHash+LSH near-dup candidate pipeline:
     * docs(id, text) → candidate pairs (id1 < id2) with estimated jaccard
     * (signature agreement fraction) >= minEstJaccard.
     *
-    * Eager: the pairs are computed before this returns, and the result is
-    * a materialized [[graft.operators.Pinning]] pin that the CALLER owns
-    * (`Pinning.unpin` frees it). The signatures it was built from are
-    * already released, so the pin holds only the pair rows.
+    * Eager: the pairs are computed before this returns. Within the
+    * `Crossover.MinhashCells` budget (n·k signature longs) the
+    * signatures are collected in one bounded take and banded, paired and
+    * estimated on the driver, and the result is a local frame: no pin,
+    * no shuffle. Beyond it (and on a null or duplicate id, a candidate
+    * pair count over `Crossover.GraphPairs`, or under
+    * `Crossover.distributed`) the result is a materialized
+    * [[graft.operators.Pinning]] pin that the CALLER owns, and the
+    * signatures it was built from are already released, so the pin holds
+    * only the pair rows. `Pinning.unpin` is safe on both forms. The rows
+    * are the same on both paths (DedupSpec pins it).
     */
   def minhashLsh(
       docs: DataFrame,
@@ -123,27 +112,74 @@ object Dedup {
       bands: Int = 32,
       minEstJaccard: Double = 0.5,
       maxBucketSize: Int = 1000,
-      hasher: Column => Column = shingleHashes): DataFrame = {
+      hasher: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     val rows = k / bands
+    val sigs = minhashSigsOf(docs, id, text, shingleN, k, hasher)
+    val idType = docs.schema(id).dataType
+    minhashPairsLocal(sigs, idType, k, bands, rows, minEstJaccard,
+      maxBucketSize, Crossover.MinhashCells / k).getOrElse(
+      minhashPairsDistributed(sigs, k, bands, rows, minEstJaccard,
+        maxBucketSize))
+  }
+
+  /** The driver-local pair build: None when there are more than
+    * `budgetRows` signatures, an id is null or repeated, or the
+    * candidate pairs pass `Crossover.GraphPairs`.
+    */
+  private[graft] def minhashPairsLocal(sigs: DataFrame, idType: DataType,
+      k: Int, bands: Int, rows: Int, minEstJaccard: Double,
+      maxBucketSize: Int, budgetRows: Long): Option[DataFrame] =
+    Crossover.take(sigs, budgetRows, "__id").flatMap { got =>
+      // doc indices in id order, so a pair of indices i < j is id1 < id2
+      val docs = got.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+        .sortBy(_._1)
+      val (ids, sig) = (docs.map(_._1), docs.map(_._2))
+      val buckets = docs.indices
+        .flatMap(i => (0 until bands).map(b =>
+          (b, Vectors.bandBucket(sig(i), b, rows)) -> i))
+        .groupMap(_._1)(_._2).values
+        .filter(m => m.size >= 2 && m.size <= maxBucketSize)
+      val work = buckets.iterator.map(m => m.size.toLong * (m.size - 1) / 2).sum
+      val repeated = ids.indices.exists(i => i > 0 && ids(i - 1) == ids(i))
+      if (repeated || !Crossover.fits(work, Crossover.GraphPairs)) None
+      else {
+        // members are in index order; a pair (i, j) packs as i·n + j
+        val n = docs.length.toLong
+        val pairs = buckets.iterator.flatMap(m =>
+          m.indices.iterator.flatMap(x =>
+            (x + 1 until m.size).iterator.map(y => m(x) * n + m(y)))).toSet
+        val out = pairs.iterator.flatMap { p =>
+          val (i, j) = ((p / n).toInt, (p % n).toInt)
+          val agree = (0 until k).count(c => sig(i)(c) == sig(j)(c))
+          val est = agree.toDouble / k
+          if (est >= minEstJaccard) Some(Row(ids(i), ids(j), est)) else None
+        }.toSeq
+        val local = sigs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(out: _*), StructType(Seq(
+            StructField("id1", LongType), StructField("id2", LongType),
+            StructField("est_jaccard", DoubleType))))
+        Some(local.select(col("id1").cast(idType).as("id1"),
+          col("id2").cast(idType).as("id2"), col("est_jaccard")))
+      }
+    }
+
+  private def minhashPairsDistributed(unpinned: DataFrame, k: Int,
+      bands: Int, rows: Int, minEstJaccard: Double,
+      maxBucketSize: Int): DataFrame = {
     // signatures once, pinned per call: reused by the band join and the
     // final estimate join (signatures are k longs per doc — small);
     // released below once the pairs are pinned, never a session-lifetime
     // CacheManager row
-    val sigs = graft.operators.Pinning.pin(docs
-      .select(col(id).as("__id"), shingles(col(text), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("__id"), minhashSignature(hasher(col("sh")), k).as("sig")))
-    // only (id, band, bucket) flows through the shuffle — the signature
-    // arrays are re-attached after pair dedup, not dragged through the join
-    val banded = sigs
-      .select(col("__id"), explode(bandKeys(col("sig"), bands, rows)).as("bk"))
-      .select(col("__id"), col("bk.band"), col("bk.bucket"))
+    val sigs = graft.operators.Pinning.pin(unpinned)
     // ONE aggregation replaces window-count guard + self-join + filter:
     // collect each bucket's ids, drop degenerate (oversized) buckets, and
     // expand the in-bucket pairs locally from the sorted id list. Saves two
     // full shuffles and a window sort; bucket sizes are bounded by
     // maxBucketSize so the local expansion is at most quadratic in that cap.
-    val buckets = banded.groupBy(col("band"), col("bucket"))
+    // Only (id, band, bucket) flows through the shuffle — the signature
+    // arrays are re-attached after pair dedup, not dragged through it.
+    val buckets = minhashBandedOf(sigs, bands, rows)
+      .groupBy(col("band"), col("bucket"))
       .agg(collect_list(col("__id")).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucketSize)
     val sortedIds = array_sort(col("ids"))
@@ -166,6 +202,37 @@ object Dedup {
     graft.operators.Pinning.unpin(sigs)
     result
   }
+
+  /** (__id, sig): one fused signature per document with at least one
+    * n-gram ([[graft.functions.Vectors.MinHashShingles]] over [[words]]).
+    */
+  private[graft] def minhashSigsOf(df: DataFrame, id: String, text: String,
+      shingleN: Int, k: Int, hasher: ShingleHash): DataFrame = df
+    .select(col(id).as("__id"),
+      Vectors.minhashShingles(words(col(text)), shingleN, k, hasher).as("sig"))
+    .filter(col("sig").isNotNull)
+
+  /** (__id, band, bucket): one row per document and band
+    * ([[graft.functions.Vectors.MinHashBands]]).
+    */
+  private[graft] def minhashBandedOf(sigs: DataFrame, bands: Int,
+      rows: Int): DataFrame = sigs
+    .select(col("__id"), explode(Vectors.minhashBands(col("sig"), bands, rows))
+      .as("bk"))
+    .select(col("__id"), col("bk.band").as("band"),
+      col("bk.bucket").as("bucket"))
+
+  /** The bucket index derived from a signature frame: per-(band, bucket)
+    * base-id lists with the degenerate-bucket cap — this aggregate IS the
+    * materialized index side. Shared by every derivation site so sigs →
+    * buckets can never drift between the in-session and persisted paths.
+    */
+  def minhashBucketsOf(sigs: DataFrame, bands: Int, rows: Int,
+      maxBucketSize: Int): DataFrame =
+    minhashBandedOf(sigs, bands, rows)
+      .groupBy(col("band"), col("bucket"))
+      .agg(collect_list(col("__id")).as("base_ids"))
+      .filter(size(col("base_ids")) <= maxBucketSize)
 
   /** Incremental (delta-vs-index) near-dup: dedup a NEW ingest batch
     * against an already-indexed corpus without re-pairing the corpus with
@@ -191,30 +258,6 @@ object Dedup {
     * best_est, is_dup) — best = highest estimated jaccard, ties to the
     * smallest base id; clean docs get (0, null, null, false).
     */
-  private[graft] def minhashSigsOf(df: DataFrame, id: String, text: String,
-      shingleN: Int, k: Int, hasher: Column => Column): DataFrame = df
-    .select(col(id).as("__id"), shingles(col(text), shingleN).as("sh"))
-    .filter(size(col("sh")) > 0)
-    .select(col("__id"), minhashSignature(hasher(col("sh")), k).as("sig"))
-
-  private[graft] def minhashBandedOf(sigs: DataFrame, bands: Int,
-      rows: Int): DataFrame = sigs
-    .select(col("__id"), explode(bandKeys(col("sig"), bands, rows)).as("bk"))
-    .select(col("__id"), col("bk.band").as("band"),
-      col("bk.bucket").as("bucket"))
-
-  /** The bucket index derived from a signature frame: per-(band, bucket)
-    * base-id lists with the degenerate-bucket cap — this aggregate IS the
-    * materialized index side. Shared by every derivation site so sigs →
-    * buckets can never drift between the in-session and persisted paths.
-    */
-  def minhashBucketsOf(sigs: DataFrame, bands: Int, rows: Int,
-      maxBucketSize: Int): DataFrame =
-    minhashBandedOf(sigs, bands, rows)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("__id")).as("base_ids"))
-      .filter(size(col("base_ids")) <= maxBucketSize)
-
   def incrementalNearDup(
       base: DataFrame,
       delta: DataFrame,
@@ -225,7 +268,7 @@ object Dedup {
       bands: Int = 32,
       minEstJaccard: Double = 0.5,
       maxBucketSize: Int = 1000,
-      hasher: Column => Column = shingleHashes): DataFrame = {
+      hasher: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     // pin the signatures, then derive the bucket index from the PINNED
     // frame so the shingle+minhash chain runs once for both index tables
     val baseSigs = graft.operators.Pinning.pin(
@@ -250,7 +293,7 @@ object Dedup {
       k: Int,
       bands: Int,
       minEstJaccard: Double,
-      hasher: Column => Column = shingleHashes): DataFrame = {
+      hasher: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     val deltaSigs = graft.operators.Pinning.pin(
       minhashSigsOf(delta, id, text, shingleN, k, hasher))
     val candidates = minhashBandedOf(deltaSigs, bands, k / bands)

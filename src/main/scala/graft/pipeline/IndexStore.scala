@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Vectors.ShingleHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,8 +88,7 @@ object IndexStore {
   def saveMinhash(base: DataFrame, id: String, text: String,
       shingleN: Int, k: Int, bands: Int, maxBucketSize: Int,
       livePath: String,
-      hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Dedup.shingleHashes): Unit = {
+      hasher: ShingleHash = ShingleHash.XxHash64): Unit = {
     // pin the signatures before deriving the bucket table: unpinned, the
     // corpus-scale shingle+minhash chain would execute twice inside one
     // publish (ADVICE r11) — the same pin incrementalNearDup holds
@@ -150,8 +150,7 @@ object IndexStore {
   def queryMinhash(spark: SparkSession, livePath: String, delta: DataFrame,
       id: String, text: String, shingleN: Int, k: Int, bands: Int,
       minEstJaccard: Double,
-      hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Dedup.shingleHashes): DataFrame = {
+      hasher: ShingleHash = ShingleHash.XxHash64): DataFrame = {
     val live = graft.operators.CacheRefresh.resolveLive(spark, livePath)
     Dedup.nearDupVerdictsAgainst(
       spark.read.parquet(s"$live/sigs"),
@@ -176,8 +175,7 @@ object IndexStore {
   def appendMinhash(delta: DataFrame, id: String, text: String,
       shingleN: Int, k: Int, bands: Int, maxBucketSize: Int,
       livePath: String,
-      hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Dedup.shingleHashes,
+      hasher: ShingleHash = ShingleHash.XxHash64,
       marker: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
     val live = graft.operators.CacheRefresh.resolveLive(spark, livePath)

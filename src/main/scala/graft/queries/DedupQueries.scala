@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 
@@ -213,7 +214,7 @@ object DedupQueries extends QueryModule {
     graft.SessionMemo(s, "dedup.pairs", dir)(
       Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id",
         "text", shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
-        hasher = Dedup.portableShingleHashes))
+        hasher = ShingleHash.Md5Portable))
 
   // MinHash + LSH near-dup candidates over portable (md5-derived) shingle
   // hashes and md5-derived universal-hash coefficients: the oracle replays
@@ -624,7 +625,7 @@ object DedupQueries extends QueryModule {
       val base = docs.filter(col("doc_id") % 11 =!= 0)
       Dedup.incrementalNearDup(base, delta, "doc_id", "text",
           shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
-          hasher = Dedup.portableShingleHashes)
+          hasher = ShingleHash.Md5Portable)
         .withColumn("best_est", round(col("best_est"), 4))
         .orderBy(col("doc_id"))
     },
@@ -645,7 +646,7 @@ object DedupQueries extends QueryModule {
       graft.pipeline.IndexStore.saveMinhash(
         docs.filter(col("doc_id") % 11 =!= 0), "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-        livePath = p, hasher = Dedup.portableShingleHashes)
+        livePath = p, hasher = ShingleHash.Md5Portable)
       p
     }
 
@@ -656,7 +657,7 @@ object DedupQueries extends QueryModule {
       val delta = docs.filter(col("doc_id") % 11 === 0)
       graft.pipeline.IndexStore.queryMinhash(s, cachedMinhashStore(s, dir),
           delta, "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-          minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+          minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
         .withColumn("best_est", round(col("best_est"), 4))
         .orderBy(col("doc_id"))
     },
@@ -681,11 +682,11 @@ object DedupQueries extends QueryModule {
       graft.pipeline.IndexStore.saveMinhash(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-        livePath = p, hasher = Dedup.portableShingleHashes)
+        livePath = p, hasher = ShingleHash.Md5Portable)
       graft.pipeline.IndexStore.appendMinhash(
         docs.filter(col("doc_id") % 3 === 1), "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-        livePath = p, hasher = Dedup.portableShingleHashes)
+        livePath = p, hasher = ShingleHash.Md5Portable)
       p
     }
 
@@ -726,7 +727,7 @@ object DedupQueries extends QueryModule {
       graft.pipeline.IndexStore.queryMinhash(s,
           cachedAppendedMinhashStore(s, dir),
           delta, "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-          minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+          minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
         .withColumn("best_est", round(col("best_est"), 4))
         .orderBy(col("doc_id"))
     },
@@ -779,7 +780,7 @@ object DedupQueries extends QueryModule {
       graft.pipeline.IndexStore.saveMinhash(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-        livePath = p, hasher = Dedup.portableShingleHashes)
+        livePath = p, hasher = ShingleHash.Md5Portable)
       // %3==1 ids are ≡ 1 or 4 (mod 6) — two exact batches (integer
       // arithmetic; col/3 would be DOUBLE division and silently drop rows)
       Seq(1, 4).zipWithIndex.foreach { case (m, b) =>
@@ -787,7 +788,7 @@ object DedupQueries extends QueryModule {
           docs.filter(col("doc_id") % 6 === m),
           "doc_id", "text", shingleN = 2, k = 64, bands = 16,
           maxBucketSize = 1000, livePath = p,
-          hasher = Dedup.portableShingleHashes, marker = Some(b.toLong))
+          hasher = ShingleHash.Md5Portable, marker = Some(b.toLong))
       }
       p
     }
@@ -800,7 +801,7 @@ object DedupQueries extends QueryModule {
       graft.pipeline.IndexStore.queryMinhash(s,
           cachedStreamedMinhashStore(s, dir),
           delta, "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-          minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+          minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
         .withColumn("best_est", round(col("best_est"), 4))
         .orderBy(col("doc_id"))
     },
@@ -1064,7 +1065,7 @@ object DedupQueries extends QueryModule {
         s, cachedMinhashStore(s, dir),
         delta.join(surv.select("doc_id"), Seq("doc_id")),
         "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-        minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+        minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
       // pinned (r15 opt): admitted is consumed by BOTH sides of the IVF
       // append (delta AND query set) and by the final report join —
       // unpinned, the whole MinHash verdict chain re-executed per

@@ -76,13 +76,13 @@ object SkippingRegistry {
       ZoneMaps.Layout = {
     require(zoneCols.nonEmpty || bloomCol.nonEmpty,
       "a registration must index at least one column")
+    // one read (listing and schema) serves both artifacts' builds
+    val src = spark.read.parquet(dataDir)
     if (zoneCols.nonEmpty)
-      ZoneMaps.saveStats(
-        ZoneMaps.buildStats(spark, dataDir, zoneCols),
+      ZoneMaps.saveStats(ZoneMaps.buildStats(src, zoneCols),
         statsLivePath(dataDir))
     bloomCol.foreach(c =>
-      ZoneMaps.saveBloomStats(
-        ZoneMaps.buildBloomStats(spark, dataDir, c),
+      ZoneMaps.saveBloomStats(ZoneMaps.buildBloomStats(src, c),
         bloomLivePath(dataDir)))
     writeManifest(spark, dataDir, Registration(zoneCols, bloomCol))
     // same-JVM sessions that probed before registration hold a memoized
@@ -131,14 +131,17 @@ object SkippingRegistry {
   def refresh(spark: SparkSession, dataDir: String,
       marker: Option[Long] = None): Unit =
     readManifest(spark, dataDir).foreach { reg =>
-      // one listing serves both artifacts' delta anti-joins
-      val files = spark.read.parquet(dataDir).inputFiles.toSeq
+      // one listing read serves both artifacts' delta anti-joins, and its
+      // schema their reads of the fresh files
+      val read = spark.read.parquet(dataDir)
+      val files = read.inputFiles.toSeq
       reg.bloomCol.foreach(c =>
         ZoneMaps.appendBloomStats(spark, dataDir, files, bloomLivePath(dataDir),
-          c, marker = marker.filter(_ => reg.zoneCols.isEmpty)))
+          c, marker = marker.filter(_ => reg.zoneCols.isEmpty),
+          schema = Some(read.schema)))
       if (reg.zoneCols.nonEmpty)
         ZoneMaps.appendStats(spark, dataDir, files, statsLivePath(dataDir),
-          reg.zoneCols, marker = marker)
+          reg.zoneCols, marker = marker, schema = Some(read.schema))
     }
 
   /** The last stream batch id folded into the registered artifacts

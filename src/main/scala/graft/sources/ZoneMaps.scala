@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** File-granularity zone maps — the data-skipping layer ABOVE parquet's
   * own row-group statistics: one (min, max, rows) row per FILE per
@@ -96,15 +97,13 @@ object ZoneMaps {
       typed :+ count(when(col(c).isNull, lit(1))).as(s"nulls_$c")
     }
 
-  /** Build the per-file stats table for `cols` over a parquet layout —
-    * one scan, one tiny aggregation keyed on the file path.
+  /** Build the per-file stats table for `cols` over a parquet layout's
+    * plain read `src` — one scan, one tiny aggregation keyed on the file
+    * path.
     */
-  def buildStats(spark: SparkSession, dataDir: String,
-      cols: Seq[String]): DataFrame = {
-    val src = spark.read.parquet(dataDir)
+  def buildStats(src: DataFrame, cols: Seq[String]): DataFrame =
     src.groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("rows"), statsAggs(src, cols): _*)
-  }
 
   /** Publish the stats table under a versioned pointer — the fourth
     * build-once/serve-across-sessions artifact (IVF, MinHash, tokenizer,
@@ -196,6 +195,13 @@ object ZoneMaps {
 
   final case class PruneReport(filesTotal: Long, filesKept: Long)
 
+  /** A refresh's fresh files, read with the schema of the refresh's
+    * listing read when the caller passes it, so the read infers nothing.
+    */
+  private def readFiles(spark: SparkSession, files: Seq[String],
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(files: _*)
+
   /** Incremental stats maintenance — the append discipline the persisted
     * IVF index uses, applied to the skipping layer: a refresh after new
     * files land scans ONLY the files absent from the published stats
@@ -203,10 +209,12 @@ object ZoneMaps {
     * 800k to refresh metadata would dwarf the ingest itself) and
     * republishes the union under the next versioned pointer. Stats rows
     * are per-file and independent, so append ≡ full rebuild exactly
-    * (ZoneMapsSpec pins row equality).
+    * (ZoneMapsSpec pins row equality). `schema` is the listing read's
+    * schema, which the fresh files are read with.
     */
   def appendStats(spark: SparkSession, dataDir: String, files: Seq[String],
-      livePath: String, cols: Seq[String], marker: Option[Long] = None): Unit = {
+      livePath: String, cols: Seq[String], marker: Option[Long] = None,
+      schema: Option[StructType] = None): Unit = {
     val current = loadStats(spark, livePath)
     // fresh = listing ∖ published stats, as an ANTI-JOIN against the
     // stats table: only the DELTA's names come back to the driver
@@ -222,7 +230,7 @@ object ZoneMaps {
     val merged =
       if (fresh.isEmpty) current
       else {
-        val freshDf = spark.read.parquet(fresh.toIndexedSeq: _*)
+        val freshDf = readFiles(spark, fresh.toIndexedSeq, schema)
         val freshStats = freshDf.groupBy(input_file_name().as("file"))
           .agg(count(lit(1)).as("rows"), statsAggs(freshDf, cols): _*)
         // schema drift: an artifact published by an OLDER statsAggs
@@ -239,7 +247,7 @@ object ZoneMaps {
         def shape(df: DataFrame) =
           df.schema.map(f => f.name -> f.dataType).toMap
         if (shape(current) != shape(freshStats))
-          buildStats(spark, dataDir, cols)
+          buildStats(spark.read.parquet(dataDir), cols)
         else current.unionByName(freshStats)
       }
     saveStats(merged, livePath, marker = marker)
@@ -254,17 +262,18 @@ object ZoneMaps {
     * republishes under the next versioned pointer. Per-file rows are
     * independent, so append ≡ full rebuild at equal constants
     * (ZoneMapsSpec pins it). A no-op delta returns without
-    * republishing. `files` is the data directory's listing, as for
+    * republishing. `files` is the data directory's listing and `schema`
+    * its read's schema, as for
     * [[appendStats]].
     */
   def appendBloomStats(spark: SparkSession, dataDir: String,
       files: Seq[String], livePath: String, keyCol: String,
-      marker: Option[Long] = None): Unit = {
+      marker: Option[Long] = None, schema: Option[StructType] = None): Unit = {
     val current = loadArtifact(spark, livePath)
       .flatMap(a => a.bloom.map(a.table -> _))
     // nothing published, or an empty table: no constants to keep
     if (current.isEmpty) {
-      saveBloomStats(buildBloomStats(spark, dataDir, keyCol), livePath,
+      saveBloomStats(buildBloomStats(spark.read.parquet(dataDir), keyCol), livePath,
         marker = marker)
       return
     }
@@ -284,7 +293,7 @@ object ZoneMaps {
       if (fresh.isEmpty) table
       else table.unionByName(
         bloomStatsOf(
-          spark.read.parquet(fresh.toIndexedSeq: _*)
+          readFiles(spark, fresh.toIndexedSeq, schema)
             .select(input_file_name().as("file"), keyExpr.as("__key")),
           c.mBits, c.k, folded = c.folded),
         allowMissingColumns = true)
@@ -343,9 +352,8 @@ object ZoneMaps {
     * NEGATIVES (wrong bit positions), so the parameters are part of the
     * artifact, never a caller convention.
     */
-  def buildBloomStats(spark: SparkSession, dataDir: String, keyCol: String,
+  def buildBloomStats(src: DataFrame, keyCol: String,
       mBits: Long = AutoBits, k: Int = 3): DataFrame = {
-    val src = spark.read.parquet(dataDir)
     val m =
       if (mBits == AutoBits) autoBits(src.count(), src.inputFiles.length.toLong)
       else mBits

@@ -120,8 +120,8 @@ object IndexStream {
   def maintainMinhash(docs: DataFrame, id: String, text: String,
       shingleN: Int, k: Int, bands: Int, maxBucketSize: Int,
       livePath: String,
-      hasher: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.pipeline.Dedup.shingleHashes,
+      hasher: graft.functions.Vectors.ShingleHash =
+        graft.functions.Vectors.ShingleHash.XxHash64,
       checkpointLocation: Option[String] = None): StreamingQuery = {
     val spark = docs.sparkSession
     docs.writeStream

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.functions.Vectors
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -45,13 +47,12 @@ object StreamingNearDup {
     implicit val stateEnc = Encoders.kryo[(List[(Long, Seq[Long])], Long)]
     val banded = docs
       .select(col(id).cast("long").as("doc_id"), col(eventTime).as("ts"),
-        Dedup.shingles(col(text), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("ts"),
-        Dedup.minhashSignature(Dedup.shingleHashes(col("sh")), k).as("sig"))
+        Vectors.minhashShingles(Dedup.words(col(text)), shingleN, k,
+          ShingleHash.XxHash64).as("sig"))
+      .filter(col("sig").isNotNull)
       .withWatermark("ts", lateness)
       .select(col("doc_id"), col("ts"), col("sig"),
-        explode(Dedup.bandKeys(col("sig"), bands, rows)).as("bk"))
+        explode(Vectors.minhashBands(col("sig"), bands, rows)).as("bk"))
       .select(col("doc_id"), col("ts"), col("sig"),
         col("bk.band").as("band"), col("bk.bucket").as("bucket"))
       .as[BandedDoc]

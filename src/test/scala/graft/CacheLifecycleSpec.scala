@@ -203,11 +203,23 @@ class CacheLifecycleSpec extends SparkSpec {
     val before = persistedIds
     val first = rows(query("dedup_minhash_lsh"))
     assert(first.nonEmpty)
+    // the corpus fits the crossover budget: the pairs are a local frame
     val added = persistedIds -- before
-    assert(added.size == 1,
-      s"want only the pair pin, got ${added.size} new persisted RDDs")
+    assert(added.isEmpty,
+      s"want no pin on the local path, got ${added.size} new persisted RDDs")
     spark.catalog.clearCache()
     assert(rows(query("dedup_minhash_lsh")) == first)
+    // the distributed path keeps exactly the pair pin
+    val distDir = corpusCopy("cache-lifecycle-dist")
+    Tables.load(spark, distDir, "documents").count()
+    val beforeDist = persistedIds
+    val dist = Crossover.distributed(rows(
+      queries.AllQueries.modules.flatMap(_.qs)
+        .find(_.name == "dedup_minhash_lsh").get.fn(spark, distDir)))
+    val addedDist = persistedIds -- beforeDist
+    assert(addedDist.size == 1,
+      s"want only the pair pin, got ${addedDist.size} new persisted RDDs")
+    assert(dist == first)
   }
 
   test("dedup_ngram_jaccard adds no CacheManager entry") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 
@@ -128,8 +129,8 @@ class DedupSpec extends SparkSpec {
     // compare signatures directly (k=256 for tight variance) — routing
     // through LSH banding would make the assertion hostage to whether a
     // band holds, which is probabilistic by design
-    val sigs = withSh.select(col("doc_id"),
-        Dedup.minhashSignature(Dedup.shingleHashes(col("sh")), 256).as("sig"))
+    val sigs = Dedup.minhashSigsOf(docs, "doc_id", "text", 2, 256,
+        ShingleHash.XxHash64)
       .as[(Long, Seq[Long])].collect().toMap
     val est = sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }.toDouble / 256
     assert(math.abs(est - trueJac) < 0.2, s"est=$est true=$trueJac")
@@ -142,7 +143,8 @@ class DedupSpec extends SparkSpec {
       (3L, base.replace("river", "stream")),
       (4L, "zebra xylophone quartz vortex jigsaw blimp krypton wumpus")).toDF("doc_id", "text")
     val sig = docs.select(col("doc_id"),
-      Dedup.simhash(Dedup.shingleHashes(Dedup.shingles(col("text"), 2))).as("s"))
+      Dedup.simhash(MinhashReference.shingleHashes(Dedup.shingles(col("text"), 2),
+        ShingleHash.XxHash64)).as("s"))
     val m = sig.as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(m(a) ^ m(b))
     assert(ham(1L, 2L) == 0)
@@ -624,5 +626,136 @@ class DedupSpec extends SparkSpec {
         s"doc $id: engine reconstruction must equal the local replay")
       assert(sampled(id)._2 == spans.size.toLong)
     }
+  }
+
+  // the tokenizer's edges: empty, one word, leading / trailing / repeated
+  // whitespace, tabs and newlines, null, and non-ASCII capitals whose
+  // lower case Spark's own lower() decides
+  private val edgeTexts: Seq[String] = Seq("", "word", "  leading space here",
+    "trailing space here  ", "repeated   inner    whitespace a a a",
+    "tabs\tand\nnew\r\nlines\t\tend", null, "İSTANBUL İstanbul istanbul",
+    "ΣΊΣΥΦΟΣ σίσυφος ΣΊΣΥΦΟΣ ΟΔΟΣ",
+    "the quick brown fox jumps over the lazy dog near the river bank today")
+
+  test("fused MinHash kernels equal the unfused shingle, hash, signature " +
+      "and band chain for both hash choices") {
+    val texts = edgeTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // a LocalRelation evaluates interpreted, an RDD scan through codegen
+    val frames = Seq(texts.toDF("id", "t"),
+      spark.createDataFrame(spark.sparkContext.parallelize(texts, 2))
+        .toDF("id", "t"))
+    for (df <- frames; hash <- Seq(ShingleHash.XxHash64,
+        ShingleHash.Md5Portable); n <- Seq(1, 2, 3); k <- Seq(16, 64, 128)) {
+      val bands = k / 4
+      val got = df.select(col("id"), graft.functions.Vectors.minhashShingles(
+          Dedup.words(col("t")), n, k, hash).as("sig"))
+        .select(col("id"), col("sig"),
+          graft.functions.Vectors.minhashBands(col("sig"), bands, 4).as("b"))
+      val want = df.select(col("id"),
+          MinhashReference.signature(col("t"), n, k, hash).as("sig"))
+        .select(col("id"), col("sig"),
+          when(col("sig").isNotNull,
+            MinhashReference.bandKeys(col("sig"), bands, 4)).as("b"))
+      val (g, w) = (rows(got.orderBy("id")), rows(want.orderBy("id")))
+      assert(g == w, s"hash=$hash n=$n k=$k")
+      // only texts with fewer than n words have no signature
+      assert(g.count(_(1) == null) == texts.count { case (_, t) =>
+        t == null || t.toLowerCase.split("\\s+", -1).length < n },
+        s"hash=$hash n=$n k=$k")
+    }
+  }
+
+  test("portableShingleHashes keeps a null element null and equals the " +
+      "per-element md5 form") {
+    val df = Seq((1L, Seq("a b", null, "İ x")), (2L, null: Seq[String]),
+      (3L, Seq.empty[String])).toDF("id", "sh")
+    val got = df.select(col("id"), Dedup.portableShingleHashes(col("sh")))
+    val want = df.select(col("id"), transform(col("sh"), Dedup.portableHash(_)))
+    assert(rows(got.orderBy("id")) == rows(want.orderBy("id")))
+    assert(got.schema(1).dataType == want.schema(1).dataType)
+  }
+
+  // 60 docs: planted near-copies, and 12 byte-identical mirrors whose
+  // buckets (12 members) pass maxBucketSize = 10 and drop
+  private def lshFixture(ids: Seq[java.lang.Long] = (1L to 60L).map(Long.box)) = {
+    val rnd = new scala.util.Random(11)
+    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo",
+      "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima")
+    val texts = (0 until 60).map { i =>
+      if (i < 12) "same boilerplate words repeated across the mirror set"
+      else Vector.fill(14)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    }
+    val planted = texts.zipWithIndex.map { case (t, i) =>
+      if (i >= 12 && i % 4 == 0) texts(i + 1).replaceFirst("\\w+", "zulu")
+      else t
+    }
+    ids.zip(planted).toDF("doc_id", "text")
+  }
+
+  private def lsh(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.minhashLsh(docs, "doc_id", "text", shingleN = 2, k = 64,
+      bands = 16, minEstJaccard = 0.2, maxBucketSize = 10,
+      hasher = ShingleHash.Md5Portable)
+
+  private def pinned(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.graft.ColumnBridge.logicalRddIds(df).nonEmpty
+
+  test("minhashLsh: the driver-local pair build equals the distributed one") {
+    val docs = lshFixture()
+    val local = lsh(docs)
+    val dist = graft.operators.Crossover.distributed(lsh(docs))
+    assert(!pinned(local), "the fixture fits: the local path returns no pin")
+    assert(pinned(dist))
+    val (l, d) = (rows(local.orderBy("id1", "id2")),
+      rows(dist.orderBy("id1", "id2")))
+    assert(l == d)
+    assert(l.nonEmpty && l.forall(r => r(0).asInstanceOf[Long] > 12L),
+      "the mirror buckets exceed maxBucketSize and drop")
+    assert(local.schema.map(_.dataType) == dist.schema.map(_.dataType))
+    // an INT id keeps its type on the local path
+    val ints = lsh(docs.withColumn("doc_id", col("doc_id").cast("int")))
+    assert(!pinned(ints) && ints.schema("id1").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(rows(ints.orderBy("id1", "id2")).map(_.map(_.toString)) ==
+      l.map(_.map(_.toString)))
+    graft.operators.Pinning.unpin(local)
+    graft.operators.Pinning.unpin(dist)
+  }
+
+  test("minhashLsh declines the local path on a null id, a duplicate id and " +
+      "a candidate pair count over Crossover.GraphPairs") {
+    val withNull = lshFixture((1L to 59L).map(Long.box) :+ null)
+    val withDup = lshFixture((1L to 59L).map(Long.box) :+ Long.box(30L))
+    Seq(withNull, withDup).foreach { docs =>
+      val got = lsh(docs)
+      assert(pinned(got), "declined: the distributed path returns its pin")
+      assert(rows(got.orderBy("id1", "id2")) == rows(
+        graft.operators.Crossover.distributed(lsh(docs))
+          .orderBy("id1", "id2")))
+      graft.operators.Pinning.unpin(got)
+    }
+    // one band over 2,001 identical docs: C(2001, 2) = 2,001,000 pairs
+    val n = 2001L
+    assert(n * (n - 1) / 2 > graft.operators.Crossover.GraphPairs)
+    val mirrors = spark.range(n).select(col("id").as("doc_id"),
+      lit("one text").as("text"))
+    val big = Dedup.minhashLsh(mirrors, "doc_id", "text", shingleN = 1,
+      k = 4, bands = 1, minEstJaccard = 0.5, maxBucketSize = 5000)
+    assert(pinned(big), "over GraphPairs: the distributed path")
+    assert(big.count() == n * (n - 1) / 2)
+    graft.operators.Pinning.unpin(big)
+  }
+
+  test("job budget: cold dedup_minhash_lsh construction at sf0.001 runs " +
+      "at most the bounded take's 2 jobs and writes no shuffle") {
+    val dir = corpusCopy("minhash-budget")
+    Tables.load(spark, dir, "documents").count()
+    val q = queries.AllQueries.modules.flatMap(_.qs)
+      .find(_.name == "dedup_minhash_lsh").get
+    var result: org.apache.spark.sql.DataFrame = null
+    val trace = traceOf { result = q.fn(spark, dir) }
+    assert(trace.jobs.nonEmpty && trace.jobs.size <= 2, trace.toString)
+    assert(trace.shuffleWriteBytes == 0L, trace.toString)
+    assert(result.count() > 0)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.{IndexStore, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -96,16 +97,16 @@ class IndexStoreSpec extends SparkSpec {
     val path = live("mh")
     graft.pipeline.IndexStore.saveMinhash(base, "doc_id", "text",
       shingleN = 2, k = 32, bands = 8, maxBucketSize = 100,
-      livePath = path, hasher = graft.pipeline.Dedup.portableShingleHashes)
+      livePath = path, hasher = graft.functions.Vectors.ShingleHash.Md5Portable)
     val served = graft.pipeline.IndexStore.queryMinhash(spark, path, delta,
         "doc_id", "text", shingleN = 2, k = 32, bands = 8,
         minEstJaccard = 0.1,
-        hasher = graft.pipeline.Dedup.portableShingleHashes)
+        hasher = graft.functions.Vectors.ShingleHash.Md5Portable)
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     val inSession = graft.pipeline.Dedup.incrementalNearDup(base, delta,
         "doc_id", "text", shingleN = 2, k = 32, bands = 8,
         minEstJaccard = 0.1, maxBucketSize = 100,
-        hasher = graft.pipeline.Dedup.portableShingleHashes)
+        hasher = graft.functions.Vectors.ShingleHash.Md5Portable)
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     assert(served == inSession, "parquet round trip must be bit-exact")
     assert(served.exists(r => r(4) == true), "fixture must contain dups")
@@ -157,11 +158,11 @@ class IndexStoreSpec extends SparkSpec {
     def q(probe: org.apache.spark.sql.DataFrame, p: String) =
       IndexStore.queryMinhash(spark, p, probe, "doc_id", "text",
           shingleN = 2, k = 32, bands = 8, minEstJaccard = 0.3,
-          hasher = Dedup.portableShingleHashes)
+          hasher = ShingleHash.Md5Portable)
         .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     IndexStore.saveMinhash(base, "doc_id", "text", shingleN = 2, k = 32,
       bands = 8, maxBucketSize = 100, livePath = path,
-      hasher = Dedup.portableShingleHashes)
+      hasher = ShingleHash.Md5Portable)
     // a near-copy of an APPENDED doc: the frozen base must miss it
     val probe = Seq((200L,
       "freshly ingested unique content about spark optimizer rules"))
@@ -171,7 +172,7 @@ class IndexStoreSpec extends SparkSpec {
       "frozen base cannot know the not-yet-appended near-dup")
     IndexStore.appendMinhash(appended, "doc_id", "text", shingleN = 2,
       k = 32, bands = 8, maxBucketSize = 100, livePath = path,
-      hasher = Dedup.portableShingleHashes)
+      hasher = ShingleHash.Md5Portable)
     val afterAppend = q(probe, path)
     assert(afterAppend.head(4) == true &&
         afterAppend.head(2) == 100L,
@@ -180,7 +181,7 @@ class IndexStoreSpec extends SparkSpec {
     val rebuilt = live("mh_rebuild")
     IndexStore.saveMinhash(base.unionByName(appended), "doc_id", "text",
       shingleN = 2, k = 32, bands = 8, maxBucketSize = 100,
-      livePath = rebuilt, hasher = Dedup.portableShingleHashes)
+      livePath = rebuilt, hasher = ShingleHash.Md5Portable)
     assert(q(probe, path) == q(probe, rebuilt),
       "appended index must answer exactly like a fresh build")
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.{IndexStore, Similarity}
 import graft.streaming.IndexStream
 import org.apache.spark.sql.functions._
@@ -144,10 +145,10 @@ class IndexStreamSpec extends SparkSpec {
     def build(p: String): Unit =
       IndexStore.saveMinhash(base, "doc_id", "text", shingleN = 2, k = 32,
         bands = 8, maxBucketSize = 100, livePath = p,
-        hasher = Dedup.portableShingleHashes)
+        hasher = ShingleHash.Md5Portable)
     def serve(p: String) = IndexStore.queryMinhash(spark, p, probe,
         "doc_id", "text", shingleN = 2, k = 32, bands = 8,
-        minEstJaccard = 0.3, hasher = Dedup.portableShingleHashes)
+        minEstJaccard = 0.3, hasher = ShingleHash.Md5Portable)
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     def tmp(t: String) = tempDir(s"graft-$t").toString + "/mh"
 
@@ -158,7 +159,7 @@ class IndexStreamSpec extends SparkSpec {
     val q = IndexStream.maintainMinhash(
       stream.toDS().toDF("doc_id", "text"), "doc_id", "text",
       shingleN = 2, k = 32, bands = 8, maxBucketSize = 100, liveS,
-      hasher = Dedup.portableShingleHashes)
+      hasher = ShingleHash.Md5Portable)
     try {
       chunks.foreach { c =>
         stream.addData(c.map(i => (i,
@@ -171,15 +172,15 @@ class IndexStreamSpec extends SparkSpec {
     val liveF = tmp("mhf"); build(liveF)
     chunks.foreach(c => IndexStore.appendMinhash(docsOf(c), "doc_id",
       "text", shingleN = 2, k = 32, bands = 8, maxBucketSize = 100,
-      livePath = liveF, hasher = Dedup.portableShingleHashes))
+      livePath = liveF, hasher = ShingleHash.Md5Portable))
     val liveO = tmp("mho"); build(liveO)
     IndexStore.appendMinhash(docsOf(deltaIds), "doc_id", "text",
       shingleN = 2, k = 32, bands = 8, maxBucketSize = 100,
-      livePath = liveO, hasher = Dedup.portableShingleHashes)
+      livePath = liveO, hasher = ShingleHash.Md5Portable)
     val liveR = tmp("mhr")
     IndexStore.saveMinhash(base.unionByName(docsOf(deltaIds)), "doc_id",
       "text", shingleN = 2, k = 32, bands = 8, maxBucketSize = 100,
-      livePath = liveR, hasher = Dedup.portableShingleHashes)
+      livePath = liveR, hasher = ShingleHash.Md5Portable)
 
     val streamed = serve(liveS)
     assert(streamed == serve(liveF), "stream must equal the batch fold")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Vectors.ShingleHash
 import graft.pipeline.{Dedup, IndexStore, Similarity}
 import graft.streaming.StreamDedup
 import org.apache.spark.sql.DataFrame
@@ -70,7 +71,7 @@ class IngestChainSpec extends SparkSpec {
       .toString + "/mh"
     IndexStore.saveMinhash(baseDocs, "doc_id", "text",
       shingleN = 2, k = 64, bands = 16, maxBucketSize = 1000,
-      livePath = live, hasher = Dedup.portableShingleHashes)
+      livePath = live, hasher = ShingleHash.Md5Portable)
 
     // ---- batch path (the ingest_e2e shape) ----
     val delta = deltaDocs
@@ -81,7 +82,7 @@ class IngestChainSpec extends SparkSpec {
     val verdicts = IndexStore.queryMinhash(spark, live,
       delta.join(surv.select("doc_id"), Seq("doc_id")),
       "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-      minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+      minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
     val admittedBatch = verdicts.filter(!col("is_dup"))
       .select(col("doc_id")).join(surv, Seq("doc_id"))
     val batchOut = annOver(admittedBatch)
@@ -120,7 +121,7 @@ class IngestChainSpec extends SparkSpec {
             (id, rowsById(id)) }.toDF("doc_id", "text")
           val v = IndexStore.queryMinhash(spark, live, freshDf,
             "doc_id", "text", shingleN = 2, k = 64, bands = 16,
-            minEstJaccard = 0.1, hasher = Dedup.portableShingleHashes)
+            minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
           v.filter(!col("is_dup")).select("doc_id").as[Long].collect()
             .foreach(admitted(_) = ())
         }

@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   *    builds as DIRECT operator calls (no session memo), so both timed
   *    runs pay the full build — the honest build-cost number for ops
   *    whose SparkEntry queries memoize the seed/graph per session
+  *  - `minhash_crossover_<n>` → `Dedup.minhashLsh`'s local and
+  *    distributed paths on n synthetic documents, with the collected
+  *    signature rows' retained heap: the sizing of
+  *    `Crossover.MinhashCells`
   *
   * Timing discipline (inherits Bench.scala's guard, r11 VERDICT #3): every
   * probe runs TWICE with a System.gc() between; the reported `sec` is the
@@ -136,7 +140,7 @@ object ScaleProbeOps {
       val docs = Tables.load(spark, sfDir, "documents")
       val sigs = graft.operators.Pinning.pin(
         graft.pipeline.Dedup.minhashSigsOf(docs, "doc_id", "text", 2, 64,
-          graft.pipeline.Dedup.portableShingleHashes))
+          graft.functions.Vectors.ShingleHash.Md5Portable))
       val banded = graft.pipeline.Dedup.minhashBandedOf(sigs, 16, 4)
       val sizes = banded.groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("n"))
@@ -152,7 +156,7 @@ object ScaleProbeOps {
         .select(col("a.__id"), col("b.__id")).distinct().count()
       val pairs = graft.pipeline.Dedup.minhashLsh(docs, "doc_id", "text",
         shingleN = 2, k = 64, bands = 16, minEstJaccard = 0.1,
-        hasher = graft.pipeline.Dedup.portableShingleHashes)
+        hasher = graft.functions.Vectors.ShingleHash.Md5Portable)
       val result = pairs.count()
       graft.operators.Pinning.unpin(pairs)
       graft.operators.Pinning.unpin(sigs)
@@ -212,9 +216,9 @@ object ScaleProbeOps {
         .repartitionByRange(nFiles, col("n_chars"), col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/data")
       graft.sources.ZoneMaps.saveStats(graft.sources.ZoneMaps.buildStats(
-        spark, s"$base/data", Seq("n_chars")), s"$base/stats")
+        spark.read.parquet(s"$base/data"), Seq("n_chars")), s"$base/stats")
       graft.sources.ZoneMaps.saveStats(graft.sources.ZoneMaps
-        .buildBloomStats(spark, s"$base/data", "doc_id"), s"$base/bloom")
+        .buildBloomStats(spark.read.parquet(s"$base/data"), "doc_id"), s"$base/bloom")
       s""""files":$nFiles,""" + decisionJson(base,
         Seq(graft.sources.ZoneMaps.ColRange("n_chars", 150, 300)),
         Seq("7", "123", "401"))
@@ -248,6 +252,80 @@ object ScaleProbeOps {
         Seq("7", (nFiles * rowsPerFile / 2).toString,
           (nFiles * rowsPerFile - 1).toString))
     }
+    // MinHash crossover sizing: n synthetic documents of 50 words from a
+    // 5,000-word vocabulary, every 10th a near copy of the next one (its
+    // first word differs), pinned in `cpus` partitions like a Tables.load
+    // cache; dedup_minhash_lsh's parameters. The local path is called
+    // with an unbounded budget so it runs at every n, the distributed
+    // path under Crossover.distributed. Each path: min of 2 post-GC runs,
+    // plus the peak heap in use during the run over the post-GC baseline
+    // (sampled every 2 ms, so it includes garbage not yet collected).
+    def minhashCrossover(n: Long): String = {
+      import graft.pipeline.Dedup
+      import graft.functions.Vectors.ShingleHash
+      val src = when(col("id") % 10 === 0, col("id") + 1).otherwise(col("id"))
+      val docs = graft.operators.Pinning.pin(spark.range(n)
+        .repartition(cpus.toInt, col("id"))
+        .select(col("id").as("doc_id"), concat_ws(" ", transform(
+          sequence(lit(0), lit(49)), i => concat(lit("w"), pmod(xxhash64(
+            when(i === 0, col("id")).otherwise(src), i), lit(5000L))
+            .cast("string")))).as("text")))
+      val (k, bands) = (64, 16)
+      def local() = {
+        val sigs = Dedup.minhashSigsOf(docs, "doc_id", "text", 2, k,
+          ShingleHash.Md5Portable)
+        Dedup.minhashPairsLocal(sigs, org.apache.spark.sql.types.LongType,
+          k, bands, k / bands, 0.1, 1000, Long.MaxValue - 1).get.count()
+      }
+      def distributed() = graft.operators.Crossover.distributed {
+        val r = Dedup.minhashLsh(docs, "doc_id", "text", shingleN = 2, k = k,
+          bands = bands, minEstJaccard = 0.1, hasher = ShingleHash.Md5Portable)
+        val c = r.count()
+        graft.operators.Pinning.unpin(r)
+        c
+      }
+      def run(fn: () => Long): (Long, Double, Long) = {
+        val rt = Runtime.getRuntime
+        System.gc()
+        val base = rt.totalMemory - rt.freeMemory
+        @volatile var peak = base
+        @volatile var on = true
+        val sampler = new Thread(() => while (on) {
+          peak = math.max(peak, rt.totalMemory - rt.freeMemory)
+          Thread.sleep(2)
+        })
+        sampler.setDaemon(true)
+        sampler.start()
+        val t0 = System.nanoTime()
+        val c = fn()
+        val sec = (System.nanoTime() - t0) / 1e9
+        on = false
+        sampler.join()
+        (c, sec, (peak - base) >> 20)
+      }
+      def json(tag: String, fn: () => Long): String = {
+        val (c, s1, h1) = run(fn)
+        val (_, s2, h2) = run(fn)
+        f""""${tag}_pairs":$c%d,"${tag}_sec":${math.min(s1, s2)}%.3f,"${tag}_sec1":$s1%.3f,"${tag}_sec2":$s2%.3f,"${tag}_peak_heap_mb":${math.max(h1, h2)}%d"""
+      }
+      // what the local path holds on the driver: the collected boxed Rows
+      val rowsMb = {
+        val rt = Runtime.getRuntime
+        System.gc()
+        val base = rt.totalMemory - rt.freeMemory
+        val got = graft.operators.Crossover.take(Dedup.minhashSigsOf(docs,
+          "doc_id", "text", 2, k, ShingleHash.Md5Portable),
+          Long.MaxValue - 1, "__id").get
+        System.gc()
+        val held = rt.totalMemory - rt.freeMemory - base
+        f"${held / 1048576.0}%.1f,\"row_bytes\":${held / got.length}"
+      }
+      val out = s""""n":$n,"cells":${n * k},"rows_mb":$rowsMb,""" +
+        json("local", () => local()) + "," +
+        json("distributed", () => distributed())
+      graft.operators.Pinning.unpin(docs)
+      out
+    }
     names.foreach { name =>
       if (name.startsWith("prune_decision_real_")) {
         val n = name.stripPrefix("prune_decision_real_").toInt
@@ -255,6 +333,9 @@ object ScaleProbeOps {
       } else if (name.startsWith("prune_decision_synth_")) {
         val n = name.stripPrefix("prune_decision_synth_").toLong
         println(s"""{"op":"prune_decision_synth",${pruneDecisionSynth(n)},"sf":"$sfDir"}""")
+      } else if (name.startsWith("minhash_crossover_")) {
+        val n = name.stripPrefix("minhash_crossover_").toLong
+        println(s"""{"op":"minhash_crossover",${minhashCrossover(n)},"mode":"min2-post-gc","sf":"$sfDir"}""")
       } else if (name.startsWith("explain_")) {
         // plan-stability probe (r13 "what's wrong" #1): md5 of the
         // FINAL plan string for a SparkEntry query, so two separate

@@ -103,7 +103,7 @@ class SkippingRegistrySpec extends SparkSpec {
       SkippingRegistry.bloomLivePath(dir))
     val m = appended.select("m_bits").head().getLong(0)
     val k = appended.select("k").head().getInt(0)
-    val rebuilt = ZoneMaps.buildBloomStats(spark, dir, "id", m, k)
+    val rebuilt = ZoneMaps.buildBloomStats(spark.read.parquet(dir), "id", m, k)
     assert(appended.orderBy("file", "word_idx").collect().toSeq ==
       rebuilt.orderBy("file", "word_idx").collect().toSeq,
       "bloom append must equal the full rebuild row-for-row")

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,16 +32,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * job budget of a call. Under AQE a multi-stage query's jobs are
     * named after the AQE thread, not the call site: count them.
     */
-  def jobsOf(body: => Any): Seq[String] = {
+  def jobsOf(body: => Any): Seq[String] = traceOf(body).jobs
+
+  /** What `body` ran: its jobs' result-stage names, in order, and the
+    * shuffle bytes its tasks wrote.
+    */
+  case class JobTrace(jobs: Seq[String], shuffleWriteBytes: Long)
+
+  def traceOf(body: => Any): JobTrace = {
     val sc = spark.sparkContext
     val group = s"spark-spec-${java.util.UUID.randomUUID}"
     val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add((e.properties.getProperty("spark.job.description"),
-            e.stageInfos.maxBy(_.stageId).name))
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          val description = e.properties.getProperty("spark.job.description")
+          if (description != "sentinel") e.stageIds.foreach(stages.add(_))
+          seen.add((description, e.stageInfos.maxBy(_.stageId).name))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     sc.addSparkListener(listener)
     try {
@@ -55,7 +69,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val t0 = System.nanoTime()
       while (!done && System.nanoTime() - t0 < 60e9) Thread.sleep(20)
       assert(done, "listener never saw the sentinel")
-      seen.asScala.toSeq.takeWhile(_._1 != "sentinel").map(_._2)
+      JobTrace(seen.asScala.toSeq.takeWhile(_._1 != "sentinel").map(_._2),
+        written.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -166,14 +166,14 @@ class ZoneMapsSpec extends SparkSpec {
       .repartitionByRange(4, col("v")).write.parquet(dir)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")), statsPath)
     // new files land (append); refresh incrementally
     (100L until 150L).map(i => (i, i * 2, "b")).toDF("id", "v", "tag")
       .coalesce(2).write.mode("append").parquet(dir)
     ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v"))
     val appended = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
-    val rebuilt = ZoneMaps.buildStats(spark, dir, Seq("v"))
+    val rebuilt = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v"))
       .orderBy("file").collect().toSeq
     assert(appended == rebuilt,
       "incremental append must equal the full rebuild row-for-row")
@@ -193,7 +193,7 @@ class ZoneMapsSpec extends SparkSpec {
       .toString + "/stats"
     // simulate an artifact published by an OLDER statsAggs: no nulls_
     // columns, raw-cased string zones under min_/max_ names
-    val old = ZoneMaps.buildStats(spark, dir, Seq("v", "tag"))
+    val old = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v", "tag"))
       .drop("nulls_v", "nulls_tag")
       .withColumnRenamed("min_uc_tag", "min_tag")
       .withColumnRenamed("max_uc_tag", "max_tag")
@@ -207,7 +207,7 @@ class ZoneMapsSpec extends SparkSpec {
     ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v", "tag"))
     val migrated = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
-    val rebuilt = ZoneMaps.buildStats(spark, dir, Seq("v", "tag"))
+    val rebuilt = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v", "tag"))
       .orderBy("file").collect().toSeq
     assert(migrated == rebuilt,
       "schema-drift refresh must equal the full rebuild row-for-row")
@@ -231,7 +231,7 @@ class ZoneMapsSpec extends SparkSpec {
       .repartitionByRange(4, col("v")).write.parquet(dir)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")), statsPath)
     // the appendFiles crash window: data committed, refresh never ran
     (100L until 150L).map(i => (i, i * 2, "b")).toDF("id", "v", "tag")
       .coalesce(2).write.mode("append").parquet(dir)
@@ -336,17 +336,37 @@ class ZoneMapsSpec extends SparkSpec {
     Seq((500L, 7L, "t500")).toDF("id", "v", "tag")
       .write.mode("append").parquet(dir)
     val jobs = jobsOf(SkippingRegistry.refresh(spark, dir))
-    // one listing read in refresh; per artifact, one read of its
-    // published version and one of the fresh file — a listing per
-    // artifact would make it 6
+    // one listing read in refresh, whose schema serves both artifacts'
+    // reads of the fresh file; per artifact, one read of its published
+    // version — a listing per artifact would make it 4, a schema
+    // inference per fresh-file read 5
     assert(jobs.count(_.startsWith("parquet at SkippingRegistry")) == 1,
       s"one listing: $jobs")
-    assert(jobs.count(_.startsWith("parquet at")) == 5,
-      s"the listing plus two reads per artifact: $jobs")
+    assert(jobs.count(_.startsWith("parquet at")) == 3,
+      s"the listing plus one version read per artifact: $jobs")
     val (kept, report) = pruneAny(lay, Seq(500L))
     assert(report.filesTotal == listing(dir).size && report.filesKept >= 1,
       report.toString)
     assert(kept.filter(col("id") === 500L).count() == 1)
+  }
+
+  test("job budget: register reads the data directory once for both " +
+      "artifacts") {
+    val dir = tempDir("graft-zm").toString + "/data"
+    (0L until 200L).map(i => (i, i % 50, s"t$i")).toDF("id", "v", "tag")
+      .repartitionByRange(4, col("v"), col("id")).write.parquet(dir)
+    var lay: ZoneMaps.Layout = null
+    val jobs = jobsOf { lay = register(dir, Seq("v"), Some("id")) }
+    // the one schema inference is register's own read; the zone and
+    // Bloom builds infer nothing of their own
+    assert(jobs.count(_.startsWith("parquet at")) == 1,
+      s"one read of the data directory: $jobs")
+    assert(jobs.count(_.startsWith("parquet at SkippingRegistry")) == 1,
+      jobs.toString)
+    val (kept, report) = pruneAny(lay, Seq(7L))
+    assert(report.filesKept >= 1 && report.filesKept < report.filesTotal,
+      report.toString)
+    assert(kept.filter(col("id") === 7L).count() == 1)
   }
 
   test("bloom constants are read once per published version: after an " +
@@ -384,7 +404,7 @@ class ZoneMapsSpec extends SparkSpec {
     val dir = layout(rows)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")), statsPath)
     val lay = ZoneMaps.Layout(dir, statsLive = Some(statsPath))
     val spec = QuerySpec(provenance = Seq(
       FieldClause("v", Predicates.Ge, "200", isText = false),
@@ -439,7 +459,7 @@ class ZoneMapsSpec extends SparkSpec {
     val dir = layout(rows)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")), statsPath)
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")), statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
       skipping = Some(ZoneMaps.Layout(dir, statsLive = Some(statsPath))))
     // the grouped clause participates in the OR (compileFamilies folds
@@ -480,7 +500,7 @@ class ZoneMapsSpec extends SparkSpec {
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     ZoneMaps.saveStats(
-      ZoneMaps.buildStats(spark, dir, Seq("v", "tag", "alt")), statsPath)
+      ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v", "tag", "alt")), statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
       skipping = Some(ZoneMaps.Layout(dir, statsLive = Some(statsPath))))
     val spec = QuerySpec(
@@ -524,9 +544,9 @@ class ZoneMapsSpec extends SparkSpec {
     val rows = (0L until 400L).map(i => (i, (i * 37) % 400, s"t${i % 3}"))
     val dir = layout(rows)
     val base = tempDir("graft-zm").toString
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")),
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")),
       s"$base/stats")
-    ZoneMaps.saveStats(ZoneMaps.buildBloomStats(spark, dir, "id"),
+    ZoneMaps.saveStats(ZoneMaps.buildBloomStats(spark.read.parquet(dir), "id"),
       s"$base/bloom")
     val lay = ZoneMaps.Layout(dir, statsLive = Some(s"$base/stats"),
       bloomLive = Some(s"$base/bloom"), bloomCol = Some("id"))
@@ -571,7 +591,7 @@ class ZoneMapsSpec extends SparkSpec {
       .toDF("id", "name", "v").coalesce(1).write.mode("append").parquet(dir)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("name")),
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("name")),
       statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
       skipping = Some(ZoneMaps.Layout(dir, statsLive = Some(statsPath))))
@@ -599,7 +619,7 @@ class ZoneMapsSpec extends SparkSpec {
       .toDF("id", "name").coalesce(1).write.mode("append").parquet(dir)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("name")),
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("name")),
       statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
       skipping = Some(ZoneMaps.Layout(dir, statsLive = Some(statsPath))))
@@ -631,7 +651,7 @@ class ZoneMapsSpec extends SparkSpec {
       .write.parquet(dir)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("day")),
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("day")),
       statsPath)
     val cat = Catalog(entities = spark.read.parquet(dir), entityId = "id",
       skipping = Some(ZoneMaps.Layout(dir, statsLive = Some(statsPath))))
@@ -655,7 +675,7 @@ class ZoneMapsSpec extends SparkSpec {
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
     (1 to 4).foreach { _ =>
-      ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v")),
+      ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v")),
         statsPath)
       assert(ZoneMaps.loadArtifact(spark, statsPath).nonEmpty)
     }
@@ -669,7 +689,7 @@ class ZoneMapsSpec extends SparkSpec {
     val dir = layout(rows, parts = 4)
     val statsPath = tempDir("graft-zm")
       .toString + "/stats"
-    val built = ZoneMaps.buildStats(spark, dir, Seq("v"))
+    val built = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v"))
     ZoneMaps.saveStats(built, statsPath)
     val loaded = ZoneMaps.loadStats(spark, statsPath)
     assert(loaded.orderBy("file").collect().toSeq ==
@@ -677,7 +697,7 @@ class ZoneMapsSpec extends SparkSpec {
       "stats must round-trip parquet exactly")
     // refresh after a layout change publishes new stats; old version
     // survives under the N-1 pointer convention
-    ZoneMaps.saveStats(ZoneMaps.buildStats(spark, dir, Seq("v", "id")),
+    ZoneMaps.saveStats(ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v", "id")),
       statsPath)
     // (file, rows) + per col: min, max, nulls
     assert(ZoneMaps.loadStats(spark, statsPath).columns.length == 8)
