@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import graft.functions.Vectors
 import graft.functions.Vectors.ShingleHash
 import graft.operators.Crossover
@@ -134,23 +136,26 @@ object Dedup {
       val docs = got.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
         .sortBy(_._1)
       val (ids, sig) = (docs.map(_._1), docs.map(_._2))
-      val buckets = docs.indices
-        .flatMap(i => (0 until bands).map(b =>
-          (b, Vectors.bandBucket(sig(i), b, rows)) -> i))
-        .groupMap(_._1)(_._2).values
-        .filter(m => m.size >= 2 && m.size <= maxBucketSize)
+      val byKey = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Int]]
+      for (i <- docs.indices; b <- 0 until bands)
+        byKey.getOrElseUpdate((b, Vectors.bandBucket(sig(i), b, rows)),
+          mutable.ArrayBuffer.empty[Int]) += i
+      val buckets = byKey.valuesIterator
+        .filter(m => m.size >= 2 && m.size <= maxBucketSize).toSeq
       val work = buckets.iterator.map(m => m.size.toLong * (m.size - 1) / 2).sum
       val repeated = ids.indices.exists(i => i > 0 && ids(i - 1) == ids(i))
       if (repeated || !Crossover.fits(work, Crossover.GraphPairs)) None
       else {
         // members are in index order; a pair (i, j) packs as i·n + j
         val n = docs.length.toLong
-        val pairs = buckets.iterator.flatMap(m =>
-          m.indices.iterator.flatMap(x =>
-            (x + 1 until m.size).iterator.map(y => m(x) * n + m(y)))).toSet
+        val pairs = mutable.HashSet.empty[Long]
+        for (m <- buckets; x <- m.indices; y <- x + 1 until m.size)
+          pairs += m(x) * n + m(y)
         val out = pairs.iterator.flatMap { p =>
           val (i, j) = ((p / n).toInt, (p % n).toInt)
-          val agree = (0 until k).count(c => sig(i)(c) == sig(j)(c))
+          var agree = 0
+          var c = 0
+          while (c < k) { if (sig(i)(c) == sig(j)(c)) agree += 1; c += 1 }
           val est = agree.toDouble / k
           if (est >= minEstJaccard) Some(Row(ids(i), ids(j), est)) else None
         }.toSeq

@@ -133,15 +133,13 @@ object SkippingRegistry {
     readManifest(spark, dataDir).foreach { reg =>
       // one listing read serves both artifacts' delta anti-joins, and its
       // schema their reads of the fresh files
-      val read = spark.read.parquet(dataDir)
-      val files = read.inputFiles.toSeq
+      val listing = spark.read.parquet(dataDir)
       reg.bloomCol.foreach(c =>
-        ZoneMaps.appendBloomStats(spark, dataDir, files, bloomLivePath(dataDir),
-          c, marker = marker.filter(_ => reg.zoneCols.isEmpty),
-          schema = Some(read.schema)))
+        ZoneMaps.appendBloomStats(listing, bloomLivePath(dataDir), c,
+          marker = marker.filter(_ => reg.zoneCols.isEmpty)))
       if (reg.zoneCols.nonEmpty)
-        ZoneMaps.appendStats(spark, dataDir, files, statsLivePath(dataDir),
-          reg.zoneCols, marker = marker, schema = Some(read.schema))
+        ZoneMaps.appendStats(listing, statsLivePath(dataDir), reg.zoneCols,
+          marker = marker)
     }
 
   /** The last stream batch id folded into the registered artifacts

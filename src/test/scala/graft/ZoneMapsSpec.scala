@@ -170,7 +170,7 @@ class ZoneMapsSpec extends SparkSpec {
     // new files land (append); refresh incrementally
     (100L until 150L).map(i => (i, i * 2, "b")).toDF("id", "v", "tag")
       .coalesce(2).write.mode("append").parquet(dir)
-    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v"))
+    ZoneMaps.appendStats(spark.read.parquet(dir), statsPath, Seq("v"))
     val appended = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
     val rebuilt = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v"))
@@ -178,7 +178,7 @@ class ZoneMapsSpec extends SparkSpec {
     assert(appended == rebuilt,
       "incremental append must equal the full rebuild row-for-row")
     // idempotent: nothing new -> same stats republished
-    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v"))
+    ZoneMaps.appendStats(spark.read.parquet(dir), statsPath, Seq("v"))
     assert(ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq == rebuilt)
   }
@@ -204,7 +204,7 @@ class ZoneMapsSpec extends SparkSpec {
     // a strict union would throw; a lenient one would publish rows whose
     // null min_uc_ zones read as all-null files and silently prune —
     // the drift detector must rebuild instead
-    ZoneMaps.appendStats(spark, dir, listing(dir), statsPath, Seq("v", "tag"))
+    ZoneMaps.appendStats(spark.read.parquet(dir), statsPath, Seq("v", "tag"))
     val migrated = ZoneMaps.loadStats(spark, statsPath)
       .orderBy("file").collect().toSeq
     val rebuilt = ZoneMaps.buildStats(spark.read.parquet(dir), Seq("v", "tag"))
